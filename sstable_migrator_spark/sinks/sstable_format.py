@@ -72,18 +72,15 @@ published format documentation and the Apache Cassandra source tree
   default zlib framing IS python zlib — no third-party codec needed.
 - ``TOC.txt``   — the component list, itself included.
 
-``Summary.db`` is deliberately not written: Cassandra regenerates a
-missing index summary from Index.db on open (``SSTableReader``'s
-buildSummary path), and its serialization is raw off-heap memory whose
-layout is platform/native-order dependent — the one component with no
-stable public byte contract.
-
-The matching ``read_sstable`` is a fully independent parser: it learns
-the column types from the Statistics.db HEADER component (not from the
-writer's in-memory schema), walks Data.db partition by partition,
-cross-checks every Index.db offset against the real partition starts,
-verifies the digest, and evaluates bloom membership — the same
-verification recipe used for the mmdb and 7z binary readers.
+The matching ``SSTableReader`` is a fully independent parser and the
+only code that reads this layout: it learns the column types from the
+Statistics.db HEADER component (not from the writer's in-memory
+schema), walks Data.db partition by partition, cross-checks every
+Index.db offset against the real partition starts and Summary.db
+against Index.db, verifies the digest and CRCs, and evaluates bloom
+membership — the same verification recipe used for the mmdb and 7z
+binary readers. ``read_sstable``, ``point_lookup`` and compaction are
+thin callers of it.
 
 Scale shape: one sstable per Spark partition (see
 ``sinks.write_sstables``), rows arrive ring-routed from
@@ -103,11 +100,13 @@ memory still serializes on one task.
 
 from __future__ import annotations
 
+import bisect
 import io
 import os
 import struct
 import zlib
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from sstable_migrator_spark.functions.cassandra import (
     cassandra_token_bytes,
@@ -116,7 +115,9 @@ from sstable_migrator_spark.functions.cassandra import (
 
 __all__ = [
     "CqlTable",
+    "SSTableReader",
     "SSTableWriter",
+    "point_lookup",
     "read_sstable",
     "encode_unsigned_vint",
     "decode_unsigned_vint",
@@ -1601,221 +1602,6 @@ def _split_key(key: bytes, key_type: str) -> list[bytes]:
     return comps
 
 
-def _parse_partition(
-    data: bytes, off: int, clus_types: list, reg: list, min_ts: int
-) -> tuple[dict, int]:
-    """Parse ONE partition (u16 key + DeletionTime + unfiltereds until
-    END_OF_PARTITION) starting at ``off``; returns (partition, next
-    offset). Truncated input raises IndexError/struct.error — callers
-    doing windowed reads catch and widen."""
-    (klen,) = struct.unpack_from(">H", data, off)
-    start = off
-    off += 2
-    key = data[off : off + klen]
-    off += klen
-    ldt, marked = struct.unpack_from(">iq", data, off)
-    off += 12
-    rows = []
-    while True:
-        flags = data[off]
-        off += 1
-        if flags & END_OF_PARTITION:
-            break
-        if flags & (IS_MARKER | EXTENSION_FLAG | HAS_DELETION | HAS_TTL):
-            raise NotImplementedError(f"flags 0x{flags:02x}")
-        # clustering
-        clustering = []
-        ci = 0
-        while ci < len(clus_types):
-            batch = clus_types[ci : ci + 32]
-            header, off = decode_unsigned_vint(data, off)
-            for i, t in enumerate(batch):
-                if header & (1 << (i * 2 + 1)):
-                    clustering.append(None)
-                elif header & (1 << (i * 2)):
-                    clustering.append(t.deser(b"") if t.fixed_len is None else None)
-                else:
-                    raw, off = _read_value(t, data, off)
-                    clustering.append(t.deser(raw))
-            ci += 32
-        row_size, off = decode_unsigned_vint(data, off)
-        _prev_size, off = decode_unsigned_vint(data, off)
-        ts_delta = 0
-        if flags & HAS_TIMESTAMP:
-            ts_delta, off = decode_unsigned_vint(data, off)
-        present = list(range(len(reg)))
-        if not flags & HAS_ALL_COLUMNS:
-            bitmap, off = decode_unsigned_vint(data, off)
-            present = [i for i in range(len(reg)) if not bitmap & (1 << i)]
-        cells = {}
-        for i in present:
-            name, t = reg[i]
-            cflags = data[off]
-            off += 1
-            if not cflags & CELL_USE_ROW_TIMESTAMP:
-                _, off = decode_unsigned_vint(data, off)
-            if cflags & CELL_HAS_EMPTY_VALUE:
-                cells[name] = t.deser(b"") if t.fixed_len is None else None
-            elif cflags & CELL_IS_DELETED:
-                cells[name] = None
-            else:
-                raw, off = _read_value(t, data, off)
-                cells[name] = t.deser(raw)
-        rows.append(
-            {
-                "clustering": clustering,
-                "cells": cells,
-                "timestamp_us": min_ts + (ts_delta if flags & HAS_TIMESTAMP else 0),
-            }
-        )
-    partition = {
-        "key": key,
-        "token": cassandra_token_bytes(key),
-        "start": start,
-        "live": ldt == NO_DELETION_TIME and marked == LIVE_MARKED_FOR_DELETE,
-        "rows": rows,
-    }
-    return partition, off
-
-
-def read_sstable(directory: str, prefix: str | None = None, verify: bool = True) -> dict:
-    """Parse a BIG-format sstable written by SSTableWriter. Types come
-    from the Statistics.db HEADER component; Index.db positions are
-    cross-checked against the real partition starts; the digest is
-    recomputed; bloom membership is evaluated for every key. Returns
-    ``{stats, partitions: [{key, key_components, token, rows: [{clustering,
-    cells}]}], index_ok, digest_ok, bloom_all_present}``."""
-    if prefix is None:
-        tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
-        if len(tocs) != 1:
-            raise ValueError(f"expected one sstable in {directory}, found {tocs}")
-        prefix = tocs[0][: -len("-TOC.txt")]
-
-    def comp(name: str) -> bytes:
-        with open(os.path.join(directory, f"{prefix}-{name}"), "rb") as fh:
-            return fh.read()
-
-    def has(name: str) -> bool:
-        return os.path.exists(os.path.join(directory, f"{prefix}-{name}"))
-
-    stats = _parse_statistics(comp("Statistics.db"))
-    clus_types = [_marshal_to_type(t) for t in stats["clustering_types"]]
-    reg = [(n, _marshal_to_type(t)) for n, t in stats["regular_columns"]]
-    min_ts = stats["min_timestamp_us"]
-
-    raw_file = comp("Data.db")
-    compression_meta = None
-    if has("CompressionInfo.db"):
-        ci = comp("CompressionInfo.db")
-        (nlen,) = struct.unpack_from(">H", ci, 0)
-        cname = ci[2 : 2 + nlen].decode("utf-8")
-        o = 2 + nlen
-        (n_opts,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        for _ in range(n_opts):
-            for _ in range(2):  # key, value writeUTF pairs
-                (sl,) = struct.unpack_from(">H", ci, o)
-                o += 2 + sl
-        chunk_len, data_len = struct.unpack_from(">iq", ci, o)
-        o += 12
-        (n_chunks,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        offsets = [struct.unpack_from(">q", ci, o + i * 8)[0] for i in range(n_chunks)]
-        if cname != "DeflateCompressor":
-            raise NotImplementedError(f"compressor {cname}")
-        chunks = []
-        crc_ok_chunks = True
-        for i, start in enumerate(offsets):
-            end = offsets[i + 1] if i + 1 < n_chunks else len(raw_file)
-            blob, crc_bytes = raw_file[start : end - 4], raw_file[end - 4 : end]
-            crc_ok_chunks = crc_ok_chunks and (
-                struct.unpack(">I", crc_bytes)[0] == zlib.crc32(blob)
-            )
-            chunks.append(zlib.decompress(blob))
-        data = b"".join(chunks)
-        if len(data) != data_len:
-            raise ValueError(f"decompressed {len(data)} != declared {data_len}")
-        compression_meta = {
-            "compressor": cname,
-            "chunk_length": chunk_len,
-            "n_chunks": n_chunks,
-            "chunk_crcs_ok": crc_ok_chunks,
-        }
-    else:
-        data = raw_file
-    partitions = []
-    off = 0
-    while off < len(data):
-        part, off = _parse_partition(data, off, clus_types, reg, min_ts)
-        part["key_components"] = _split_key(part["key"], stats["key_type"])
-        partitions.append(part)
-
-    result = {
-        "stats": stats,
-        "partitions": partitions,
-        "prefix": prefix,
-        "compression": compression_meta,
-    }
-    if verify:
-        # Index.db positions must equal the real partition starts
-        idx = comp("Index.db")
-        entries = []
-        ioff = 0
-        while ioff < len(idx):
-            (n,) = struct.unpack_from(">H", idx, ioff)
-            ioff += 2
-            k = idx[ioff : ioff + n]
-            ioff += n
-            pos, ioff = decode_unsigned_vint(idx, ioff)
-            promoted, ioff = decode_unsigned_vint(idx, ioff)
-            entries.append((k, pos, promoted))
-        result["index_ok"] = [(p["key"], p["start"]) for p in partitions] == [
-            (k, pos) for k, pos, _ in entries
-        ]
-        # Summary.db, when present: every sampled entry must name the
-        # key at its sampling stride and point at its Index.db offset
-        if has("Summary.db") and partitions:
-            summ = _parse_summary(comp("Summary.db"))
-            ioffs = []
-            pos2 = 0
-            while pos2 < len(idx):
-                ioffs.append(pos2)
-                (n2,) = struct.unpack_from(">H", idx, pos2)
-                pos2 += 2 + n2
-                _p, pos2 = decode_unsigned_vint(idx, pos2)
-                _pr, pos2 = decode_unsigned_vint(idx, pos2)
-            stride = summ["min_index_interval"]
-            expect = [
-                (partitions[i]["key"], ioffs[i])
-                for i in range(0, len(partitions), stride)
-            ]
-            result["summary_ok"] = (
-                summ["entries"] == expect
-                and summ["first_key"] == partitions[0]["key"]
-                and summ["last_key"] == partitions[-1]["key"]
-            )
-        # digest covers the file as written (compressed bytes when
-        # compression is on)
-        result["digest_ok"] = comp("Digest.crc32").decode("ascii") == str(
-            zlib.crc32(raw_file)
-        )
-        bloom = _Bloom.deserialize(comp("Filter.db"))
-        result["bloom_all_present"] = all(
-            bloom.might_contain(p["key"]) for p in partitions
-        )
-        if compression_meta is not None:
-            result["crc_ok"] = compression_meta["chunk_crcs_ok"]
-        else:
-            crc = comp("CRC.db")
-            (chunk,) = struct.unpack_from(">i", crc, 0)
-            ok = True
-            for ci2, off2 in enumerate(range(0, max(len(data), 1), chunk)):
-                (want,) = struct.unpack_from(">I", crc, 4 + ci2 * 4)
-                ok = ok and want == zlib.crc32(data[off2 : off2 + chunk])
-            result["crc_ok"] = ok
-    return result
-
-
 def _key_component_types(key_type: str) -> list[_CqlType]:
     """Marshal types of the partition-key components from the
     Statistics.db key-type name (CompositeType(...) or a single type)."""
@@ -1825,210 +1611,342 @@ def _key_component_types(key_type: str) -> list[_CqlType]:
     return [_marshal_to_type(key_type)]
 
 
-def _index_entries(idx: bytes) -> list[tuple[bytes, int]]:
-    """All (key, Data.db position) pairs from Index.db, in file (token)
-    order."""
-    entries = []
-    off = 0
-    while off < len(idx):
-        (n,) = struct.unpack_from(">H", idx, off)
+def _parse_compression_info(blob: bytes) -> dict:
+    """CompressionInfo.db (``CompressionMetadata``): compressor name,
+    options (skipped), chunk length, logical data length, then the
+    on-disk offset of every chunk."""
+    (nlen,) = struct.unpack_from(">H", blob, 0)
+    cname = blob[2 : 2 + nlen].decode("utf-8")
+    if cname != "DeflateCompressor":
+        raise NotImplementedError(f"compressor {cname}")
+    o = 2 + nlen
+    (n_opts,) = struct.unpack_from(">i", blob, o)
+    o += 4
+    for _ in range(2 * n_opts):  # key, value writeUTF pairs
+        (sl,) = struct.unpack_from(">H", blob, o)
+        o += 2 + sl
+    chunk_len, data_len, n_chunks = struct.unpack_from(">iqi", blob, o)
+    return {
+        "compressor": cname,
+        "chunk_length": chunk_len,
+        "data_length": data_len,
+        "offsets": list(struct.unpack_from(f">{n_chunks}q", blob, o + 16)),
+    }
+
+
+class SSTableReader:
+    """One sstable, opened once — the only code that reads the on-disk
+    layout (Cassandra's open-once ``SSTableReader`` in miniature).
+    Opening resolves the prefix (the directory's only ``-TOC.txt`` when
+    none is given) and parses Statistics.db — column types come from
+    its HEADER component, not from the writer's in-memory schema — and
+    CompressionInfo.db; Filter.db and Index.db are parsed on first use.
+
+    - ``partitions()`` streams every partition in (token, key) file
+      order. It holds the (decompressed) Data.db bytes while iterating
+      but never more than one parsed partition, so peak Python-object
+      memory is one partition, not the range (parsed rows cost ~10-20x
+      their serialized bytes) — the shape compaction's heap merge
+      consumes.
+    - ``get(key_components)`` is the point read, Cassandra's read path
+      in miniature: bloom filter (a miss reads no Data.db bytes),
+      Index.db bisect on (token, key) DecoratedKey order hashing
+      O(log n) keys, then exactly the partition's bytes.
+    - ``verify(partitions)`` cross-checks a full parse against
+      Index.db, Summary.db, the digest, the CRCs and the bloom filter.
+    """
+
+    def __init__(self, directory: str, prefix: str | None = None):
+        if prefix is None:
+            tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
+            if len(tocs) != 1:
+                raise ValueError(f"expected one sstable in {directory}, found {tocs}")
+            prefix = tocs[0][: -len("-TOC.txt")]
+        self.directory = directory
+        self.prefix = prefix
+        self.stats = _parse_statistics(self._read("Statistics.db"))
+        self.key_types = _key_component_types(self.stats["key_type"])
+        self._clus = [_marshal_to_type(t) for t in self.stats["clustering_types"]]
+        self._reg = [(n, _marshal_to_type(t)) for n, t in self.stats["regular_columns"]]
+        self.compression = (
+            _parse_compression_info(self._read("CompressionInfo.db"))
+            if os.path.exists(self._path("CompressionInfo.db"))
+            else None
+        )
+
+    def _path(self, component: str) -> str:
+        return os.path.join(self.directory, f"{self.prefix}-{component}")
+
+    def _read(self, component: str, start: int = 0, length: int = -1) -> bytes:
+        with open(self._path(component), "rb") as fh:
+            fh.seek(start)
+            return fh.read(length)
+
+    @cached_property
+    def _bloom(self) -> _Bloom:
+        return _Bloom.deserialize(self._read("Filter.db"))
+
+    @cached_property
+    def _index(self) -> list[tuple[bytes, int, int]]:
+        """(key, Data.db position, Index.db offset) per partition, in
+        file order — the one Index.db walk."""
+        idx = self._read("Index.db")
+        entries = []
+        off = 0
+        while off < len(idx):
+            (n,) = struct.unpack_from(">H", idx, off)
+            key = idx[off + 2 : off + 2 + n]
+            pos, nxt = decode_unsigned_vint(idx, off + 2 + n)
+            _promoted, nxt = decode_unsigned_vint(idx, nxt)
+            entries.append((key, pos, off))
+            off = nxt
+        return entries
+
+    def _inflate(self, raw: bytes, first: int, last: int) -> bytes:
+        """Logical bytes of chunks [first, last). ``raw`` is Data.db from
+        chunk ``first``'s offset on; each chunk is its deflate bytes
+        followed by a 4-byte CRC32."""
+        offs = self.compression["offsets"]
+        bounds = [o - offs[first] for o in offs[first:last]] + [
+            offs[last] - offs[first] if last < len(offs) else len(raw)
+        ]
+        return b"".join(
+            zlib.decompress(raw[s : e - 4]) for s, e in zip(bounds, bounds[1:])
+        )
+
+    def _parse(self, data: bytes, off: int) -> tuple[dict, int]:
+        """Parse ONE partition (u16 key + DeletionTime + unfiltereds until
+        END_OF_PARTITION) starting at ``off``; returns (partition, next
+        offset). Input that ends mid-partition raises IndexError or
+        struct.error."""
+        clus_types, reg = self._clus, self._reg
+        min_ts = self.stats["min_timestamp_us"]
+        (klen,) = struct.unpack_from(">H", data, off)
+        start = off
         off += 2
-        k = idx[off : off + n]
-        off += n
-        pos, off = decode_unsigned_vint(idx, off)
-        _promoted, off = decode_unsigned_vint(idx, off)
-        entries.append((k, pos))
-    return entries
+        key = data[off : off + klen]
+        off += klen
+        ldt, marked = struct.unpack_from(">iq", data, off)
+        off += 12
+        rows = []
+        while True:
+            flags = data[off]
+            off += 1
+            if flags & END_OF_PARTITION:
+                break
+            if flags & (IS_MARKER | EXTENSION_FLAG | HAS_DELETION | HAS_TTL):
+                raise NotImplementedError(f"flags 0x{flags:02x}")
+            # clustering
+            clustering = []
+            ci = 0
+            while ci < len(clus_types):
+                batch = clus_types[ci : ci + 32]
+                header, off = decode_unsigned_vint(data, off)
+                for i, t in enumerate(batch):
+                    if header & (1 << (i * 2 + 1)):
+                        clustering.append(None)
+                    elif header & (1 << (i * 2)):
+                        clustering.append(t.deser(b"") if t.fixed_len is None else None)
+                    else:
+                        raw, off = _read_value(t, data, off)
+                        clustering.append(t.deser(raw))
+                ci += 32
+            row_size, off = decode_unsigned_vint(data, off)
+            _prev_size, off = decode_unsigned_vint(data, off)
+            ts_delta = 0
+            if flags & HAS_TIMESTAMP:
+                ts_delta, off = decode_unsigned_vint(data, off)
+            present = list(range(len(reg)))
+            if not flags & HAS_ALL_COLUMNS:
+                bitmap, off = decode_unsigned_vint(data, off)
+                present = [i for i in range(len(reg)) if not bitmap & (1 << i)]
+            cells = {}
+            for i in present:
+                name, t = reg[i]
+                cflags = data[off]
+                off += 1
+                if not cflags & CELL_USE_ROW_TIMESTAMP:
+                    _, off = decode_unsigned_vint(data, off)
+                if cflags & CELL_HAS_EMPTY_VALUE:
+                    cells[name] = t.deser(b"") if t.fixed_len is None else None
+                elif cflags & CELL_IS_DELETED:
+                    cells[name] = None
+                else:
+                    raw, off = _read_value(t, data, off)
+                    cells[name] = t.deser(raw)
+            rows.append(
+                {
+                    "clustering": clustering,
+                    "cells": cells,
+                    "timestamp_us": min_ts + (ts_delta if flags & HAS_TIMESTAMP else 0),
+                }
+            )
+        partition = {
+            "key": key,
+            "key_components": _split_key(key, self.stats["key_type"]),
+            "token": cassandra_token_bytes(key),
+            "start": start,
+            "live": ldt == NO_DELETION_TIME and marked == LIVE_MARKED_FOR_DELETE,
+            "rows": rows,
+        }
+        return partition, off
+
+    def partitions(self):
+        """Every partition, in (token, key) file order, one at a time."""
+        data = self._read("Data.db")
+        if self.compression is not None:
+            data = self._inflate(data, 0, len(self.compression["offsets"]))
+            if len(data) != self.compression["data_length"]:
+                raise ValueError(
+                    f"decompressed {len(data)} != declared "
+                    f"{self.compression['data_length']}"
+                )
+        off = 0
+        while off < len(data):
+            part, off = self._parse(data, off)
+            yield part
+
+    def get(self, key_components: list) -> dict | None:
+        """The partition with these key values (python values matching
+        the key column types, e.g. ``["example.com", 4]`` for a (text,
+        int) composite key), or None when absent. Reads exactly
+        [position, next entry's position) of Data.db — up to the logical
+        data length for the last partition — and, when compressed,
+        inflates only the chunks spanning it. A partition that does not
+        parse to exactly that window raises ValueError naming the
+        sstable."""
+        if len(key_components) != len(self.key_types):
+            raise ValueError(
+                f"{len(key_components)} key components for "
+                f"{len(self.key_types)}-part key"
+            )
+        key = serialize_key(
+            *(t.ser(v) for t, v in zip(self.key_types, key_components))
+        )
+        if not self._bloom.might_contain(key):
+            return None
+        entries = self._index
+        i = bisect.bisect_left(
+            entries,
+            (cassandra_token_bytes(key), key),
+            key=lambda e: (cassandra_token_bytes(e[0]), e[0]),
+        )
+        if i == len(entries) or entries[i][0] != key:
+            return None  # bloom false positive
+        if self.compression is not None:
+            data_len = self.compression["data_length"]
+        else:
+            data_len = os.path.getsize(self._path("Data.db"))
+        pos = entries[i][1]
+        stop = entries[i + 1][1] if i + 1 < len(entries) else data_len
+        if not 0 <= pos < stop <= data_len:
+            raise ValueError(
+                f"{self._path('Index.db')}: entry {i} spans [{pos}, {stop}), "
+                f"outside Data.db's {data_len} bytes"
+            )
+        if self.compression is None:
+            window = self._read("Data.db", pos, stop - pos)
+        else:
+            cl = self.compression["chunk_length"]
+            offs = self.compression["offsets"]
+            first, last = pos // cl, -(-stop // cl)
+            length = offs[last] - offs[first] if last < len(offs) else -1
+            raw = self._read("Data.db", offs[first], length)
+            window = self._inflate(raw, first, last)[pos - first * cl : stop - first * cl]
+        try:
+            part, end = self._parse(window, 0)
+            if end != len(window) or part["key"] != key:
+                raise ValueError("parse does not end at the next index entry")
+        except (IndexError, struct.error, ValueError) as e:
+            raise ValueError(
+                f"{self._path('Data.db')}: partition at [{pos}, {stop}) is corrupt: {e}"
+            ) from e
+        part["start"] = pos
+        return part
+
+    def _crc_ok(self, raw: bytes) -> bool:
+        """CRC.db's per-chunk CRC32s, or for compressed tables each
+        chunk's inline CRC32, all match ``raw`` (Data.db as written)."""
+        if self.compression is None:
+            crc = self._read("CRC.db")
+            (chunk,) = struct.unpack_from(">i", crc, 0)
+            return all(
+                struct.unpack_from(">I", crc, 4 + i * 4)[0]
+                == zlib.crc32(raw[o : o + chunk])
+                for i, o in enumerate(range(0, max(len(raw), 1), chunk))
+            )
+        offs = self.compression["offsets"]
+        return all(
+            struct.unpack_from(">I", raw, e - 4)[0] == zlib.crc32(raw[s : e - 4])
+            for s, e in zip(offs, offs[1:] + [len(raw)])
+        )
+
+    def verify(self, partitions: list[dict]) -> dict:
+        """Integrity flags for ``partitions``, this sstable's full parse:
+        ``index_ok`` (Index.db names every partition at its real start),
+        ``summary_ok`` (only when Summary.db exists: every sampled entry
+        names the Index.db key at its stride and that entry's offset,
+        and first/last keys match), ``digest_ok`` (Digest.crc32 over the
+        file as written — the compressed bytes when compression is on),
+        ``crc_ok``, ``bloom_all_present``, and ``ok``: all of them."""
+        raw = self._read("Data.db")
+        entries = self._index
+        out = {
+            "index_ok": [(p["key"], p["start"]) for p in partitions]
+            == [(k, pos) for k, pos, _ in entries],
+            "digest_ok": self._read("Digest.crc32").decode("ascii")
+            == str(zlib.crc32(raw)),
+            "crc_ok": self._crc_ok(raw),
+            "bloom_all_present": all(
+                self._bloom.might_contain(p["key"]) for p in partitions
+            ),
+        }
+        if entries and os.path.exists(self._path("Summary.db")):
+            summ = _parse_summary(self._read("Summary.db"))
+            stride = summ["min_index_interval"]
+            out["summary_ok"] = (
+                summ["entries"] == [(k, ioff) for k, _, ioff in entries[::stride]]
+                and summ["first_key"] == entries[0][0]
+                and summ["last_key"] == entries[-1][0]
+            )
+        out["ok"] = all(out.values())
+        return out
+
+
+def read_sstable(directory: str, prefix: str | None = None, verify: bool = True) -> dict:
+    """Parse a whole BIG-format sstable (``SSTableReader.partitions``)
+    and, with ``verify``, add ``SSTableReader.verify``'s flags. Returns
+    ``{stats, prefix, compression, partitions: [{key, key_components,
+    token, start, live, rows: [{clustering, cells, timestamp_us}]}],
+    index_ok, summary_ok, digest_ok, crc_ok, bloom_all_present, ok}``."""
+    r = SSTableReader(directory, prefix)
+    partitions = list(r.partitions())
+    out = {
+        "stats": r.stats,
+        "partitions": partitions,
+        "prefix": r.prefix,
+        "compression": None,
+    }
+    if verify:
+        out.update(r.verify(partitions))
+    if r.compression is not None:
+        out["compression"] = {
+            "compressor": r.compression["compressor"],
+            "chunk_length": r.compression["chunk_length"],
+            "n_chunks": len(r.compression["offsets"]),
+            "chunk_crcs_ok": out["crc_ok"] if verify else r._crc_ok(r._read("Data.db")),
+        }
+    return out
 
 
 def point_lookup(
     directory: str, key_components: list, prefix: str | None = None
 ) -> dict | None:
-    """Q4-style single-partition read WITHOUT scanning Data.db — the
-    Cassandra read path in miniature: bloom filter (negative -> None
-    with zero data reads), Index.db binary search on (token, key)
-    DecoratedKey order, then ONE partition parsed at its Data.db
-    offset. Compressed tables inflate only the chunks covering the
-    partition (CompressionInfo's logical->physical map), widening the
-    window chunk by chunk if the partition spans a boundary — never
-    the whole file. Cassandra itself rebuilds the in-memory index
-    summary from Index.db on open (SSTableReader.buildSummary); this
-    reader does the same implicitly by bisecting the parsed index.
-
-    ``key_components`` are python values matching the key column types
-    (e.g. ``["example.com", 4]`` for a (text, int) composite key).
-    Returns the partition dict or None when absent."""
-    import bisect
-
-    if prefix is None:
-        tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
-        if len(tocs) != 1:
-            raise ValueError(f"expected one sstable in {directory}, found {tocs}")
-        prefix = tocs[0][: -len("-TOC.txt")]
-
-    def comp(name: str) -> bytes:
-        with open(os.path.join(directory, f"{prefix}-{name}"), "rb") as fh:
-            return fh.read()
-
-    stats = _parse_statistics(comp("Statistics.db"))
-    ktypes = _key_component_types(stats["key_type"])
-    if len(key_components) != len(ktypes):
-        raise ValueError(
-            f"{len(key_components)} key components for {len(ktypes)}-part key"
-        )
-    key = serialize_key(*(t.ser(v) for t, v in zip(ktypes, key_components)))
-    tok = cassandra_token_bytes(key)
-
-    bloom = _Bloom.deserialize(comp("Filter.db"))
-    if not bloom.might_contain(key):
-        return None
-
-    entries = _index_entries(comp("Index.db"))
-    decorated = [(cassandra_token_bytes(k), k) for k, _ in entries]
-    i = bisect.bisect_left(decorated, (tok, key))
-    if i >= len(entries) or entries[i][0] != key:
-        return None  # bloom false positive
-    pos = entries[i][1]
-
-    clus_types = [_marshal_to_type(t) for t in stats["clustering_types"]]
-    reg = [(n, _marshal_to_type(t)) for n, t in stats["regular_columns"]]
-    min_ts = stats["min_timestamp_us"]
-
-    data_path = os.path.join(directory, f"{prefix}-Data.db")
-    data_size = os.path.getsize(data_path)
-
-    def pread(start: int, length: int) -> bytes:
-        with open(data_path, "rb") as fh:
-            fh.seek(start)
-            return fh.read(length)
-
-    # A truncated parse window surfaces as whatever the deserializer
-    # tripped over — slice indexing, struct unpack, a multibyte UTF-8
-    # codepoint cut at the window edge, an inet of the wrong length —
-    # so widen on ANY of those and only let the full-window attempt
-    # propagate the error.
-    _truncation_errors = (IndexError, struct.error, ValueError, UnicodeDecodeError)
-
-    if os.path.exists(os.path.join(directory, f"{prefix}-CompressionInfo.db")):
-        ci = comp("CompressionInfo.db")
-        (nlen,) = struct.unpack_from(">H", ci, 0)
-        o = 2 + nlen
-        (n_opts,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        for _ in range(n_opts):
-            for _ in range(2):
-                (sl,) = struct.unpack_from(">H", ci, o)
-                o += 2 + sl
-        chunk_len, data_len = struct.unpack_from(">iq", ci, o)
-        o += 12
-        (n_chunks,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        offsets = [struct.unpack_from(">q", ci, o + j * 8)[0] for j in range(n_chunks)]
-
-        def inflate(ci_from: int, ci_to: int) -> bytes:
-            # one seek+read covering exactly the needed chunk span —
-            # never the whole file
-            start = offsets[ci_from]
-            end = offsets[ci_to] if ci_to < n_chunks else data_size
-            blob = pread(start, end - start)
-            out = []
-            for j in range(ci_from, ci_to):
-                s = offsets[j] - start
-                e = (offsets[j + 1] if j + 1 < n_chunks else data_size) - start
-                out.append(zlib.decompress(blob[s : e - 4]))
-            return b"".join(out)
-
-        first = pos // chunk_len
-        last = first + 1
-        while True:
-            window = inflate(first, last)
-            try:
-                part, _ = _parse_partition(
-                    window, pos - first * chunk_len, clus_types, reg, min_ts
-                )
-                break
-            except _truncation_errors:
-                if last >= n_chunks:
-                    raise
-                last = min(first + 2 * (last - first), n_chunks)
-    else:
-        win = 1 << 16
-        while True:
-            window = pread(pos, min(win, data_size - pos))
-            try:
-                part, _ = _parse_partition(window, 0, clus_types, reg, min_ts)
-                break
-            except _truncation_errors:
-                if pos + win >= data_size:
-                    raise
-                win *= 2
-    part["start"] = pos
-    part["key_components"] = _split_key(part["key"], stats["key_type"])
-    return part
-
-
-def iter_sstable_partitions(directory: str, prefix: str | None = None):
-    """STREAMING partition iterator: yields parsed partitions one at a
-    time, in (token, key) file order — the shape compaction's heap
-    merge consumes. The (decompressed) Data.db byte blob is held for
-    the duration of the iteration, but parsed partitions are never
-    accumulated, so peak Python-object memory is ONE partition rather
-    than the whole range (dict expansion of parsed rows costs ~10-20x
-    their serialized bytes, which is what makes read_sstable's
-    all-at-once list the scale hazard). No index/digest/bloom
-    verification — integrity-checked reads go through
-    ``read_sstable``."""
-    if prefix is None:
-        tocs = [f for f in os.listdir(directory) if f.endswith("-TOC.txt")]
-        if len(tocs) != 1:
-            raise ValueError(f"expected one sstable in {directory}, found {tocs}")
-        prefix = tocs[0][: -len("-TOC.txt")]
-
-    def comp(name: str) -> bytes:
-        with open(os.path.join(directory, f"{prefix}-{name}"), "rb") as fh:
-            return fh.read()
-
-    stats = _parse_statistics(comp("Statistics.db"))
-    clus_types = [_marshal_to_type(t) for t in stats["clustering_types"]]
-    reg = [(n, _marshal_to_type(t)) for n, t in stats["regular_columns"]]
-    min_ts = stats["min_timestamp_us"]
-
-    raw_file = comp("Data.db")
-    ci_path = os.path.join(directory, f"{prefix}-CompressionInfo.db")
-    if os.path.exists(ci_path):
-        ci = comp("CompressionInfo.db")
-        (nlen,) = struct.unpack_from(">H", ci, 0)
-        cname = ci[2 : 2 + nlen].decode("utf-8")
-        o = 2 + nlen
-        (n_opts,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        for _ in range(n_opts):
-            for _ in range(2):
-                (sl,) = struct.unpack_from(">H", ci, o)
-                o += 2 + sl
-        _chunk_len, data_len = struct.unpack_from(">iq", ci, o)
-        o += 12
-        (n_chunks,) = struct.unpack_from(">i", ci, o)
-        o += 4
-        offsets = [
-            struct.unpack_from(">q", ci, o + i * 8)[0] for i in range(n_chunks)
-        ]
-        if cname != "DeflateCompressor":
-            raise NotImplementedError(f"compressor {cname}")
-        chunks = []
-        for i, start in enumerate(offsets):
-            end = offsets[i + 1] if i + 1 < n_chunks else len(raw_file)
-            chunks.append(zlib.decompress(raw_file[start : end - 4]))
-        data = b"".join(chunks)
-        if len(data) != data_len:
-            raise ValueError(f"decompressed {len(data)} != declared {data_len}")
-    else:
-        data = raw_file
-
-    off = 0
-    while off < len(data):
-        part, off = _parse_partition(data, off, clus_types, reg, min_ts)
-        yield part
+    """Q4-style single-partition read without scanning Data.db
+    (``SSTableReader.get``): bloom filter, Index.db bisect, then exactly
+    one partition's bytes. Returns the partition dict or None when
+    absent."""
+    return SSTableReader(directory, prefix).get(key_components)
 
 
 def compact_sstables(
@@ -2114,22 +2032,18 @@ def compact_sstable_inputs(
         raise ValueError("no sstables to compact")
     max_gen = max(int(p.split("-")[1]) for _d, p in inputs)
 
-    # schema pass: Statistics.db only (KBs per input), validated equal
-    metas = []
-    for directory, prefix in inputs:
-        with open(
-            os.path.join(directory, f"{prefix}-Statistics.db"), "rb"
-        ) as fh:
-            metas.append(_parse_statistics(fh.read()))
-    first = metas[0]
-    key_ts = _key_component_types(first["key_type"])
+    # schema pass: opening a reader parses only Statistics.db and
+    # CompressionInfo.db (KBs per input), validated equal
+    readers = [SSTableReader(d, p) for d, p in inputs]
+    first = readers[0].stats
+    key_ts = readers[0].key_types
     clus_cqls = [_marshal_to_type(m).cql for m in first["clustering_types"]]
     reg = [(n, _marshal_to_type(m).cql) for n, m in first["regular_columns"]]
     if len(partition_key) != len(key_ts) or len(clustering) != len(clus_cqls):
         raise ValueError(
             f"{inputs[0][1]}: key/clustering arity mismatch with caller schema"
         )
-    for (d_, p_), m in zip(inputs[1:], metas[1:]):
+    for (d_, p_), m in zip(inputs[1:], (r.stats for r in readers[1:])):
         if (
             m["key_type"] != first["key_type"]
             or m["clustering_types"] != first["clustering_types"]
@@ -2165,11 +2079,11 @@ def compact_sstable_inputs(
         spill_threshold_rows=spill_threshold_rows,
     )
 
-    def keyed(idx, directory, prefix):
-        for part in iter_sstable_partitions(directory, prefix):
+    def keyed(idx, reader):
+        for part in reader.partitions():
             yield (part["token"], part["key"], idx, part)
 
-    streams = [keyed(i, d, p) for i, (d, p) in enumerate(inputs)]
+    streams = [keyed(i, r) for i, r in enumerate(readers)]
     # heapq.merge is stable for equal keys, so within one (token, key)
     # group parts arrive in input (authority) order
     ordered = heapq.merge(*streams, key=lambda t: (t[0], t[1]))
@@ -2185,8 +2099,9 @@ def compact_sstable_inputs(
             return
         best: dict = {}
         for idx, part in group:
-            comps = _split_key(part["key"], first["key_type"])
-            keyvals = tuple(t.deser(b) for t, b in zip(key_ts, comps))
+            keyvals = tuple(
+                t.deser(b) for t, b in zip(key_ts, part["key_components"])
+            )
             for r in part["rows"]:
                 clusvals = tuple(r["clustering"])
                 row = dict(zip(partition_key, keyvals))

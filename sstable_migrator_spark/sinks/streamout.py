@@ -178,8 +178,9 @@ def verify_streamed(target_dir: str, path: str) -> dict:
     bulk load: for every range in the source manifest and every RF
     endpoint in the stream plan, check the landed directory exists,
     holds the complete component set for the manifest's prefix, and
-    that its sstable re-parses green (index positions, digest, CRCs,
-    bloom membership) with the advertised partition and row counts.
+    that its sstable re-parses green (``read_sstable``'s ``ok``: index
+    positions, summary, digest, CRCs, bloom membership) with the
+    advertised partition and row counts.
     Work is O(streamed bytes) re-read locally — the same cost profile
     as the tool it mirrors. Returns ``{sessions_expected, ok,
     missing, corrupt}`` where missing/corrupt list
@@ -222,8 +223,7 @@ def verify_streamed(target_dir: str, path: str) -> dict:
                 continue
             n_parts = len(got["partitions"])
             n_rows = sum(len(p["rows"]) for p in got["partitions"])
-            if not (got["index_ok"] and got["digest_ok"] and got["crc_ok"]
-                    and got["bloom_all_present"]):
+            if not got["ok"]:
                 corrupt.append((rid, ep, "integrity check failed"))
             elif (n_parts, n_rows) != (m["partitions"], m["rows"]):
                 corrupt.append(

@@ -6,8 +6,8 @@ them back out (sstable -> parquet migration, cluster-free audits).
 This source scans a directory of BIG-format sstables (the layout
 ``sinks.ring.write_sstables`` produces, or a landed stream target)
 DISTRIBUTED: one Spark task per sstable, each running the independent
-binary reader (sinks/sstable_format.read_sstable — index cross-check,
-digest, CRC, bloom) and emitting Arrow batches.
+binary reader (sinks/sstable_format.read_sstable — index and summary
+cross-checks, digest, CRC, bloom) and emitting Arrow batches.
 
 Schema: column NAMES for the partition key and clustering are supplied
 by the caller — real sstables do not store them either (they live in
@@ -52,14 +52,6 @@ _CQL_TO_SPARK = {
 }
 
 
-def _key_types(key_type: str):
-    """Marshal types of the partition-key components (shared parser in
-    sinks.sstable_format)."""
-    from sstable_migrator_spark.sinks.sstable_format import _key_component_types
-
-    return _key_component_types(key_type)
-
-
 def _sstable_dirs(path: str, pattern: str) -> list[str]:
     out = []
     for d in sorted(glob.glob(os.path.join(path, pattern))):
@@ -101,8 +93,8 @@ def read_sstables(
     per sstable, types from Statistics.db, names from the caller's
     schema (see module docstring)."""
     from sstable_migrator_spark.sinks.sstable_format import (
+        SSTableReader,
         _marshal_to_type,
-        _parse_statistics,
     )
 
     clustering = list(clustering or [])
@@ -121,10 +113,9 @@ def read_sstables(
     ]
 
     # driver-side: one Statistics.db (KBs) fixes the types for all
-    first, prefix = tables[0]
-    with open(os.path.join(first, f"{prefix}-Statistics.db"), "rb") as fh:
-        stats = _parse_statistics(fh.read())
-    key_cqls = [t.cql for t in _key_types(stats["key_type"])]
+    first = SSTableReader(*tables[0])
+    stats = first.stats
+    key_cqls = [t.cql for t in first.key_types]
     clus_cqls = [_marshal_to_type(m).cql for m in stats["clustering_types"]]
     reg = [(n, _marshal_to_type(m).cql) for n, m in stats["regular_columns"]]
     if len(partition_key) != len(key_cqls):
@@ -160,27 +151,21 @@ def read_sstables(
         import pandas as pd
 
         from sstable_migrator_spark.sinks.sstable_format import (
-            _split_key,
+            _key_component_types,
             read_sstable,
         )
 
         for pdf in batches:
             for d, pref in zip(pdf["dir"], pdf["prefix"]):
                 got = read_sstable(d, prefix=pref, verify=verify)
-                if verify and not (
-                    got["index_ok"]
-                    and got["digest_ok"]
-                    and got["crc_ok"]
-                    and got["bloom_all_present"]
-                ):
+                if verify and not got["ok"]:
                     raise ValueError(f"sstable integrity check failed: {d}")
-                key_ts = _key_types(got["stats"]["key_type"])
+                key_ts = _key_component_types(got["stats"]["key_type"])
                 rows = []
                 for p in got["partitions"]:
-                    comps = _split_key(p["key"], got["stats"]["key_type"])
                     keyvals = [
                         _convert(t.cql, t.deser(b))
-                        for t, b in zip(key_ts, comps)
+                        for t, b in zip(key_ts, p["key_components"])
                     ]
                     for r in p["rows"]:
                         clusvals = [

@@ -90,6 +90,7 @@ def test_fuzz_sstable(tmp_path):
     from sstable_migrator_spark.sinks.sstable_format import (
         CqlTable,
         SSTableWriter,
+        point_lookup,
         read_sstable,
     )
 
@@ -116,6 +117,22 @@ def test_fuzz_sstable(tmp_path):
             pass
     data_path.write_bytes(orig)
     assert read_sstable(str(tmp_path))["digest_ok"]
+
+    # a mutated Index.db sends point lookups to wrong or impossible
+    # Data.db windows: each must return or raise, never hang, and a
+    # returned partition is the one asked for
+    index_path = tmp_path / "nb-1-big-Index.db"
+    orig_index = index_path.read_bytes()
+    for mut in _mutations(orig_index, 60, 13):
+        index_path.write_bytes(mut)
+        for i in range(5):
+            try:
+                got = point_lookup(str(tmp_path), [f"k{i}"])
+            except Exception:  # noqa: BLE001
+                continue
+            assert got is None or got["key_components"] == [f"k{i}".encode()]
+    index_path.write_bytes(orig_index)
+    assert point_lookup(str(tmp_path), ["k1"])["key_components"] == [b"k1"]
 
 
 def test_fuzz_mmdb():

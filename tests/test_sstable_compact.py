@@ -233,19 +233,17 @@ def test_compact_rejects_schema_evolution(tmp_path):
 
 
 def test_streaming_iterator_equals_batch_reader(tmp_path):
-    """iter_sstable_partitions must yield exactly read_sstable's
+    """SSTableReader.partitions must yield exactly read_sstable's
     partition sequence (keys, tokens, rows, per-row timestamps) — the
     heap merge's correctness rests on this equivalence."""
-    from sstable_migrator_spark.sinks.sstable_format import (
-        iter_sstable_partitions,
-    )
+    from sstable_migrator_spark.sinks.sstable_format import SSTableReader
 
     src = str(tmp_path / "one")
     _write_gen(src, 1, T1, [
         {"k": f"key{i}", "seq": i, "v": f"x{i}"} for i in range(50)
     ])
     batch = read_sstable(src)["partitions"]
-    stream = list(iter_sstable_partitions(src))
+    stream = list(SSTableReader(src).partitions())
     assert len(stream) == len(batch) == 50
     for a, b in zip(stream, batch):
         assert a["key"] == b["key"] and a["token"] == b["token"]
@@ -258,7 +256,7 @@ def test_streaming_iterator_equals_batch_reader(tmp_path):
         {"k": f"key{i}", "seq": i, "v": f"x{i}" * 20} for i in range(50)
     ], compression="deflate")
     zb = read_sstable(czd)["partitions"]
-    zs = list(iter_sstable_partitions(czd))
+    zs = list(SSTableReader(czd).partitions())
     assert [p["key"] for p in zs] == [p["key"] for p in zb]
     assert [p["rows"] for p in zs] == [p["rows"] for p in zb]
 

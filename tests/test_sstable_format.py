@@ -9,6 +9,8 @@ import struct
 import zlib
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from sstable_migrator_spark.functions.cassandra import (
     cassandra_token,
@@ -768,6 +770,97 @@ def test_point_lookup_compressed_chunk_windows(tmp_path):
         want = {i for i in range(300) if f"key{i % 60}" == probe}
         assert {r["clustering"][0] for r in part["rows"]} == want
     assert point_lookup(str(tmp_path), ["nope"]) is None
+
+
+def test_point_lookup_hashes_log_n_keys(tmp_path, monkeypatch):
+    """A hit bisects Index.db computing O(log n) tokens — the probe's,
+    the bisect's and the parsed partition's — never one per key."""
+    import math
+
+    from sstable_migrator_spark.sinks import sstable_format
+
+    n = 2000
+    w = SSTableWriter(str(tmp_path), _tiny_table())
+    for i in range(n):
+        w.add_row({"k": f"key{i}", "v": "x"})
+    w.close()
+    real = sstable_format.cassandra_token_bytes
+    calls = 0
+
+    def counting(key):
+        nonlocal calls
+        calls += 1
+        return real(key)
+
+    monkeypatch.setattr(sstable_format, "cassandra_token_bytes", counting)
+    for probe in ("key0", "key1234", "key1999"):
+        calls = 0
+        part = sstable_format.point_lookup(str(tmp_path), [probe])
+        assert part["key_components"] == [probe.encode()]
+        assert calls <= math.ceil(math.log2(n)) + 3, (probe, calls)
+
+
+_KEYS = st.text(alphabet="aé€😀-", min_size=1, max_size=6)
+
+
+@settings(max_examples=12, deadline=None)
+@given(
+    rows=st.lists(
+        st.tuples(
+            _KEYS,
+            st.one_of(st.none(), st.text(alphabet="xyé€😀", max_size=90)),
+            st.one_of(st.none(), st.integers(-(2**31), 2**31 - 1)),
+        ),
+        max_size=60,
+    ),
+    absent=st.lists(_KEYS, max_size=5),
+)
+def test_point_lookup_property_matches_full_read(rows, absent):
+    """For plain and deflate (512-byte chunks, so partitions span chunk
+    boundaries) sstables holding NULL cells, multi-byte UTF-8 and one
+    partition past 64 KiB: every written key's point lookup equals its
+    partition in the full read, absent keys give None, and the
+    streaming reader yields the full read's partitions."""
+    import tempfile
+
+    from sstable_migrator_spark.sinks.sstable_format import (
+        SSTableReader,
+        point_lookup,
+    )
+
+    schema = CqlTable(
+        keyspace="ks", table="t",
+        columns=[("k", "varchar"), ("c", "int"), ("v", "varchar"),
+                 ("n", "int")],
+        partition_key=["k"], clustering=["c"],
+    )
+    big = [("big€", "é" * 1000 + str(i), i) for i in range(40)]  # ~80 KiB
+    written = [
+        {"k": k, "c": c, "v": v, "n": n}
+        for c, (k, v, n) in enumerate(rows + big)
+    ]
+    keys = {r["k"] for r in written}
+    for compression in (None, "deflate"):
+        with tempfile.TemporaryDirectory() as d:
+            w = SSTableWriter(d, schema, compression=compression,
+                              chunk_length=512)
+            for r in written:
+                w.add_row({k: v for k, v in r.items() if v is not None})
+            w.close()
+            full = read_sstable(d)
+            assert full["ok"]
+            by_key = {p["key_components"][0].decode(): p
+                      for p in full["partitions"]}
+            assert set(by_key) == keys
+            assert max(len(p["rows"]) for p in full["partitions"]) >= 40
+            for k, want in by_key.items():
+                got = point_lookup(d, [k])
+                for field in ("key_components", "start", "rows"):
+                    assert got[field] == want[field], (compression, k, field)
+            for k in absent:
+                if k not in keys:
+                    assert point_lookup(d, [k]) is None
+            assert list(SSTableReader(d).partitions()) == full["partitions"]
 
 
 # ---------------------------------------------------------------------------

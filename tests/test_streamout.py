@@ -194,7 +194,7 @@ def test_verify_streamed_audit(written, tmp_path):
     with open(os.path.join(written, "_sstable_manifests.json")) as fh:
         manifests = json.load(fh)
     eps = {r["range_id"]: r["endpoints"] for r in plan["ranges"]}
-    r0, r1 = manifests[0], manifests[1]
+    r0, r1, r2 = manifests[0], manifests[1], manifests[2]
 
     # delete a component on one endpoint of range r0
     d0 = os.path.join(
@@ -211,15 +211,30 @@ def test_verify_streamed_audit(written, tmp_path):
     blob = bytearray(open(p1, "rb").read())
     blob[len(blob) // 2] ^= 0xFF
     open(p1, "wb").write(bytes(blob))
+    # flip the last byte of Summary.db (inside its last-key copy) on
+    # one endpoint of range r2: every other flag stays green
+    d2 = os.path.join(
+        target, eps[r2["range_id"]][0], "ferret", "cnames",
+        f"cass_range={r2['range_id']}",
+    )
+    p2 = os.path.join(d2, f"{r2['prefix']}-Summary.db")
+    blob = bytearray(open(p2, "rb").read())
+    blob[-1] ^= 0xFF
+    open(p2, "wb").write(bytes(blob))
+    flags = read_sstable(d2, prefix=r2["prefix"])
+    assert flags["summary_ok"] is False and not flags["ok"]
+    assert flags["index_ok"] and flags["digest_ok"] and flags["crc_ok"]
+    assert flags["bloom_all_present"]
 
     rep = verify_streamed(target, written)
-    assert rep["ok"] == rep["sessions_expected"] - 2
+    assert rep["ok"] == rep["sessions_expected"] - 3
     assert [(m[0], m[1]) for m in rep["missing"]] == [
         (r0["range_id"], eps[r0["range_id"]][0])
     ]
-    assert [(c[0], c[1]) for c in rep["corrupt"]] == [
-        (r1["range_id"], eps[r1["range_id"]][0])
-    ]
+    assert sorted((c[0], c[1]) for c in rep["corrupt"]) == sorted([
+        (r1["range_id"], eps[r1["range_id"]][0]),
+        (r2["range_id"], eps[r2["range_id"]][0]),
+    ])
 
 
 def test_full_lifecycle_write_stream_verify_scan(spark, written, tmp_path):
