@@ -2,8 +2,6 @@
 
 The reference hands rows to ``CQLSSTableWriter`` and lets Cassandra's
 ``Murmur3Partitioner`` place them on the token ring (App.java:231-250).
-The Spark stand-in (sinks.cassandra_shaped_write) previously used plain
-hash repartitioning — correct distribution, wrong *placement identity*.
 This module computes the exact Cassandra token so the written layout
 can be mapped 1:1 to the target ring.
 
@@ -22,19 +20,19 @@ Algorithm facts, all from public sources:
 - Composite partition keys serialize each component as
   ``uint16 length + bytes + 0x00`` (CompositeType.build).
 
-Execution shape: tokens are computed in an Arrow-batched pandas UDF —
-one Python roundtrip per batch at write time only; query paths never
-pay it. The pure-python core doubles as the oracle for golden tests.
+Execution shape: tokens are computed in an Arrow UDF — one Python
+roundtrip per batch at write time only; query paths never pay it.
+The pure-python core doubles as the oracle for golden tests.
 """
 
 from __future__ import annotations
 
 import struct
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 _MASK64 = (1 << 64) - 1
 _C1 = 0x87C37B91114253D5
@@ -178,105 +176,67 @@ def cassandra_token(*components: str | bytes | int) -> int:
     return cassandra_token_bytes(serialize_key(*components))
 
 
+def _undeclared_component(v: str | bytes | int) -> str | bytes | int:
+    """A key component with no declared Spark type: text and bytes pass
+    through, a plain int takes ``serialize_key``'s magnitude heuristic,
+    and anything else is refused rather than guessed."""
+    if isinstance(v, (str, bytes)) or (
+        isinstance(v, int) and not isinstance(v, bool)
+    ):
+        return v
+    raise ValueError(
+        f"partition key component of type {type(v).__name__} needs an "
+        "explicit spark_types entry; refusing to guess its CQL serialization"
+    )
+
+
 def cassandra_token_col(
     *cols: Column | str, spark_types: list[str] | None = None
 ) -> Column:
     """Column expression computing the Cassandra token of a partition
-    key. String columns serialize as text; numeric columns serialize at
-    the width of their DECLARED type when ``spark_types`` carries the
-    simpleString of each key column ('bigint'/'long' -> 8-byte CQL
-    bigint even for small values, 'int' -> 4 bytes) — without it a
-    plain int falls back to the magnitude heuristic, which only matches
-    a cluster whose column is CQL `int`. Temporal/floating/boolean keys
-    serialize through the same CQL marshal helpers the SSTable writer
-    uses (timestamp -> 8-byte millis, date -> unsigned days+2^31,
-    double/float -> IEEE big-endian, boolean -> 1 byte), so the token
-    agrees with a real cluster's ring placement for every type
-    ``write_sstables`` advertises. A declared type outside that set, or
-    an undeclared float/bool/temporal value (whose CQL width can't be
-    guessed), raises a ValueError naming the type rather than silently
-    truncating to int. NULL/NaN key components raise:
-    Cassandra rejects null partition keys, and silently hashing a
-    sentinel would place the row on a real-but-wrong node. Arrow-
-    batched; write-path only."""
+    key. With ``spark_types`` (the simpleString of each key column)
+    every component serializes as the CQL type ``write_sstables``
+    writes that column as — ``sstable_format.SPARK_TO_CQL`` then that
+    type's ``ser`` and ``serialize_key``, the same path
+    ``CqlTable.serialize_partition_key`` takes — so the routed token is
+    the written key's token by construction (a bigint holding 7 hashes
+    8 bytes, a timestamp its millis). A declared type with no CQL
+    mapping raises a ValueError naming it. Without ``spark_types``,
+    strings and bytes pass through, a plain int takes the magnitude
+    heuristic (which only matches a cluster whose column is CQL
+    ``int``) and any other value raises. NULL/NaN key components
+    raise: Cassandra rejects null partition keys, and silently hashing
+    a sentinel would place the row on a real-but-wrong node. Runs as
+    an Arrow UDF over the values ``RecordBatch.to_pylist`` gives the
+    writer; write-path only."""
+    from sstable_migrator_spark.sinks.sstable_format import CQL_TYPES, SPARK_TO_CQL
+
     types = list(spark_types) if spark_types else [None] * len(cols)
     if len(types) != len(cols):
         raise ValueError("spark_types must match the key column count")
-    _supported = {
-        None, "string", "binary", "int", "bigint", "long",
-        "timestamp", "date", "double", "float", "boolean",
-    }
     for t in types:
-        if t not in _supported:
+        if t is not None and t not in SPARK_TO_CQL:
             raise ValueError(
                 f"unsupported partition-key type {t!r}: cassandra_token_col "
-                f"serializes {sorted(x for x in _supported if x)}"
+                f"serializes {sorted(SPARK_TO_CQL)}"
             )
+    sers = [
+        CQL_TYPES[SPARK_TO_CQL[t]].ser if t else _undeclared_component
+        for t in types
+    ]
 
-    @pandas_udf("long")
-    def _token(*series: pd.Series) -> pd.Series:
-        import numpy as np
-
-        from sstable_migrator_spark.sinks.sstable_format import (
-            _ser_bool,
-            _ser_date,
-            _ser_double,
-            _ser_timestamp,
-        )
-
-        n = len(series[0])
+    @arrow_udf("long")
+    def _token(*arrays: pa.Array) -> pa.Array:
         out = []
-        for i in range(n):
-            comps = []
-            for s, t in zip(series, types):
-                v = s.iloc[i]
-                if v is None or (not isinstance(v, (str, bytes, bytearray)) and pd.isna(v)):
-                    raise ValueError("null/NaN partition key component")
-                if isinstance(v, (bytes, bytearray)):
-                    comps.append(bytes(v))
-                elif isinstance(v, str):
-                    comps.append(v)
-                elif t in ("bigint", "long"):
-                    comps.append(CqlBigint(int(v)))
-                elif t == "int":
-                    comps.append(CqlInt(int(v)))
-                elif t == "timestamp":
-                    comps.append(_ser_timestamp(v))
-                elif t == "date":
-                    comps.append(_ser_date(v))
-                elif t == "double":
-                    comps.append(_ser_double(v))
-                elif t == "float":
-                    comps.append(struct.pack(">f", float(v)))
-                elif t == "boolean":
-                    comps.append(_ser_bool(v))
-                elif isinstance(v, (bool, np.bool_)) or not isinstance(
-                    v, (int, np.integer)
-                ):
-                    raise ValueError(
-                        f"partition key component of type {type(v).__name__} "
-                        "needs an explicit spark_types entry; refusing to "
-                        "guess its CQL serialization"
-                    )
-                else:
-                    comps.append(int(v))
-            out.append(cassandra_token(*comps))
-        return pd.Series(out, dtype="int64")
+        for vals in zip(*(a.to_pylist() for a in arrays)):
+            if any(v is None or v != v for v in vals):
+                raise ValueError("null/NaN partition key component")
+            out.append(
+                cassandra_token(*(ser(v) for ser, v in zip(sers, vals)))
+            )
+        return pa.array(out, pa.int64())
 
     return _token(*[F.col(c) if isinstance(c, str) else c for c in cols])
-
-
-_CQL_TYPES = {
-    "string": "VARCHAR",
-    "int": "INT",
-    "bigint": "BIGINT",
-    "double": "DOUBLE",
-    "float": "FLOAT",
-    "boolean": "BOOLEAN",
-    "binary": "BLOB",
-    "date": "DATE",
-    "timestamp": "timestamp",
-}
 
 
 def cassandra_ddl(
@@ -294,10 +254,12 @@ def cassandra_ddl(
     and ``type_overrides`` covers CQL types Spark lacks (the
     reference's INET columns are strings Spark-side). Golden-matched
     against all three reference schemas in tests."""
+    from sstable_migrator_spark.sinks.sstable_format import SPARK_TO_CQL
+
     over = type_overrides or {}
     cols = []
     for f in schema.fields:
-        t = over.get(f.name) or _CQL_TYPES.get(f.dataType.simpleString())
+        t = over.get(f.name) or SPARK_TO_CQL.get(f.dataType.simpleString())
         if t is None:
             raise ValueError(f"no CQL mapping for {f.name}: {f.dataType.simpleString()}")
         cols.append(f"{f.name} {t}")

@@ -1277,8 +1277,9 @@ def exact_span_pairs(
     window keys seen in more than ``max_df`` docs are dropped as
     boilerplate (site chrome, licenses) — the same bucket-fanout cap
     LSH banding applies, and the suffix-array paper's own preprocessing
-    prunes. Surviving keys group into doc lists (bounded by max_df) and
-    emit in-bucket pairs via an array comprehension — no self-join.
+    prunes. Surviving keys group into doc-id sets (bounded by max_df;
+    rows sharing one id count once, so no ``(a, a)`` pairs) and emit
+    in-bucket pairs via an array comprehension — no self-join.
     Returns ``(id_a, id_b, shared_windows)``.
 
     Scale shape: window hashing is map-only; the shuffles are the
@@ -1312,7 +1313,7 @@ def exact_span_pairs(
     wins = _span_window_keys(toks, k)
     grouped = (
         wins.groupBy("wkey")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
+        .agg(F.sort_array(F.collect_set("doc")).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df))
     )
     pairs = grouped.select(
@@ -1433,7 +1434,7 @@ def winnow_pairs(
     )
     grouped = (
         fps.groupBy("fp")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
+        .agg(F.sort_array(F.collect_set("doc")).alias("ds"))
         .filter((F.size("ds") >= 2) & (F.size("ds") <= max_df))
     )
     pairs = grouped.select(

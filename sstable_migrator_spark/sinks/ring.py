@@ -36,9 +36,10 @@ import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from sstable_migrator_spark.functions.cassandra import (
     cassandra_token,
@@ -145,13 +146,29 @@ def ring_range_col(ring: list[tuple[int, str]], token_col: Column | str) -> Colu
     ``np.searchsorted`` over the closure-broadcast boundary array."""
     boundaries = np.array(sorted(t for t, _ in ring), dtype=np.int64)
 
-    @pandas_udf("int")
-    def _rng(tokens: pd.Series) -> pd.Series:
-        idx = np.searchsorted(boundaries, tokens.to_numpy(np.int64), side="left")
+    # an Arrow UDF like cassandra_token_col, so the two chain inside one
+    # Python evaluation instead of two round trips
+    @arrow_udf("int")
+    def _rng(tokens: pa.Array) -> pa.Array:
+        idx = np.searchsorted(boundaries, tokens.to_numpy(), side="left")
         idx[idx == len(boundaries)] = 0
-        return pd.Series(idx.astype(np.int32))
+        return pa.array(idx.astype(np.int32))
 
     return _rng(F.col(token_col) if isinstance(token_col, str) else token_col)
+
+
+def _route(
+    df: DataFrame, partition_key: list[str], ring: list[tuple[int, str]]
+) -> DataFrame:
+    """``df`` plus its rows' ``cass_token`` (keyed by each partition-key
+    column's declared type) and owning ``cass_range``."""
+    return df.withColumn(
+        "cass_token",
+        cassandra_token_col(
+            *partition_key,
+            spark_types=[df.schema[c].dataType.simpleString() for c in partition_key],
+        ),
+    ).withColumn("cass_range", ring_range_col(ring, "cass_token"))
 
 
 def ring_placement_write(
@@ -172,14 +189,9 @@ def ring_placement_write(
     Returns the plan."""
     ring = sorted(ring)
     plan = replica_plan(ring, rf=rf, racks=racks)
-    routed = df.withColumn(
-        "cass_token", cassandra_token_col(
-            *partition_key,
-            spark_types=[df.schema[c].dataType.simpleString() for c in partition_key],
-        )
-    ).withColumn("cass_range", ring_range_col(ring, "cass_token"))
     (
-        routed.repartition(len(ring), "cass_range")
+        _route(df, partition_key, ring)
+        .repartition(len(ring), "cass_range")
         .sortWithinPartitions("cass_range", "cass_token", *clustering)
         .write.mode(mode)
         .partitionBy("cass_range")
@@ -188,19 +200,6 @@ def ring_placement_write(
     with open(os.path.join(path, "_stream_plan.json"), "w") as fh:
         json.dump({"rf": rf, "rack_aware": racks is not None, "ranges": plan}, fh)
     return plan
-
-
-_SPARK_TO_CQL = {
-    "string": "varchar",
-    "int": "int",
-    "bigint": "bigint",
-    "long": "bigint",
-    "double": "double",
-    "boolean": "boolean",
-    "binary": "blob",
-    "timestamp": "timestamp",
-    "date": "date",
-}
 
 
 def write_sstables(
@@ -241,12 +240,13 @@ def write_sstables(
 
     Execution shape: the ONLY shuffle is the repartition on range id
     (the rendezvous any bulk-load layout needs; Murmur3 tokens make it
-    skew-free); serialization runs as an Arrow-batched ``mapInPandas``
-    per partition — Arrow batches stream straight into per-range
-    ``SSTableWriter``s, which external-sort past
-    ``spill_threshold_rows`` (sorted pickle runs + k-way merge), so
-    executor memory is O(threshold + partitions-in-range) however big
-    the range is; driver state stays O(vnodes). Pass
+    skew-free); serialization runs as a ``mapInArrow`` per partition —
+    each Arrow batch's ``to_pylist()`` rows (exact ints, NaN kept, NULL
+    as ``None``) stream straight into per-range ``SSTableWriter``s,
+    which external-sort past ``spill_threshold_rows`` (sorted pickle
+    runs + k-way merge), so executor memory is O(threshold +
+    partitions-in-range) however big the range is; driver state stays
+    O(vnodes). Pass
     ``spill_threshold_rows=None`` to buffer ranges wholly in memory
     (CQLSSTableWriter's default unsorted mode). ``cql_type_overrides``
     maps columns to CQL types Spark lacks (the reference's INET columns
@@ -267,28 +267,29 @@ def write_sstables(
     one small row per RANGE, not per data row)."""
     from pyspark import TaskContext
 
-    from sstable_migrator_spark.sinks.sstable_format import CqlTable, SSTableWriter
+    from sstable_migrator_spark.sinks.sstable_format import (
+        SPARK_TO_CQL,
+        CqlTable,
+        SSTableWriter,
+    )
 
     over = cql_type_overrides or {}
-    data_cols = [f.name for f in df.schema.fields]
     columns = []
     for f in df.schema.fields:
-        cql = over.get(f.name) or _SPARK_TO_CQL.get(f.dataType.simpleString())
+        cql = over.get(f.name) or SPARK_TO_CQL.get(f.dataType.simpleString())
         if cql is None:
             raise ValueError(f"no CQL mapping for {f.name}: {f.dataType.simpleString()}")
         columns.append((f.name, cql))
+    schema = CqlTable(
+        keyspace=keyspace, table=table, columns=columns,
+        partition_key=partition_key, clustering=clustering,
+    )
 
     ring = sorted(ring)
     plan = replica_plan(ring, rf=rf, racks=racks)
     os.makedirs(path, exist_ok=True)
 
-    routed_base = df.withColumn(
-        "cass_token",
-        cassandra_token_col(
-            *partition_key,
-            spark_types=[df.schema[c].dataType.simpleString() for c in partition_key],
-        ),
-    ).withColumn("cass_range", ring_range_col(ring, "cass_token"))
+    routed_base = _route(df, partition_key, ring)
 
     if max_rows_per_sstable is None:
         routed = routed_base.withColumn("cass_sub", F.lit(0)).repartition(
@@ -321,7 +322,6 @@ def write_sstables(
             .repartition(sum(n_subs.values()), "cass_range", "cass_sub")
         )
 
-    keep = set(data_cols)
     n_ranges = len(ring)
 
     def _write(batches):
@@ -329,17 +329,13 @@ def write_sstables(
         # accumulates beyond each writer's spill buffer, so a range
         # bigger than executor memory external-sorts instead of OOMing.
         writers: dict[tuple[int, int], SSTableWriter] = {}
-        for pdf in batches:
-            for rec in pdf.to_dict("records"):
-                rid = int(rec.pop("cass_range"))
-                sub = int(rec.pop("cass_sub"))
+        for batch in batches:
+            for rec in batch.to_pylist():
+                rid = rec.pop("cass_range")
+                sub = rec.pop("cass_sub")
                 rec.pop("cass_token")
                 w = writers.get((rid, sub))
                 if w is None:
-                    schema = CqlTable(
-                        keyspace=keyspace, table=table, columns=columns,
-                        partition_key=partition_key, clustering=clustering,
-                    )
                     # generation rid+1 + sub*n_ranges: unique per
                     # (range, sub-split) so capped sub-sstables coexist
                     # as distinct generations in one range directory
@@ -350,10 +346,7 @@ def write_sstables(
                         write_timestamp_us=write_timestamp_us,
                         spill_threshold_rows=spill_threshold_rows,
                     )
-                w.add_row(
-                    {k: (None if pd.isna(v) else v) for k, v in rec.items()
-                     if k in keep}
-                )
+                w.add_row(rec)
         part_id = TaskContext.get().partitionId()
         out = []
         for (rid, _sub), w in writers.items():
@@ -371,11 +364,11 @@ def write_sstables(
                 }
             )
         if out:
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_pylist(out)
 
-    manifests = routed.mapInPandas(
+    manifests = routed.mapInArrow(
         _write,
-        "range_id int, task_partition int, prefix string, partitions long, "
+        "range_id long, task_partition long, prefix string, partitions long, "
         "rows long, data_bytes long, min_token long, max_token long",
     ).collect()
     # keyed by (range, prefix): a capped range legitimately produces

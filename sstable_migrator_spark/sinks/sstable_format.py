@@ -82,9 +82,9 @@ membership — the same verification recipe used for the mmdb and 7z
 binary readers. ``read_sstable``, ``point_lookup`` and compaction are
 thin callers of it.
 
-Scale shape: one sstable per Spark partition (see
-``sinks.write_sstables``), rows arrive ring-routed from
-``ring_placement_write``'s layout, and nothing touches the driver.
+Scale shape: one sstable per token range per Spark task
+(``sinks.ring.write_sstables`` routes the rows itself and hands each
+range's Arrow rows to its own writer), and nothing touches the driver.
 Within one executor task the writer is CQLSSTableWriter's unsorted
 mode: rows buffer and are sorted by DecoratedKey order at ``close()``.
 By default the buffer is the whole range (O(rows-per-ring-range)
@@ -269,6 +269,7 @@ class _CqlType:
     fixed_len: int | None
     ser: object
     deser: object
+    spark: str  # Spark SQL type (simpleString) its values travel as
 
 
 def _deser_text(b: bytes):
@@ -312,18 +313,30 @@ def _deser_blob(b: bytes):
 CQL_TYPES: dict[str, _CqlType] = {
     t.cql: t
     for t in [
-        _CqlType("text", "UTF8Type", None, _ser_text, _deser_text),
-        _CqlType("varchar", "UTF8Type", None, _ser_text, _deser_text),
-        _CqlType("ascii", "AsciiType", None, _ser_text, _deser_text),
-        _CqlType("int", "Int32Type", 4, _ser_int32, _deser_int32),
-        _CqlType("bigint", "LongType", 8, _ser_long, _deser_long),
-        _CqlType("double", "DoubleType", 8, _ser_double, _deser_double),
-        _CqlType("boolean", "BooleanType", 1, _ser_bool, _deser_bool),
-        _CqlType("timestamp", "TimestampType", 8, _ser_timestamp, _deser_timestamp),
-        _CqlType("inet", "InetAddressType", None, _ser_inet, _deser_inet),
-        _CqlType("blob", "BytesType", None, _ser_blob, _deser_blob),
-        _CqlType("date", "SimpleDateType", 4, _ser_date, _deser_date),
+        _CqlType("text", "UTF8Type", None, _ser_text, _deser_text, "string"),
+        _CqlType("varchar", "UTF8Type", None, _ser_text, _deser_text, "string"),
+        _CqlType("ascii", "AsciiType", None, _ser_text, _deser_text, "string"),
+        _CqlType("int", "Int32Type", 4, _ser_int32, _deser_int32, "int"),
+        _CqlType("bigint", "LongType", 8, _ser_long, _deser_long, "bigint"),
+        _CqlType("double", "DoubleType", 8, _ser_double, _deser_double, "double"),
+        _CqlType("boolean", "BooleanType", 1, _ser_bool, _deser_bool, "boolean"),
+        _CqlType(
+            "timestamp", "TimestampType", 8, _ser_timestamp, _deser_timestamp,
+            "timestamp",
+        ),
+        _CqlType("inet", "InetAddressType", None, _ser_inet, _deser_inet, "string"),
+        _CqlType("blob", "BytesType", None, _ser_blob, _deser_blob, "binary"),
+        _CqlType("date", "SimpleDateType", 4, _ser_date, _deser_date, "date"),
     ]
+}
+
+# The CQL type a Spark column is written as — by write_sstables, in
+# cassandra_ddl and by cassandra_token_col's key encoder, so the routed
+# token and the written key always hash the same bytes. Spark strings
+# become varchar; text/ascii/inet only come from explicit overrides.
+SPARK_TO_CQL: dict[str, str] = {
+    CQL_TYPES[c].spark: c
+    for c in ("varchar", "int", "bigint", "double", "boolean", "timestamp", "date", "blob")
 }
 
 _BY_MARSHAL = {t.marshal: t for t in CQL_TYPES.values()}

@@ -7,17 +7,19 @@ This source scans a directory of BIG-format sstables (the layout
 ``sinks.ring.write_sstables`` produces, or a landed stream target)
 DISTRIBUTED: one Spark task per sstable, each running the independent
 binary reader (sinks/sstable_format.read_sstable — index and summary
-cross-checks, digest, CRC, bloom) and emitting Arrow batches.
+cross-checks, digest, CRC, bloom) and emitting Arrow batches built
+straight from the decoded values (``mapInArrow``, so a NaN cell
+stays NaN).
 
 Schema: column NAMES for the partition key and clustering are supplied
 by the caller — real sstables do not store them either (they live in
 the cluster's schema tables; sstableloader equally needs the schema).
 Column TYPES come from the Statistics.db HEADER of the first sstable,
-so a caller cannot mislabel an int as a text. CQL->Spark mapping:
-text/varchar/ascii/inet -> string, int -> int, bigint -> bigint,
-double -> double, boolean -> boolean, blob -> binary,
-timestamp -> timestamp (CQL stores millis; sub-ms precision was
-truncated at write time, as in Cassandra), date -> date.
+so a caller cannot mislabel an int as a text. Each CQL type's Spark
+type is its ``spark`` entry in ``sinks.sstable_format.CQL_TYPES``
+(text/varchar/ascii/inet -> string, blob -> binary, the rest by name;
+timestamp keeps CQL's millis — sub-ms precision was truncated at
+write time, as in Cassandra).
 
 Column order: key columns first (caller order), then regular columns
 in sstable serialization order — sorted by name, exactly as Cassandra
@@ -36,20 +38,8 @@ import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-_CQL_TO_SPARK = {
-    "text": "string",
-    "varchar": "string",
-    "ascii": "string",
-    "inet": "string",
-    "int": "int",
-    "bigint": "bigint",
-    "double": "double",
-    "boolean": "boolean",
-    "blob": "binary",
-    "timestamp": "timestamp",
-    "date": "date",
-}
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType
 
 
 def _sstable_dirs(path: str, pattern: str) -> list[str]:
@@ -93,6 +83,7 @@ def read_sstables(
     per sstable, types from Statistics.db, names from the caller's
     schema (see module docstring)."""
     from sstable_migrator_spark.sinks.sstable_format import (
+        CQL_TYPES,
         SSTableReader,
         _marshal_to_type,
     )
@@ -130,9 +121,10 @@ def read_sstables(
         )
     names = partition_key + clustering + [n for n, _ in reg]
     cqls = key_cqls + clus_cqls + [c for _, c in reg]
-    schema = ", ".join(
-        f"`{n}` {_CQL_TO_SPARK[c]}" for n, c in zip(names, cqls)
+    schema = DataType.fromDDL(
+        ", ".join(f"`{n}` {CQL_TYPES[c].spark}" for n, c in zip(names, cqls))
     )
+    arrow_schema = to_arrow_schema(schema)
 
     # one sstable per task; parallelize with one row per slice pins the
     # placement without the range sampler's extra pass or an exchange
@@ -148,15 +140,24 @@ def read_sstables(
     )
 
     def _scan(batches):
-        import pandas as pd
+        import pyarrow as pa
 
         from sstable_migrator_spark.sinks.sstable_format import (
             _key_component_types,
             read_sstable,
         )
 
-        for pdf in batches:
-            for d, pref in zip(pdf["dir"], pdf["prefix"]):
+        def _batch(rows: list[list]) -> pa.RecordBatch:
+            # typed arrays straight from the Python values: a double
+            # NaN stays NaN, where a pandas hand-off would turn it NULL
+            return pa.RecordBatch.from_arrays(
+                [pa.array(col, type=f.type) for col, f in zip(zip(*rows), arrow_schema)],
+                schema=arrow_schema,
+            )
+
+        for batch in batches:
+            for task in batch.to_pylist():
+                d, pref = task["dir"], task["prefix"]
                 got = read_sstable(d, prefix=pref, verify=verify)
                 if verify and not got["ok"]:
                     raise ValueError(f"sstable integrity check failed: {d}")
@@ -183,11 +184,9 @@ def read_sstables(
                             # bounded Arrow batches: one giant frame per
                             # sstable would cost several times the file
                             # size in task memory
-                            yield pd.DataFrame(
-                                rows, columns=names, dtype=object
-                            )
+                            yield _batch(rows)
                             rows = []
                 if rows:
-                    yield pd.DataFrame(rows, columns=names, dtype=object)
+                    yield _batch(rows)
 
-    return dirs_df.mapInPandas(_scan, schema)
+    return dirs_df.mapInArrow(_scan, schema)

@@ -290,3 +290,47 @@ def test_token_col_rejects_unsupported_or_undeclared_types(spark):
     df = spark.createDataFrame([(3.5,)], "x double")
     with pytest.raises(Exception, match="spark_types"):
         df.select(cassandra_token_col("x")).collect()
+
+
+def test_float_has_no_cql_mapping(spark, tmp_path):
+    """Nothing writes or scans a CQL float, so the router, the DDL and
+    the writer all refuse a Spark float column instead of accepting a
+    key or schema that could never be written."""
+    from pyspark.sql import types as T
+
+    from sstable_migrator_spark.functions.cassandra import cassandra_ddl
+    from sstable_migrator_spark.sinks.ring import build_ring, write_sstables
+
+    with pytest.raises(ValueError, match="unsupported partition-key type 'float'"):
+        cassandra_token_col("x", spark_types=["float"])
+    schema = T.StructType([T.StructField("k", T.StringType()),
+                           T.StructField("x", T.FloatType())])
+    with pytest.raises(ValueError, match="no CQL mapping for x: float"):
+        cassandra_ddl(schema, "k", "t", ["k"], [])
+    df = spark.createDataFrame([("a", 1.5)], schema)
+    with pytest.raises(ValueError, match="no CQL mapping for x: float"):
+        write_sstables(df, str(tmp_path / "out"), keyspace="k", table="t",
+                       partition_key=["k"], clustering=[],
+                       ring=build_ring(["n1"], vnodes_per_node=1), rf=1)
+
+
+def test_token_col_undeclared_components(spark):
+    """Without spark_types: text and bytes hash as-is, a plain int takes
+    the magnitude heuristic (4 bytes when it fits, else 8), and a
+    boolean is refused rather than guessed."""
+    df = spark.createDataFrame(
+        [("k", b"\xff\x00", 7, 1 << 40)], "s string, b binary, i bigint, j bigint"
+    )
+    row = df.select(
+        cassandra_token_col("s", "b", "i").alias("t3"),
+        cassandra_token_col("j").alias("tj"),
+    ).collect()[0]
+    assert row["t3"] == cassandra_token("k", b"\xff\x00", 7)
+    assert row["t3"] == cassandra_token_bytes(
+        serialize_key(b"k", b"\xff\x00", b"\x00\x00\x00\x07")
+    )
+    assert row["tj"] == cassandra_token_bytes((1 << 40).to_bytes(8, "big"))
+
+    flags = spark.createDataFrame([(True,)], "f boolean")
+    with pytest.raises(Exception, match="spark_types"):
+        flags.select(cassandra_token_col("f")).collect()

@@ -4,6 +4,7 @@ sanity — the operator shapes the 100 TB path relies on."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sstable_migrator_spark.operators.dedup import (
@@ -367,25 +368,52 @@ def test_exact_span_pairs(spark):
     assert out == {(0, 1): 2}
 
 
-def test_span_key_kernel_bit_identity(spark):
+def test_exact_span_pairs_duplicate_doc_ids(spark):
+    """Rows that repeat a doc id are one document: no ``(a, a)``
+    self-pair, and a pair's shared_windows is not inflated by the
+    repeat (the window kernel dedups per input row, not per id)."""
+    from sstable_migrator_spark.operators.dedup import exact_span_pairs
+
+    span = "alpha bravo charlie delta echo foxtrot golf hotel india"  # 9 toks
+    rows = [
+        (0, f"{span} unique0 filler0 pad0 more0"),
+        (0, f"{span} unique0 filler0 pad0 more0"),   # same id, same text
+        (1, f"start1 {span} tail1 tail1b tail1c"),
+        (1, f"other1 {span} tail1 tail1b tail1c"),   # same id, other row
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out = {(r["id_a"], r["id_b"]): r["shared_windows"]
+           for r in exact_span_pairs(docs, k=8, max_df=10).collect()}
+    assert out == {(0, 1): 2}
+
+
+@pytest.mark.parametrize("k", [3, 8])
+def test_span_key_kernel_bit_identity(spark, k):
     """The round-11 window-key kernel (dedup._span_window_keys) must
     reproduce the oracle-pinned expression form EXACTLY —
     md5(array_join(slice(tk, i, k), ' ')) per window, distinct per
     doc — including multi-byte UTF-8 (char offsets vs byte offsets),
     repeated windows (kernel-side dedup), docs of exactly k tokens,
-    and whitespace runs (tokens collapses them before either path)."""
+    and whitespace runs (tokens collapses them before either path) —
+    at k=3 and at exact_span_pairs' k=8, with two rows per Arrow batch
+    so the kernel's generator runs over several batches."""
     from pyspark.sql import functions as F
 
     from sstable_migrator_spark.functions import text as TX
     from sstable_migrator_spark.operators.dedup import _span_window_keys
 
-    k = 3
+    exact = ["x", "y", "z", "w", "v", "u", "t", "s"][:k]
     rows = [
-        (0, "a b c d e"),
-        (1, "x  y\tz"),                          # exactly k after \s+ split
+        (0, " ".join("abcdefghij"[: k + 2])),
+        # exactly k after \s+ split
+        (1, "".join(t + ("  ", "\t")[i % 2] for i, t in enumerate(exact)).rstrip()),
         (2, "café naïve 日本語 résumé emoji✨ tail"),
-        (3, "r r r r r r"),                      # one distinct window
-        (4, "short two"),                        # < k tokens: no windows
+        (3, " ".join(["r"] * (k + 3))),          # one distinct window
+        # < k tokens: no windows
+        (4, " ".join(["short", "two"] + [f"pad{i}" for i in range(k - 3)])),
+        (5, "ñandú straße ελληνικά 中文 café naïve 日本語 résumé emoji✨ tail"),
+        (6, "a b c d e f g h i j k l"),
+        (7, "r r r r r r r r r r r r s"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     toks = docs.select(
@@ -402,12 +430,19 @@ def test_span_key_kernel_bit_identity(spark):
         ).alias("wkey"),
     ).distinct()
     got = _span_window_keys(toks, k)
-    assert got.exceptAll(want).count() == 0
-    assert want.exceptAll(got).count() == 0
-    # doc 3 has 6 tokens of "r": 4 windows, all identical -> ONE key
-    assert got.filter(F.col("doc") == 3).count() == 1
-    # doc 4 never reaches the kernel (filtered); defensive skip inside
-    assert got.filter(F.col("doc") == 4).count() == 0
+    batch_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old_batch = spark.conf.get(batch_conf)
+    spark.conf.set(batch_conf, "2")
+    try:
+        assert got.exceptAll(want).count() == 0
+        assert want.exceptAll(got).count() == 0
+        # doc 3 has k+3 tokens of "r": 4 windows, all identical -> ONE key
+        assert got.filter(F.col("doc") == 3).count() == 1
+        # doc 4 never reaches the kernel (filtered); defensive skip inside
+        assert got.filter(F.col("doc") == 4).count() == 0
+        assert got.filter(F.col("doc") == 1).count() == 1
+    finally:
+        spark.conf.set(batch_conf, old_batch)
 
 
 def test_winnow_fingerprints_rightmost_rule_and_density(spark):

@@ -222,3 +222,135 @@ def test_write_sstables_row_cap_splits_hot_range(spark, tmp_path):
         for r in read_sstables(spark, str(tmp_path / "plain"), partition_key=["k"]).collect()
     }
     assert got == plain and len(got) == 900
+
+
+def test_write_sstables_exact_values(spark, tmp_path):
+    """Rows reach the writer as Arrow values: bigints above 2^53 that
+    share an Arrow batch with a NULL in their column keep every bit, a
+    double NaN is written as a NaN cell (not an absent one), and NULL
+    stays NULL, through write_sstables -> read_sstables."""
+    import math
+
+    from sstable_migrator_spark.sinks.ring import write_sstables
+    from sstable_migrator_spark.sinks.sstable_format import read_sstable
+    from sstable_migrator_spark.sources.sstable_source import read_sstables
+
+    rows = [
+        ("a", (1 << 60) + 1, 1.5),
+        ("b", None, float("nan")),
+        ("c", (1 << 60) + 3, None),
+    ]
+    # one vnode: every row lands in the one range's task and batch
+    df = spark.createDataFrame(rows, "k string, v bigint, x double").coalesce(1)
+    out = str(tmp_path / "out")
+    write_sstables(
+        df, out, keyspace="ks", table="t", partition_key=["k"], clustering=[],
+        ring=build_ring(["solo"], vnodes_per_node=1), rf=1,
+    )
+    got = {
+        r["k"]: (r["v"], r["x"])
+        for r in read_sstables(spark, out, partition_key=["k"]).collect()
+    }
+    assert got["a"] == ((1 << 60) + 1, 1.5)
+    assert got["c"] == ((1 << 60) + 3, None)
+    assert got["b"][0] is None and math.isnan(got["b"][1])
+    assert len(got) == 3
+
+    (d,) = glob.glob(os.path.join(out, "cass_range=*"))
+    cells = {
+        p["key_components"][0]: p["rows"][0]["cells"]
+        for p in read_sstable(d)["partitions"]
+    }
+    assert math.isnan(cells[b"b"]["x"])  # a NaN cell, not an absent one
+    assert "v" not in cells[b"b"] and "x" not in cells[b"c"]
+
+
+def _agreement_cases():
+    import datetime
+
+    utc = datetime.timezone.utc
+    ts0 = datetime.datetime(2024, 5, 17, 12, 30, 45, 123456, tzinfo=utc)
+    return {
+        "string": ("string", [f"ключ-{i}-日本語-✨" for i in range(40)]),
+        "int": ("int", [(-1) ** i * i * 52361 for i in range(38)] + [2**31 - 1, -(2**31)]),
+        "bigint": (
+            "bigint",
+            [7, -7, 2**63 - 1, -(2**63)]
+            + [(1 << 53) + 1 + i * 1_000_003 for i in range(18)]
+            + [-(1 << 60) - i for i in range(18)],
+        ),
+        "double": (
+            "double",
+            [i * 0.37 - 7.1 for i in range(36)] + [1e300, -0.0, 5e-324, float("inf")],
+        ),
+        "boolean": ("boolean", [True, False]),
+        "timestamp": (
+            "timestamp",
+            [ts0 + datetime.timedelta(microseconds=1_001_317 * i) for i in range(36)]
+            + [
+                datetime.datetime(1969, 12, 31, 23, 59, 59, 999500, tzinfo=utc),
+                datetime.datetime(1900, 1, 1, 0, 0, 0, 1, tzinfo=utc),
+            ],
+        ),
+        "date": (
+            "date",
+            [datetime.date(2024, 5, 17) + datetime.timedelta(days=97 * i) for i in range(30)]
+            + [datetime.date(1969, 12, 31), datetime.date(1, 1, 1)],
+        ),
+        "binary": (
+            "binary",
+            [bytes([i, 0x80 + i, 0xFF]) * (1 + i % 7) for i in range(40)],
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", [*_agreement_cases(), "composite"])
+def test_router_and_writer_agree_on_every_key_type(spark, tmp_path, case):
+    """The routed token and the written key hash the same bytes for
+    every Spark type write_sstables supports (and a composite key):
+    on a multi-vnode ring, every partition read back lies inside its
+    cass_range= directory's bounds and carries exactly the token
+    cassandra_token_col gave its row."""
+    from sstable_migrator_spark.functions.cassandra import cassandra_token_col
+    from sstable_migrator_spark.sinks.ring import write_sstables
+    from sstable_migrator_spark.sinks.sstable_format import read_sstable
+
+    cases = _agreement_cases()
+    if case == "composite":
+        (s_t, s), (b_t, b), (d_t, d) = (
+            cases[c] for c in ("string", "bigint", "date")
+        )
+        n = min(len(s), len(b), len(d))
+        types = [s_t, b_t, d_t]
+        rows = [(i, s[i], b[i], d[i]) for i in range(n)]
+    else:
+        t, vals = cases[case]
+        types = [t]
+        rows = [(i, v) for i, v in enumerate(vals)]
+    key = [f"k{j}" for j in range(len(types))]
+    df = spark.createDataFrame(
+        rows, ", ".join(["id int"] + [f"{c} {t}" for c, t in zip(key, types)])
+    )
+    routed = {
+        r["id"]: r["tok"]
+        for r in df.select(
+            "id", cassandra_token_col(*key, spark_types=types).alias("tok")
+        ).collect()
+    }
+
+    ring = build_ring(["n1", "n2", "n3"], vnodes_per_node=4)
+    out = tmp_path / "out"
+    plan = write_sstables(
+        df, str(out), keyspace="ks", table="t", partition_key=key,
+        clustering=[], ring=ring, rf=1,
+    )
+    by_id = {p["range_id"]: p for p in plan}
+    seen = set()
+    for d in glob.glob(str(out / "cass_range=*")):
+        rid = int(d.rsplit("=", 1)[1])
+        for p in read_sstable(d)["partitions"]:
+            assert _owns(by_id[rid], p["token"])
+            (row,) = p["rows"]
+            assert p["token"] == routed[row["cells"]["id"]]
+            seen.add(row["cells"]["id"])
+    assert seen == set(routed) and len(seen) == len(rows)
