@@ -116,7 +116,7 @@ def _minhash_sig_kernel(num_hashes: int):
 
     Bit-identity argument (the recipe is ORACLE-PINNED; DuckDB twins
     replay it verbatim): the first 15 hex chars of an md5 digest are
-    its top 60 bits, so ``int.from_bytes(digest[:8], 'big') >> 4`` ==
+    its top 60 bits, so the big-endian uint64 of ``digest[:8]`` ``>> 4`` ==
     ``CAST(conv(substring(hexdigest,1,15),16,10) AS BIGINT)`` exactly
     (both non-negative, < 2^60, no overflow); strings hash as UTF-8 in
     both engines; min over int64 is order-independent (unlike float
@@ -155,12 +155,13 @@ def _minhash_sig_kernel(num_hashes: int):
                 codes.append(uniq.setdefault(s, len(uniq)))
         if not rows:
             return pd.Series(out)
-        H = np.empty((len(uniq), num_hashes), dtype=np.int64)
-        for j, s in enumerate(uniq):
-            b = s.encode("utf-8")
-            row = H[j]
-            for k, pre in enumerate(prefixes):
-                row[k] = int.from_bytes(md5(pre + b).digest()[:8], "big") >> 4
+        # one (shingle, seed) digest prefix per 8 bytes, shingle-major
+        buf = b"".join(
+            md5(pre + b).digest()[:8]
+            for b in (s.encode("utf-8") for s in uniq)
+            for pre in prefixes
+        )
+        H = (np.frombuffer(buf, ">u8") >> 4).astype(np.int64).reshape(len(uniq), num_hashes)
         starts = np.zeros(len(counts), dtype=np.int64)
         np.cumsum(np.asarray(counts[:-1], dtype=np.int64), out=starts[1:])
         mins = np.minimum.reduceat(H[np.asarray(codes, dtype=np.int64)], starts, axis=0)

@@ -12,9 +12,11 @@ Arrow-batched ``mapInPandas`` operator:
   container has no DNS egress. A real deployment passes a resolver
   callable backed by an async DNS client.
 
-Rate limiting happens per executor slot: each task meters its own
-lookups to ``rate_limit_qps / parallelism`` so the aggregate respects
-the cap — the Spark analog of massdns' single-process limiter.
+Rate limiting happens per executor slot: the domain list is spread
+round-robin over ``parallelism`` tasks and each task meters its own
+lookups to ``rate_limit_qps / parallelism``, so the aggregate reaches
+the cap without passing it — the Spark analog of massdns'
+single-process limiter.
 """
 
 from __future__ import annotations
@@ -84,7 +86,12 @@ def resolve_domains(
                 out["ip"].append(ip)
             yield pd.DataFrame(out, columns=["domain", "record_type", "ip"])
 
-    return domains.select(domain_col).mapInPandas(op, RESOLVED_SCHEMA)
+    todo = domains.select(domain_col)
+    if per_task_qps:
+        # The shares add up to the cap only if n_slots tasks run: AQE
+        # often coalesces a small input to one partition.
+        todo = todo.repartition(n_slots)
+    return todo.mapInPandas(op, RESOLVED_SCHEMA)
 
 
 def wire_resolver(

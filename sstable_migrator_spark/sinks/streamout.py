@@ -273,7 +273,8 @@ class _Handler(socketserver.BaseRequestHandler):
                 f"cass_range={header['range_id']}",
             )
             os.makedirs(dest, exist_ok=True)
-            for name, size in header["files"]:
+            files = header["files"]
+            for i, (name, size) in enumerate(files):
                 if (
                     not isinstance(name, str)
                     or os.sep in name
@@ -297,6 +298,10 @@ class _Handler(socketserver.BaseRequestHandler):
                         left -= len(chunk)
                 sender_digest = _read_exact(rf, 32)
                 ok = sender_digest == h.digest()
+                if ok and i == len(files) - 1:
+                    # record before the last ack: the ack is what lets the
+                    # sender return, and its caller may read .sessions next
+                    self._landed(header)
                 if self.server.corrupt_acks:  # type: ignore[attr-defined]
                     wf.write(bytes(32))
                 else:
@@ -304,14 +309,8 @@ class _Handler(socketserver.BaseRequestHandler):
                 wf.flush()
                 if not ok:
                     raise StreamError(f"inline digest mismatch for {name}")
-            with self.server.lock:  # type: ignore[attr-defined]
-                self.server.sessions.append(  # type: ignore[attr-defined]
-                    {
-                        "endpoint": header["endpoint"],
-                        "range_id": header["range_id"],
-                        "files": len(header["files"]),
-                    }
-                )
+            if not files:
+                self._landed(header)
         except (StreamError, OSError, ValueError, KeyError, TypeError):
             # framing/validation failures (json.JSONDecodeError and
             # UnicodeDecodeError are ValueErrors; missing header keys
@@ -325,6 +324,16 @@ class _Handler(socketserver.BaseRequestHandler):
                     f.close()
                 except OSError:
                     pass
+
+    def _landed(self, header: dict) -> None:
+        with self.server.lock:  # type: ignore[attr-defined]
+            self.server.sessions.append(  # type: ignore[attr-defined]
+                {
+                    "endpoint": header["endpoint"],
+                    "range_id": header["range_id"],
+                    "files": len(header["files"]),
+                }
+            )
 
 
 class SSTableReceiver:

@@ -69,6 +69,21 @@ def test_resolver_contract(spark):
     assert len(out) < 200  # some NXDOMAIN rows really dropped
 
 
+def test_rate_limited_resolver_uses_every_slot(spark):
+    """The per-task shares of ``rate_limit_qps`` add up to the cap only
+    if ``n_slots`` tasks run, even when the domain list is one partition."""
+    doms = spark.createDataFrame(
+        [(f"r{i}.example.io",) for i in range(256)], "domain string"
+    ).coalesce(1)
+    unlimited = resolve_domains(doms)
+    assert unlimited.rdd.getNumPartitions() == 1  # no exchange without a cap
+    n_slots = spark.sparkContext.defaultParallelism
+    limited = resolve_domains(doms, rate_limit_qps=1e6)
+    assert limited.rdd.getNumPartitions() == n_slots
+    assert limited.select(F.spark_partition_id()).distinct().count() == n_slots
+    assert sorted(limited.collect()) == sorted(unlimited.collect())
+
+
 def test_daily_upload_e2e(spark, tmp_path):
     doms = spark.createDataFrame(
         [(f"h{i}.site{i % 7}.example.io",) for i in range(100)], "domain string"

@@ -15,6 +15,7 @@ from sstable_migrator_spark.sinks.sstable_format import read_sstable
 from sstable_migrator_spark.sinks.streamout import (
     SSTableReceiver,
     StreamError,
+    send_range,
     stream_sstables,
 )
 
@@ -84,6 +85,26 @@ def test_stream_lands_on_every_replica(written, tmp_path):
             seen[p["key_components"][0].decode()] = p["rows"][0]["cells"]["seq"]
     assert len(seen) == 120
     assert seen["dom42.example.com"] == 42
+
+
+def test_session_recorded_before_sender_returns(tmp_path):
+    """A caller that reads ``sessions`` right after ``send_range`` returns
+    sees the session: the receiver records it before the last ack."""
+    import socket
+
+    src = tmp_path / "src"
+    src.mkdir()
+    for comp in ("Data.db", "Index.db", "TOC.txt"):
+        (src / f"p-{comp}").write_bytes(os.urandom(300))
+    recv = SSTableReceiver(str(tmp_path / "cluster"))
+    try:
+        for i in range(20):
+            with socket.create_connection(("127.0.0.1", recv.port)) as conn:
+                send_range(conn, str(src), "p", keyspace="k", table="t",
+                           range_id=i, endpoint="n1")
+            assert [x["range_id"] for x in recv.sessions] == list(range(i + 1))
+    finally:
+        recv.close()
 
 
 def test_corrupted_ack_raises(written, tmp_path):
