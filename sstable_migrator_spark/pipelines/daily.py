@@ -13,24 +13,31 @@ as the external boundary between them. Every hand-placed shell
 optimization becomes plan structure (SURVEY §4): cheap filters before
 dedup, dedup before the expensive resolve, one anti-join replacing the
 25-pass ``comm -23`` loop, one regex alternation replacing 116 grep
-patterns, and a single cached parse feeding three sorted writes.
+patterns, and a single cached parse feeding the three tables.
+
+Job 2 has two outputs, as in the reference: the SSTables
+(``bulk_load_job`` -> ``sinks.ring.write_sstables``, the only code that
+places rows for Cassandra) and the K3 Parquet side channel
+(``daily_upload_job(out_dir=...)``, plain Snappy files like
+parquet_converter/main.go — no shuffle, no sort).
 
 At scale: history is date-partitioned (partition pruning bounds the
 anti-join's build side to the window); the anti-join shuffles on
-``domain`` once; dims broadcast; the three sinks reuse one cached
-parse.
+``domain`` once; dims broadcast; the three side-channel writes reuse
+one cached parse and shuffle nothing.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from collections.abc import Iterable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sstable_migrator_spark.operators import ingest
 from sstable_migrator_spark.operators.dedup import anti_join_history
-from sstable_migrator_spark.sinks import cassandra_shaped_write
+from sstable_migrator_spark.sinks import parquet_export
 
 DEFAULT_ALLOWLIST_RE = "\\.(gov\\.[a-z]{2,}|gov|ru|ai|de|fr|io|in)$"
 
@@ -68,6 +75,35 @@ def daily_prepare_job(
     return feed
 
 
+@contextmanager
+def routed_upload(
+    resolved: DataFrame,
+    city_dim: DataFrame,
+    asn_dim: DataFrame,
+    tld_set: Iterable[str] | None,
+    source: str,
+    batch_ts,
+) -> Iterator[dict[str, DataFrame]]:
+    """Job 2's steps, shared by ``daily_upload_job`` and its streaming
+    twin ``streaming.daily.routed_stream_sink``: parse/validate the
+    resolved triples once, enrich the kept A rows, union the kept
+    CNAMEs and route into the three tables. The parse stays cached
+    for the ``with`` block, so every write the caller makes inside it
+    reuses one parse; it is unpersisted on exit."""
+    parsed = ingest.parse_and_route(resolved, tld_set=tld_set, source=source).persist()
+    try:
+        kept = parsed.filter(F.col("keep"))
+        enriched = ingest.geoip_enrich(kept.filter(~F.col("is_cname")), city_dim, asn_dim)
+        yield ingest.route_tables(
+            enriched.unionByName(
+                kept.filter(F.col("is_cname")), allowMissingColumns=True
+            ),
+            batch_ts=batch_ts,
+        )
+    finally:
+        parsed.unpersist()
+
+
 def daily_upload_job(
     resolved: DataFrame,
     city_dim: DataFrame,
@@ -78,36 +114,20 @@ def daily_upload_job(
     batch_ts=None,
 ) -> dict[str, DataFrame]:
     """Job 2: resolved massdns triples -> validated/enriched/routed
-    tables, optionally written Cassandra-shaped (K1/O2/O4).
+    tables, optionally exported as the K3 Parquet side channel.
 
     Returns the three table DataFrames; when ``out_dir`` is given they
-    are also written as sorted parquet under ``{out_dir}/{table}`` with
-    the reference's PK layout (App.java:143,171,198).
+    are also written with ``sinks.parquet_export`` (Snappy, 128 MB row
+    groups) under ``{out_dir}/{table}``, columns in the reference's
+    table order (``schemas.RDNSV4``/``SUBDOMAINS``/``CNAMES``). The
+    writes keep the rows where they are: Cassandra placement is
+    ``bulk_load_job``'s job, which routes by token itself.
     """
-    parsed = ingest.parse_and_route(resolved, tld_set=tld_set, source=source)
-    parsed = parsed.persist()
-    try:
-        kept = parsed.filter(F.col("keep"))
-        a_rows = kept.filter(~F.col("is_cname"))
-        enriched = ingest.geoip_enrich(a_rows, city_dim, asn_dim)
-        routed = ingest.route_tables(
-            enriched.unionByName(
-                kept.filter(F.col("is_cname")), allowMissingColumns=True
-            ),
-            batch_ts=batch_ts,
-        )
+    with routed_upload(resolved, city_dim, asn_dim, tld_set, source, batch_ts) as routed:
         if out_dir:
-            pk = {
-                "rdnsv4": (["ip8"], ["ip16", "ip24", "ipAddress"] + [f"p{i}" for i in range(1, 8)]),
-                "subdomains": (["p1", "p2", "p3"], [f"p{i}" for i in range(4, 8)]),
-                "cnames": (["target"], ["apexDomain", "domain"]),
-            }
             for name, df in routed.items():
-                part, clus = pk[name]
-                cassandra_shaped_write(df, f"{out_dir}/{name}", part, clus)
-        return routed
-    finally:
-        parsed.unpersist()
+                parquet_export(df, f"{out_dir}/{name}")
+    return routed
 
 
 def bulk_load_job(

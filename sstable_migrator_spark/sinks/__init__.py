@@ -1,17 +1,14 @@
 """Sinks (SURVEY §2.2, K1-K8).
 
 The reference's CQLSSTableWriter buffers rows in a 6-8 GB heap and
-depends on in-PK-order input for throughput (README.md:82). The Spark
-equivalent makes that ordering a property of the *plan*:
-
-    repartition(partition_key) -> sortWithinPartitions(clustering)
-    -> write
-
-which scales out (each task writes one partition-key shard, sorted) and
-spills instead of OOMing. Cassandra-connector output is gated behind an
-import-try (the connector jar isn't in this image); the pure-Spark
-stand-in writes sorted parquet partitioned by table — byte-for-byte
-loadable by the connector later.
+depends on in-PK-order input for throughput (README.md:82). Here the
+only code that places rows for Cassandra is ``sinks.ring.write_sstables``:
+it routes each row to its token range by the real Murmur3 token, shuffles
+once by range, and each range's ``SSTableWriter`` sorts into
+DecoratedKey order (spilling past a fixed row threshold instead of
+OOMing). The Parquet side channel is the reference's separate K3 export
+(``parquet_export``, parquet_converter/main.go): plain Snappy files, no
+placement of their own.
 """
 
 from __future__ import annotations
@@ -75,53 +72,6 @@ def local_rows_df(spark, rows, schema, slices: int = 1) -> DataFrame:
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, max(1, min(slices, max(len(rows), 1)))),
         schema,
-    )
-
-
-def cassandra_shaped_write(
-    df: DataFrame,
-    path: str,
-    partition_key: list[str],
-    clustering: list[str],
-    num_partitions: int | None = None,
-    mode: str = "overwrite",
-    token_placement: bool = False,
-) -> None:
-    """K1/O2/O4 — sorted, hash-placed write.
-
-    Default: ``repartition(partition_key)`` approximates Murmur3-token
-    placement (App.java:232,239,246) and ``sortWithinPartitions``
-    delivers the in-PK-order stream the SSTable format wants
-    (README.md:82).
-
-    ``token_placement=True`` upgrades the approximation to exact
-    parity: a ``cass_token`` column carries the real Murmur3Partitioner
-    token (functions.cassandra, golden-tested against the public
-    Cassandra vectors) and the layout is range-partitioned + sorted *in
-    ring order* — each output file covers one contiguous token range,
-    which is precisely what sstableloader streams to one replica set.
-    Costs one Arrow-batched UDF pass at write time only.
-    """
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    if token_placement:
-        from sstable_migrator_spark.functions.cassandra import cassandra_token_col
-
-        (
-            df.withColumn("cass_token", cassandra_token_col(
-            *partition_key,
-            spark_types=[df.schema[c].dataType.simpleString() for c in partition_key],
-        ))
-            .repartitionByRange(n, F.col("cass_token"))
-            .sortWithinPartitions("cass_token", *clustering)
-            .write.mode(mode)
-            .parquet(path)
-        )
-        return
-    (
-        df.repartition(n, *[F.col(c) for c in partition_key])
-        .sortWithinPartitions(*partition_key, *clustering)
-        .write.mode(mode)
-        .parquet(path)
     )
 
 

@@ -214,7 +214,6 @@ def write_sstables(
     racks: dict[str, str] | None = None,
     cql_type_overrides: dict[str, str] | None = None,
     write_timestamp_us: int = 1700000000000000,
-    spill_threshold_rows: int | None = 65536,
     max_rows_per_sstable: int | None = None,
 ) -> list[dict]:
     """K1 end-to-end: route every row to its owning token range and
@@ -243,15 +242,12 @@ def write_sstables(
     skew-free); serialization runs as a ``mapInArrow`` per partition —
     each Arrow batch's ``to_pylist()`` rows (exact ints, NaN kept, NULL
     as ``None``) stream straight into per-range ``SSTableWriter``s,
-    which external-sort past ``spill_threshold_rows`` (sorted pickle
+    which external-sort past a fixed 65 536-row buffer (sorted pickle
     runs + k-way merge), so executor memory is O(threshold +
     partitions-in-range) however big the range is; driver state stays
-    O(vnodes). Pass
-    ``spill_threshold_rows=None`` to buffer ranges wholly in memory
-    (CQLSSTableWriter's default unsorted mode). ``cql_type_overrides``
-    maps columns to CQL types Spark lacks (the reference's INET columns
-    ride as strings Spark-side, exactly like cassandra_ddl's
-    overrides).
+    O(vnodes). ``cql_type_overrides`` maps columns to CQL types Spark
+    lacks (the reference's INET columns ride as strings Spark-side,
+    exactly like cassandra_ddl's overrides).
 
     SHARED-FILESYSTEM CONTRACT: ``path`` is opened with plain
     ``open()`` ON THE EXECUTORS (one SSTableWriter per range task) and
@@ -344,7 +340,6 @@ def write_sstables(
                         schema,
                         generation=rid + 1 + sub * n_ranges,
                         write_timestamp_us=write_timestamp_us,
-                        spill_threshold_rows=spill_threshold_rows,
                     )
                 w.add_row(rec)
         part_id = TaskContext.get().partitionId()

@@ -87,15 +87,16 @@ Scale shape: one sstable per token range per Spark task
 range's Arrow rows to its own writer), and nothing touches the driver.
 Within one executor task the writer is CQLSSTableWriter's unsorted
 mode: rows buffer and are sorted by DecoratedKey order at ``close()``.
-By default the buffer is the whole range (O(rows-per-ring-range)
-memory — CQLSSTableWriter's ``withBufferSizeInMB`` sizing rule);
-passing ``spill_threshold_rows`` turns it into an external sort:
-every ``threshold`` rows are sorted and spilled as a run file, and
-``close()`` k-way-merges the runs while STREAMING the data file to
-disk chunk-by-chunk, so executor memory is O(threshold + partitions
-+ runs) regardless of range size — the output is byte-identical to
-the in-memory path. That is how a 100 TB range that exceeds executor
-memory still serializes on one task.
+The buffer is bounded by a fixed row count
+(``SSTableWriter._SPILL_THRESHOLD_ROWS``, 65 536 — the role of
+CQLSSTableWriter's ``withBufferSizeInMB``): a range that fits stays in
+memory, and a bigger one becomes an external sort — every full buffer
+is sorted and spilled as a run file, and ``close()`` k-way-merges the
+runs while STREAMING the data file to disk chunk-by-chunk, so
+executor memory is O(threshold + partitions + runs) regardless of
+range size. The output is byte-identical either way. That is how a
+100 TB range that exceeds executor memory still serializes on one
+task.
 """
 
 from __future__ import annotations
@@ -1003,12 +1004,16 @@ class SSTableWriter:
     timestamp (micros), matching the reference's batch-stamped
     ``toTimestamp(now())`` semantics (App.java INSERTs).
 
-    ``spill_threshold_rows`` bounds the buffer: every ``threshold``
-    rows are pre-sorted and spilled to a pickle run file under the
-    output directory, and ``close()`` streams a k-way merge of the
-    runs straight to disk — an external sort whose output is
+    The buffer holds at most ``_SPILL_THRESHOLD_ROWS`` rows: each time
+    it fills, the rows are pre-sorted and spilled to a pickle run file
+    under the output directory, and ``close()`` streams a k-way merge
+    of the runs straight to disk — an external sort whose output is
     byte-identical to the in-memory path (the merge is stable across
     runs in spill order, as ``sorted`` is over insertion order)."""
+
+    _SPILL_THRESHOLD_ROWS = 65536
+    _MAX_MERGE_FAN_IN = 64
+    _BLOOM_FP = 0.01
 
     def __init__(
         self,
@@ -1016,13 +1021,9 @@ class SSTableWriter:
         schema: CqlTable,
         generation: int = 1,
         write_timestamp_us: int = 1700000000000000,
-        bloom_fp: float = 0.01,
         compression: str | None = None,
         chunk_length: int = 16384,
-        spill_threshold_rows: int | None = None,
     ):
-        if spill_threshold_rows is not None and spill_threshold_rows < 1:
-            raise ValueError("spill_threshold_rows must be >= 1")
         if compression not in (None, "deflate"):
             raise ValueError("compression must be None or 'deflate'")
         if chunk_length & (chunk_length - 1):
@@ -1040,10 +1041,8 @@ class SSTableWriter:
         self.schema = schema
         self.gen = generation
         self.ts = write_timestamp_us
-        self.bloom_fp = bloom_fp
         self.compression = compression
         self.chunk_length = chunk_length
-        self.spill_threshold = spill_threshold_rows
         self._rows: list[dict] = []
         self._runs: list[str] = []
         self._tmpdir: str | None = None
@@ -1070,7 +1069,7 @@ class SSTableWriter:
             if timestamp_us > self._max_ts:
                 self._max_ts = timestamp_us
         self._rows.append(row)
-        if self.spill_threshold and len(self._rows) >= self.spill_threshold:
+        if len(self._rows) >= self._SPILL_THRESHOLD_ROWS:
             self._spill_run()
 
     def _spill_run(self) -> None:
@@ -1103,8 +1102,6 @@ class SSTableWriter:
             shutil.rmtree(self._tmpdir, ignore_errors=True)
             self._tmpdir = None
             self._runs = []
-
-    _MAX_MERGE_FAN_IN = 64
 
     def _iter_decorated(self):
         """Yield ``(sort_key, row)`` in global DecoratedKey order:
@@ -1300,7 +1297,7 @@ class SSTableWriter:
         val = io.BytesIO()
         pb = PARTITIONER.encode("utf-8")
         val.write(struct.pack(">H", len(pb)) + pb)  # writeUTF
-        val.write(struct.pack(">d", self.bloom_fp))
+        val.write(struct.pack(">d", self._BLOOM_FP))
         vl = val.getvalue()
 
         # COMPACTION (CompactionMetadata): int length + HyperLogLogPlus
@@ -1431,7 +1428,7 @@ class SSTableWriter:
             raise
         self._cleanup_runs()
 
-        bloom = _Bloom(len(keys), self.bloom_fp)
+        bloom = _Bloom(len(keys), self._BLOOM_FP)
         for k in keys:
             bloom.add(k)
 
@@ -2012,7 +2009,6 @@ def compact_sstable_inputs(
     table: str,
     partition_key: list[str],
     clustering: list[str] | None = None,
-    spill_threshold_rows: int | None = 65536,
 ) -> dict:
     """Merge an explicit list of ``(directory, prefix)`` sstables (in
     ascending authority order — later inputs win timestamp ties, the
@@ -2033,7 +2029,7 @@ def compact_sstable_inputs(
     (token, key) order, so same-key partitions from every input
     co-locate under ``heapq.merge`` and reconciliation is per
     PARTITION, never per range; winners stream straight into the
-    output writer, which external-sorts past ``spill_threshold_rows``.
+    output writer, which external-sorts past its spill threshold.
     Peak Python-object memory is one partition x n_inputs + the
     writer's spill buffer (each input's decompressed byte blob is held
     for its iteration — bytes, not the ~10-20x dict expansion of
@@ -2089,7 +2085,6 @@ def compact_sstable_inputs(
             clustering=clustering,
         ),
         generation=max_gen + 1,
-        spill_threshold_rows=spill_threshold_rows,
     )
 
     def keyed(idx, reader):

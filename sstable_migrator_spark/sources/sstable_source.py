@@ -6,7 +6,7 @@ them back out (sstable -> parquet migration, cluster-free audits).
 This source scans a directory of BIG-format sstables (the layout
 ``sinks.ring.write_sstables`` produces, or a landed stream target)
 DISTRIBUTED: one Spark task per sstable, each running the independent
-binary reader (sinks/sstable_format.read_sstable — index and summary
+binary reader (sinks/sstable_format.SSTableReader — index and summary
 cross-checks, digest, CRC, bloom) and emitting Arrow batches built
 straight from the decoded values (``mapInArrow``, so a NaN cell
 stays NaN).
@@ -15,8 +15,12 @@ Schema: column NAMES for the partition key and clustering are supplied
 by the caller — real sstables do not store them either (they live in
 the cluster's schema tables; sstableloader equally needs the schema).
 Column TYPES come from the Statistics.db HEADER of the first sstable,
-so a caller cannot mislabel an int as a text. Each CQL type's Spark
-type is its ``spark`` entry in ``sinks.sstable_format.CQL_TYPES``
+so a caller cannot mislabel an int as a text. Every other sstable's
+header must declare the same key type, clustering types and regular
+columns: its scan task raises a ValueError naming it otherwise (a
+different header would lose columns or read back NULLs silently).
+Each CQL type's Spark type is its ``spark`` entry in
+``sinks.sstable_format.CQL_TYPES``
 (text/varchar/ascii/inet -> string, blob -> binary, the rest by name;
 timestamp keeps CQL's millis — sub-ms precision was truncated at
 write time, as in Cassandra).
@@ -27,8 +31,8 @@ stores them; select() to taste.
 
 Scale: the scan parallelizes over sstables (one per token range from
 write_sstables); each task is a linear single pass over its Data.db.
-``verify=True`` (default) keeps the integrity checks on — the same
-cost class as the write's digesting. An absent cell surfaces as NULL.
+The integrity checks are always on — the same cost class as the
+write's digesting. An absent cell surfaces as NULL.
 """
 
 from __future__ import annotations
@@ -42,15 +46,15 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import DataType
 
 
-def _sstable_dirs(path: str, pattern: str) -> list[str]:
+def _sstable_dirs(path: str) -> list[str]:
     out = []
-    for d in sorted(glob.glob(os.path.join(path, pattern))):
+    for d in sorted(glob.glob(os.path.join(path, "cass_range=*"))):
         if os.path.isdir(d) and any(
             f.endswith("-TOC.txt") for f in os.listdir(d)
         ):
             out.append(d)
     if not out:
-        raise ValueError(f"no sstable directories under {path}/{pattern}")
+        raise ValueError(f"no sstable directories under {path}/cass_range=*")
     return out
 
 
@@ -76,12 +80,11 @@ def read_sstables(
     path: str,
     partition_key: list[str],
     clustering: list[str] | None = None,
-    pattern: str = "cass_range=*",
-    verify: bool = True,
 ) -> DataFrame:
-    """Scan every sstable under ``path`` into a DataFrame — one task
-    per sstable, types from Statistics.db, names from the caller's
-    schema (see module docstring)."""
+    """Scan every sstable under ``path``'s ``cass_range=*`` directories
+    into a DataFrame — one verified task per sstable, types from
+    Statistics.db, names from the caller's schema (see module
+    docstring)."""
     from sstable_migrator_spark.sinks.sstable_format import (
         CQL_TYPES,
         SSTableReader,
@@ -89,7 +92,7 @@ def read_sstables(
     )
 
     clustering = list(clustering or [])
-    dirs = _sstable_dirs(path, pattern)
+    dirs = _sstable_dirs(path)
     # one unit per SSTABLE, not per directory: a row-capped range
     # (write_sstables max_rows_per_sstable) holds several generations
     # in one range dir; each is its own scan task. NOTE: all sstables
@@ -103,9 +106,12 @@ def read_sstables(
         if f.endswith("-TOC.txt")
     ]
 
-    # driver-side: one Statistics.db (KBs) fixes the types for all
+    # driver-side: one Statistics.db (KBs) fixes the types; every scan
+    # task checks its own header against it
     first = SSTableReader(*tables[0])
+    first_name = "/".join(tables[0])
     stats = first.stats
+    header = (stats["key_type"], stats["clustering_types"], stats["regular_columns"])
     key_cqls = [t.cql for t in first.key_types]
     clus_cqls = [_marshal_to_type(m).cql for m in stats["clustering_types"]]
     reg = [(n, _marshal_to_type(m).cql) for n, m in stats["regular_columns"]]
@@ -142,11 +148,6 @@ def read_sstables(
     def _scan(batches):
         import pyarrow as pa
 
-        from sstable_migrator_spark.sinks.sstable_format import (
-            _key_component_types,
-            read_sstable,
-        )
-
         def _batch(rows: list[list]) -> pa.RecordBatch:
             # typed arrays straight from the Python values: a double
             # NaN stays NaN, where a pandas hand-off would turn it NULL
@@ -158,12 +159,21 @@ def read_sstables(
         for batch in batches:
             for task in batch.to_pylist():
                 d, pref = task["dir"], task["prefix"]
-                got = read_sstable(d, prefix=pref, verify=verify)
-                if verify and not got["ok"]:
+                reader = SSTableReader(d, pref)
+                st = reader.stats
+                if (st["key_type"], st["clustering_types"], st["regular_columns"]) != header:
+                    raise ValueError(
+                        f"sstable {d}/{pref} declares key type, clustering "
+                        "types or regular columns that differ from the "
+                        f"first sstable's ({first_name}); one scan cannot "
+                        "mix table schemas"
+                    )
+                parts = list(reader.partitions())
+                if not reader.verify(parts)["ok"]:
                     raise ValueError(f"sstable integrity check failed: {d}")
-                key_ts = _key_component_types(got["stats"]["key_type"])
+                key_ts = reader.key_types
                 rows = []
-                for p in got["partitions"]:
+                for p in parts:
                     keyvals = [
                         _convert(t.cql, t.deser(b))
                         for t, b in zip(key_ts, p["key_components"])

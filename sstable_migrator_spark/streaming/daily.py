@@ -281,9 +281,10 @@ def routed_stream_sink(
     source: str = "stream",
 ):
     """T1 + §4 multi-sink, streaming edition: each micro-batch runs the
-    FULL job-2 pipeline (parse -> validate -> enrich -> route) once and
-    feeds all three tables from that single cached parse via
-    foreachBatch — the streaming twin of pipelines.daily.daily_upload_job.
+    FULL job-2 pipeline (parse -> validate -> enrich -> route, the
+    steps ``pipelines.daily.routed_upload`` holds) once and feeds all
+    three tables from that single cached parse via foreachBatch — the
+    streaming twin of pipelines.daily.daily_upload_job.
     Batch timestamps are pinned per micro-batch (deterministic within a
     batch, monotone across batches). Exactly-once comes from the
     checkpoint PLUS per-batch idempotent layout: each table's batch
@@ -294,37 +295,26 @@ def routed_stream_sink(
     rows on restart). Readers see batch_id as an ordinary partition
     column. At 100 TB this is the shape that matters: the expensive
     domain decomposition runs once per row, not once per sink."""
-    from sstable_migrator_spark.operators import ingest as _ingest
+    from datetime import datetime, timezone
+
+    from sstable_migrator_spark.pipelines.daily import routed_upload
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = _ingest.parse_and_route(batch_df, tld_set=tld_set, source=source)
-        parsed = parsed.persist()
-        try:
-            kept = parsed.filter(F.col("keep"))
-            a_rows = kept.filter(~F.col("is_cname"))
-            enriched = _ingest.geoip_enrich(a_rows, city_dim, asn_dim)
-            # ONE timestamp per micro-batch, captured here: the three
-            # table writes are three actions, and route_tables'
-            # current_timestamp() fallback would stamp each action (and
-            # any replay) differently — breaking both the documented
-            # per-batch determinism and cross-table consistency. Replays
-            # still re-stamp (server-time semantics, same as re-running
-            # the reference's java job); the batch_id layout keeps them
-            # idempotent at the row level.
-            from datetime import datetime, timezone
-
-            routed = _ingest.route_tables(
-                enriched.unionByName(
-                    kept.filter(F.col("is_cname")), allowMissingColumns=True
-                ),
-                batch_ts=datetime.now(timezone.utc),
-            )
+        # ONE timestamp per micro-batch, captured here: the three
+        # table writes are three actions, and route_tables'
+        # current_timestamp() fallback would stamp each action (and
+        # any replay) differently — breaking both the documented
+        # per-batch determinism and cross-table consistency. Replays
+        # still re-stamp (server-time semantics, same as re-running
+        # the reference's java job); the batch_id layout keeps them
+        # idempotent at the row level.
+        with routed_upload(
+            batch_df, city_dim, asn_dim, tld_set, source, datetime.now(timezone.utc)
+        ) as routed:
             for name, tdf in routed.items():
                 tdf.write.mode("overwrite").parquet(
                     f"{out_dir}/{name}/batch_id={batch_id}"
                 )
-        finally:
-            parsed.unpersist()
 
     return (
         stream.writeStream.foreachBatch(_write_batch)

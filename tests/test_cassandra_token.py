@@ -79,45 +79,6 @@ def test_token_column_matches_python(spark):
         assert got[d] == cassandra_token(d)
 
 
-def test_token_placement_layout(spark, tmp_path):
-    """token_placement=True writes ring-ordered files: every file's
-    token range is disjoint and internally sorted."""
-    from sstable_migrator_spark.sinks import cassandra_shaped_write
-
-    rows = [("dom%04d" % i, i % 7, "v%d" % i) for i in range(500)]
-    df = spark.createDataFrame(rows, ["domain", "bucket", "val"])
-    out = str(tmp_path / "cass")
-    cassandra_shaped_write(
-        df, out, ["domain"], ["val"], num_partitions=4, token_placement=True
-    )
-    import pyarrow.parquet as pq
-    import glob
-
-    files = sorted(glob.glob(f"{out}/part-*.parquet"))
-    assert len(files) >= 2
-    spans = []
-    for f in files:
-        toks = pq.read_table(f, columns=["cass_token"])["cass_token"].to_pylist()
-        if not toks:
-            continue
-        assert toks == sorted(toks)  # ring order inside the file
-        spans.append((min(toks), max(toks)))
-    spans.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(spans, spans[1:]):
-        assert hi1 <= lo2  # disjoint contiguous token ranges
-    # tokens are the real partitioner tokens
-    all_toks = dict(
-        (d, t)
-        for f in files
-        for d, t in zip(
-            pq.read_table(f, columns=["domain"])["domain"].to_pylist(),
-            pq.read_table(f, columns=["cass_token"])["cass_token"].to_pylist(),
-        )
-    )
-    for (d, _, _) in rows:
-        assert all_toks[d] == cassandra_token(d)
-
-
 def _norm(s: str) -> str:
     import re
 

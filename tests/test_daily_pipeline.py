@@ -8,6 +8,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from sstable_migrator_spark import schemas
 from sstable_migrator_spark.operators.resolve import fake_resolver, resolve_domains
 from sstable_migrator_spark.pipelines import daily_prepare_job, daily_upload_job
 from sstable_migrator_spark.sources import dims
@@ -84,12 +85,45 @@ def test_rate_limited_resolver_uses_every_slot(spark):
     assert sorted(limited.collect()) == sorted(unlimited.collect())
 
 
+def _stages_newest_first(spark):
+    """The engine's status store, newest stage first, once every
+    finished stage's metrics have reached it."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    gw = sc._gateway
+    return sc._jsc.sc().statusStore().stageList(
+        None, False, False, gw.new_array(gw.jvm.double, 0), None
+    ).iterator()
+
+
+def _last_stage_id(spark) -> int:
+    it = _stages_newest_first(spark)
+    return it.next().stageId() if it.hasNext() else -1
+
+
+def _shuffle_bytes_since(spark, after: int) -> int:
+    """Shuffle bytes written by the stages with an id above ``after``."""
+    total = 0
+    it = _stages_newest_first(spark)
+    while it.hasNext():
+        st = it.next()
+        if st.stageId() <= after:
+            break
+        total += st.shuffleWriteBytes()
+    return total
+
+
 def test_daily_upload_e2e(spark, tmp_path):
+    import glob
+
+    import pyarrow.parquet as pq
+
     doms = spark.createDataFrame(
         [(f"h{i}.site{i % 7}.example.io",) for i in range(100)], "domain string"
     )
     resolved = resolve_domains(doms)
     out_dir = str(tmp_path / "tables")
+    before = _last_stage_id(spark)
     routed = daily_upload_job(
         resolved,
         dims.synthetic_geoip_city(spark),
@@ -98,6 +132,8 @@ def test_daily_upload_e2e(spark, tmp_path):
         tld_set=["io", "com"],
         batch_ts="2024-06-30 00:00:00",
     )
+    # the side channel is a plain export: the call's stages shuffle nothing
+    assert _shuffle_bytes_since(spark, before) == 0
     n_a = routed["rdnsv4"].count()
     n_sub = routed["subdomains"].count()
     n_cn = routed["cnames"].count()
@@ -105,12 +141,26 @@ def test_daily_upload_e2e(spark, tmp_path):
     n_resolved = resolved.count()
     assert n_a + n_cn == n_resolved  # all valid rows routed exactly once
 
-    # written Cassandra-shaped: readable, same counts, PK columns present
+    # the K3 side channel: Snappy parquet per table, every routed row,
+    # columns in the reference's table order
+    for name, schema, n in (
+        ("rdnsv4", schemas.RDNSV4, n_a),
+        ("subdomains", schemas.SUBDOMAINS, n_sub),
+        ("cnames", schemas.CNAMES, n_cn),
+    ):
+        back = spark.read.parquet(f"{out_dir}/{name}")
+        assert back.columns == [f.name for f in schema.fields], name
+        assert back.count() == n, name
+        codecs = set()
+        for f in glob.glob(f"{out_dir}/{name}/part-*.parquet"):
+            md = pq.ParquetFile(f).metadata
+            codecs |= {
+                md.row_group(g).column(c).compression
+                for g in range(md.num_row_groups)
+                for c in range(md.num_columns)
+            }
+        assert codecs == ({"SNAPPY"} if n else set()), (name, codecs)
     rd = spark.read.parquet(f"{out_dir}/rdnsv4")
-    assert rd.count() == n_a
-    assert {"ip8", "ip16", "ip24", "ipAddress"} <= set(rd.columns)
-    cn = spark.read.parquet(f"{out_dir}/cnames")
-    assert cn.count() == n_cn
     # enrichment defaults: never-null country/asn (miss -> ''/0)
     assert rd.filter(F.col("country").isNull() | F.col("asn").isNull()).count() == 0
 

@@ -1,5 +1,5 @@
 """End-to-end ingest parity (SURVEY §3.1): routing, enrichment,
-upsert semantics, sorted cassandra-shaped writes."""
+upsert semantics."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import datetime
 
 from pyspark.sql import functions as F
 
-from sstable_migrator_spark import schemas, sinks
+from sstable_migrator_spark import schemas
 from sstable_migrator_spark.operators.dedup import (
     anti_join_history,
     upsert_latest,
@@ -106,17 +106,3 @@ def test_anti_join_history_window(spark):
         today, hist, as_of="2024-07-01").collect()}
     assert out == {"new.com", "seen-old.com"}
 
-
-def test_cassandra_shaped_write(spark, tmp_path):
-    parsed = parse_and_route(_records(spark), TLDS).persist()
-    tables = route_tables(parsed, batch_ts="2024-06-01 00:00:00")
-    path = str(tmp_path / "rdnsv4")
-    sinks.cassandra_shaped_write(
-        tables["rdnsv4"], path,
-        schemas.RDNSV4_PARTITION_KEY, schemas.RDNSV4_CLUSTERING,
-        num_partitions=4,
-    )
-    back = spark.read.parquet(path)
-    assert back.count() == 3
-    assert back.columns == [f.name for f in schemas.RDNSV4.fields]
-    parsed.unpersist()

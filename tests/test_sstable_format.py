@@ -670,8 +670,9 @@ def test_spill_mode_byte_identical(tmp_path, compression):
             generation=3,
             compression=compression,
             chunk_length=512 if compression else 16384,
-            spill_threshold_rows=thresh,
         )
+        if thresh:
+            w._SPILL_THRESHOLD_ROWS = thresh
         for r in rows:
             w.add_row(r)
         w.close()
@@ -685,9 +686,8 @@ def test_spill_mode_byte_identical(tmp_path, compression):
 def test_spill_roundtrip_and_cleanup(tmp_path):
     """Spilled write reads back verified (index/digest/bloom/crc) with
     every row present in token order, and the run tempdir is gone."""
-    w = SSTableWriter(
-        str(tmp_path), _clustered_table(), spill_threshold_rows=10
-    )
+    w = SSTableWriter(str(tmp_path), _clustered_table())
+    w._SPILL_THRESHOLD_ROWS = 10
     for i in range(137):
         w.add_row({"k": f"p{i % 31}", "c": i, "v": f"v{i}"})
     m = w.close()
@@ -705,11 +705,6 @@ def test_spill_roundtrip_and_cleanup(tmp_path):
     }
     assert len(cells) == 137
     assert cells[("p5", 36)] == "v36"
-
-
-def test_spill_threshold_validation(tmp_path):
-    with pytest.raises(ValueError, match="spill_threshold_rows"):
-        SSTableWriter(str(tmp_path), _tiny_table(), spill_threshold_rows=0)
 
 
 # ---------------------------------------------------------------------------
@@ -921,7 +916,9 @@ def test_spill_many_runs_bounded_fan_in(tmp_path):
     dirs = {}
     for label, thresh, fan in (("mem", None, 64), ("spill", 2, 4)):
         d = tmp_path / label
-        w = SSTableWriter(str(d), _clustered_table(), spill_threshold_rows=thresh)
+        w = SSTableWriter(str(d), _clustered_table())
+        if thresh:
+            w._SPILL_THRESHOLD_ROWS = thresh
         w._MAX_MERGE_FAN_IN = fan
         for r in rows:
             w.add_row(r)
@@ -941,7 +938,8 @@ def test_spill_failure_cleans_up(tmp_path):
         columns=[("k", "varchar"), ("n", "int")],
         partition_key=["k"], clustering=[],
     )
-    w = SSTableWriter(str(tmp_path), schema, spill_threshold_rows=5)
+    w = SSTableWriter(str(tmp_path), schema)
+    w._SPILL_THRESHOLD_ROWS = 5
     for i in range(20):
         w.add_row({"k": f"x{i}", "n": i})
     w.add_row({"k": "boom", "n": 1 << 40})  # overflows the int32 cell

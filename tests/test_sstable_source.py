@@ -69,3 +69,30 @@ def test_scan_validates_schema_names(spark, roundtrip):
 def test_scan_empty_dir_raises(spark, tmp_path):
     with pytest.raises(ValueError, match="no sstable directories"):
         read_sstables(spark, str(tmp_path), partition_key=["k"])
+
+
+@pytest.mark.parametrize(
+    "first_cols, second_cols",
+    [(["a"], ["a", "b"]), (["a", "b"], ["a"])],
+    ids=["extra", "missing"],
+)
+def test_scan_rejects_mixed_headers(spark, tmp_path, first_cols, second_cols):
+    """An sstable whose regular columns differ from the first one's
+    must fail its scan task, naming it — not lose its extra columns or
+    read back NULL for the ones it lacks."""
+    from sstable_migrator_spark.sinks.sstable_format import CqlTable, SSTableWriter
+
+    for rid, cols in ((0, first_cols), (1, second_cols)):
+        w = SSTableWriter(
+            str(tmp_path / f"cass_range={rid}"),
+            CqlTable(
+                keyspace="ks", table="t",
+                columns=[("k", "varchar")] + [(c, "int") for c in cols],
+                partition_key=["k"], clustering=[],
+            ),
+            generation=rid + 1,
+        )
+        w.add_row({"k": f"key{rid}", **{c: rid for c in cols}})
+        w.close()
+    with pytest.raises(Exception, match=r"sstable .*cass_range=1/nb-2-big.* differ"):
+        read_sstables(spark, str(tmp_path), partition_key=["k"]).collect()
