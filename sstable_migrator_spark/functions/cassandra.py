@@ -19,6 +19,10 @@ Algorithm facts, all from public sources:
   to the public mmh3 test vectors in tests).
 - Composite partition keys serialize each component as
   ``uint16 length + bytes + 0x00`` (CompositeType.build).
+- Cassandra hashes each component in its DECLARED CQL type's encoding
+  (a bigint holding 7 hashes 8 bytes), so the token functions take
+  encoded bytes or text and ``cassandra_token_col`` requires the key
+  columns' declared Spark types.
 
 Execution shape: tokens are computed in an Arrow UDF — one Python
 roundtrip per batch at write time only; query paths never pay it.
@@ -124,44 +128,21 @@ def cassandra_token_bytes(key: bytes) -> int:
     return token
 
 
-class CqlBigint(int):
-    """Marker: serialize this key component as CQL bigint (8-byte BE)
-    regardless of magnitude. Cassandra hashes the DECLARED type's
-    encoding — a bigint column holding 7 hashes 8 bytes, and the
-    magnitude heuristic below would pick 4, yielding a token that
-    disagrees with the cluster's ring placement."""
-
-
-class CqlInt(int):
-    """Marker: serialize as CQL int (4-byte BE) regardless of range."""
-
-
-def serialize_key(*components: str | bytes | int) -> bytes:
-    """CQL partition-key serialization.
-
-    Single component -> the component's raw CQL bytes. Composite key ->
+def serialize_key(*components: str | bytes) -> bytes:
+    """CQL partition-key serialization. Each component is its declared
+    CQL type's bytes (``sstable_format.CQL_TYPES[t].ser``) or text,
+    taken as UTF-8. Single component -> those bytes; composite key ->
     ``uint16_be(len) + bytes + 0x00`` per component (CompositeType).
-    text -> UTF-8; CqlInt -> 4-byte BE; CqlBigint -> 8-byte BE. A plain
-    python int falls back to the magnitude heuristic (4 bytes when it
-    fits) — ONLY safe when the CQL column really is `int`; wrap with
-    CqlBigint/CqlInt (or use cassandra_token_col, which maps the Spark
-    column type) whenever the declared type is known.
     """
 
-    def _raw(c: str | bytes | int) -> bytes:
+    def _raw(c: str | bytes) -> bytes:
         if isinstance(c, bytes):
             return c
         if isinstance(c, str):
             return c.encode("utf-8")
-        if isinstance(c, CqlBigint):
-            return struct.pack(">q", int(c))
-        if isinstance(c, CqlInt):
-            return struct.pack(">i", int(c))
-        if isinstance(c, int):
-            if -(1 << 31) <= c < 1 << 31:
-                return struct.pack(">i", c)
-            return struct.pack(">q", c)
-        raise TypeError(f"unsupported key component type {type(c)}")
+        raise TypeError(
+            f"key component must be encoded bytes or text, not {type(c).__name__}"
+        )
 
     if len(components) == 1:
         return _raw(components[0])
@@ -172,58 +153,35 @@ def serialize_key(*components: str | bytes | int) -> bytes:
     return out
 
 
-def cassandra_token(*components: str | bytes | int) -> int:
+def cassandra_token(*components: str | bytes) -> int:
     return cassandra_token_bytes(serialize_key(*components))
 
 
-def _undeclared_component(v: str | bytes | int) -> str | bytes | int:
-    """A key component with no declared Spark type: text and bytes pass
-    through, a plain int takes ``serialize_key``'s magnitude heuristic,
-    and anything else is refused rather than guessed."""
-    if isinstance(v, (str, bytes)) or (
-        isinstance(v, int) and not isinstance(v, bool)
-    ):
-        return v
-    raise ValueError(
-        f"partition key component of type {type(v).__name__} needs an "
-        "explicit spark_types entry; refusing to guess its CQL serialization"
-    )
-
-
-def cassandra_token_col(
-    *cols: Column | str, spark_types: list[str] | None = None
-) -> Column:
+def cassandra_token_col(*cols: Column | str, spark_types: list[str]) -> Column:
     """Column expression computing the Cassandra token of a partition
-    key. With ``spark_types`` (the simpleString of each key column)
-    every component serializes as the CQL type ``write_sstables``
-    writes that column as — ``sstable_format.SPARK_TO_CQL`` then that
-    type's ``ser`` and ``serialize_key``, the same path
-    ``CqlTable.serialize_partition_key`` takes — so the routed token is
-    the written key's token by construction (a bigint holding 7 hashes
-    8 bytes, a timestamp its millis). A declared type with no CQL
-    mapping raises a ValueError naming it. Without ``spark_types``,
-    strings and bytes pass through, a plain int takes the magnitude
-    heuristic (which only matches a cluster whose column is CQL
-    ``int``) and any other value raises. NULL/NaN key components
-    raise: Cassandra rejects null partition keys, and silently hashing
-    a sentinel would place the row on a real-but-wrong node. Runs as
-    an Arrow UDF over the values ``RecordBatch.to_pylist`` gives the
-    writer; write-path only."""
+    key. ``spark_types`` (the simpleString of each key column) declares
+    the CQL type every component serializes as: the one
+    ``write_sstables`` writes that column as, via
+    ``sstable_format.SPARK_TO_CQL`` then that type's ``ser`` and
+    ``serialize_key`` — the path ``CqlTable.serialize_partition_key``
+    takes — so the routed token is the written key's token by
+    construction (a bigint holding 7 hashes 8 bytes, a timestamp its
+    millis). A declared type with no CQL mapping raises a ValueError
+    naming it. NULL/NaN key components raise: Cassandra rejects null
+    partition keys, and silently hashing a sentinel would place the
+    row on a real-but-wrong node. Runs as an Arrow UDF over the values
+    ``RecordBatch.to_pylist`` gives the writer; write-path only."""
     from sstable_migrator_spark.sinks.sstable_format import CQL_TYPES, SPARK_TO_CQL
 
-    types = list(spark_types) if spark_types else [None] * len(cols)
-    if len(types) != len(cols):
+    if len(spark_types) != len(cols):
         raise ValueError("spark_types must match the key column count")
-    for t in types:
-        if t is not None and t not in SPARK_TO_CQL:
+    for t in spark_types:
+        if t not in SPARK_TO_CQL:
             raise ValueError(
                 f"unsupported partition-key type {t!r}: cassandra_token_col "
                 f"serializes {sorted(SPARK_TO_CQL)}"
             )
-    sers = [
-        CQL_TYPES[SPARK_TO_CQL[t]].ser if t else _undeclared_component
-        for t in types
-    ]
+    sers = [CQL_TYPES[SPARK_TO_CQL[t]].ser for t in spark_types]
 
     @arrow_udf("long")
     def _token(*arrays: pa.Array) -> pa.Array:

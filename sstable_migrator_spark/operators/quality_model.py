@@ -398,7 +398,9 @@ def confusion_report(
     dozens of rows). Rates use integral DIV over DECIMAL(38,0) — the
     float-`/`-never-touches-a-hashed-column discipline. Output is
     |observed cells| rows; absent cells are honest zeros by omission
-    (a class pair never confused does not exist in the report)."""
+    (a class pair never confused does not exist in the report). A cell
+    whose truth or pred is NULL is counted in the other side's total
+    but not emitted, exactly as the cells-join-totals form does."""
     cells = (
         df.select(
             F.col(truth_col).cast("string").alias("truth"),
@@ -416,6 +418,8 @@ def confusion_report(
             "col_total",
             F.sum("n").over(Window.partitionBy("pred")).cast("long"),
         )
+        # after the windows, so NULL-keyed cells still count in the totals
+        .filter(F.col("truth").isNotNull() & F.col("pred").isNotNull())
         .selectExpr(
             "truth",
             "pred",

@@ -18,7 +18,7 @@ patterns, and a single cached parse feeding the three tables.
 Job 2 has two outputs, as in the reference: the SSTables
 (``bulk_load_job`` -> ``sinks.ring.write_sstables``, the only code that
 places rows for Cassandra) and the K3 Parquet side channel
-(``daily_upload_job(out_dir=...)``, plain Snappy files like
+(``daily_upload_job``, plain Snappy files under ``out_dir`` like
 parquet_converter/main.go — no shuffle, no sort).
 
 At scale: history is date-partitioned (partition pruning bounds the
@@ -108,26 +108,24 @@ def daily_upload_job(
     resolved: DataFrame,
     city_dim: DataFrame,
     asn_dim: DataFrame,
-    out_dir: str | None = None,
+    out_dir: str,
     tld_set: Iterable[str] | None = None,
     source: str = "certstream",
     batch_ts=None,
-) -> dict[str, DataFrame]:
-    """Job 2: resolved massdns triples -> validated/enriched/routed
-    tables, optionally exported as the K3 Parquet side channel.
-
-    Returns the three table DataFrames; when ``out_dir`` is given they
-    are also written with ``sinks.parquet_export`` (Snappy, 128 MB row
-    groups) under ``{out_dir}/{table}``, columns in the reference's
-    table order (``schemas.RDNSV4``/``SUBDOMAINS``/``CNAMES``). The
-    writes keep the rows where they are: Cassandra placement is
-    ``bulk_load_job``'s job, which routes by token itself.
+) -> None:
+    """Job 2's K3 export: resolved massdns triples ->
+    validated/enriched/routed tables, written with
+    ``sinks.parquet_export`` (Snappy, 128 MB row groups) under
+    ``{out_dir}/{table}``, columns in the reference's table order
+    (``schemas.RDNSV4``/``SUBDOMAINS``/``CNAMES``). The three writes
+    share one cached parse, unpersisted on return, so nothing is
+    returned: read the tables back from ``out_dir``. The writes keep
+    the rows where they are: Cassandra placement is ``bulk_load_job``'s
+    job, which routes by token itself.
     """
     with routed_upload(resolved, city_dim, asn_dim, tld_set, source, batch_ts) as routed:
-        if out_dir:
-            for name, df in routed.items():
-                parquet_export(df, f"{out_dir}/{name}")
-    return routed
+        for name, df in routed.items():
+            parquet_export(df, f"{out_dir}/{name}")
 
 
 def bulk_load_job(

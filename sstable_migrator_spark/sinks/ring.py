@@ -13,13 +13,11 @@ file/stream copy with no re-routing:
 - ``replica_plan`` — per-range RF endpoints, SimpleStrategy (next RF
   distinct nodes clockwise) or rack-aware (NetworkTopologyStrategy's
   single-DC behavior: prefer unseen racks while any remain);
-- ``ring_placement_write`` — routes every row to its owning range in
-  ONE Arrow pass (vectorized ``np.searchsorted`` over the broadcast
-  boundary array — O(log vnodes) per row, no join), writes one
-  ring-ordered directory per range (``cass_range=<id>/``, rows sorted
-  by token then clustering, exactly the in-PK-order stream the SSTable
-  format wants), and emits a JSON stream manifest mapping every range
-  to its endpoints — the analog of sstableloader's stream plan.
+- ``write_sstables`` — routes every row to its owning range by Murmur3
+  token (``np.searchsorted`` over the broadcast boundaries, no join),
+  writes one BIG-format SSTable per range (``cass_range=<id>/``) and a
+  JSON stream manifest mapping ranges to endpoints — the analog of
+  sstableloader's stream plan.
 
 Scale shape: the ring is thousands of entries at most (nodes x
 vnodes), broadcast by closure; row routing is map-only; the only
@@ -50,7 +48,6 @@ __all__ = [
     "build_ring",
     "replica_plan",
     "ring_range_col",
-    "ring_placement_write",
     "write_sstables",
     "compact_stream_batches",
     "compact_ranges",
@@ -157,51 +154,6 @@ def ring_range_col(ring: list[tuple[int, str]], token_col: Column | str) -> Colu
     return _rng(F.col(token_col) if isinstance(token_col, str) else token_col)
 
 
-def _route(
-    df: DataFrame, partition_key: list[str], ring: list[tuple[int, str]]
-) -> DataFrame:
-    """``df`` plus its rows' ``cass_token`` (keyed by each partition-key
-    column's declared type) and owning ``cass_range``."""
-    return df.withColumn(
-        "cass_token",
-        cassandra_token_col(
-            *partition_key,
-            spark_types=[df.schema[c].dataType.simpleString() for c in partition_key],
-        ),
-    ).withColumn("cass_range", ring_range_col(ring, "cass_token"))
-
-
-def ring_placement_write(
-    df: DataFrame,
-    path: str,
-    partition_key: list[str],
-    clustering: list[str],
-    ring: list[tuple[int, str]],
-    rf: int = 3,
-    racks: dict[str, str] | None = None,
-    mode: str = "overwrite",
-) -> list[dict]:
-    """Route every row to its owning token range and write one
-    ring-ordered directory per range plus a stream manifest
-    (``_stream_plan.json``) mapping ranges to RF endpoints. The
-    bulk-load step then streams ``cass_range=<id>/`` to exactly
-    ``manifest[id]["endpoints"]`` — sstableloader's job, precomputed.
-    Returns the plan."""
-    ring = sorted(ring)
-    plan = replica_plan(ring, rf=rf, racks=racks)
-    (
-        _route(df, partition_key, ring)
-        .repartition(len(ring), "cass_range")
-        .sortWithinPartitions("cass_range", "cass_token", *clustering)
-        .write.mode(mode)
-        .partitionBy("cass_range")
-        .parquet(path)
-    )
-    with open(os.path.join(path, "_stream_plan.json"), "w") as fh:
-        json.dump({"rf": rf, "rack_aware": racks is not None, "ranges": plan}, fh)
-    return plan
-
-
 def write_sstables(
     df: DataFrame,
     path: str,
@@ -285,7 +237,15 @@ def write_sstables(
     plan = replica_plan(ring, rf=rf, racks=racks)
     os.makedirs(path, exist_ok=True)
 
-    routed_base = _route(df, partition_key, ring)
+    # each row's token (keyed by the partition-key columns' declared
+    # types) and owning range
+    routed_base = df.withColumn(
+        "cass_token",
+        cassandra_token_col(
+            *partition_key,
+            spark_types=[df.schema[c].dataType.simpleString() for c in partition_key],
+        ),
+    ).withColumn("cass_range", ring_range_col(ring, "cass_token"))
 
     if max_rows_per_sstable is None:
         routed = routed_base.withColumn("cass_sub", F.lit(0)).repartition(

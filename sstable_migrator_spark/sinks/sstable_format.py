@@ -1000,9 +1000,10 @@ class SSTableWriter:
     Rows are sorted by (token, key bytes, clustering) at close — the
     DecoratedKey order Murmur3Partitioner gives CQLSSTableWriter — so
     callers may feed unsorted batches (CQLSSTableWriter's unsorted mode
-    does exactly this buffer-then-sort). All rows share one write
-    timestamp (micros), matching the reference's batch-stamped
-    ``toTimestamp(now())`` semantics (App.java INSERTs).
+    does exactly this buffer-then-sort). Rows carry one write
+    timestamp (micros) unless ``add_row`` stamps them, matching the
+    reference's batch-stamped ``toTimestamp(now())`` semantics
+    (App.java INSERTs).
 
     The buffer holds at most ``_SPILL_THRESHOLD_ROWS`` rows: each time
     it fills, the rows are pre-sorted and spilled to a pickle run file
@@ -1046,8 +1047,9 @@ class SSTableWriter:
         self._rows: list[dict] = []
         self._runs: list[str] = []
         self._tmpdir: str | None = None
-        self._min_ts = write_timestamp_us
-        self._max_ts = write_timestamp_us
+        # over the added rows' stamps; close() falls back to self.ts
+        self._min_ts: int | None = None
+        self._max_ts: int | None = None
 
     def add_row(self, row: dict, timestamp_us: int | None = None) -> None:
         """Buffer one row. ``timestamp_us`` optionally stamps THIS row
@@ -1056,7 +1058,9 @@ class SSTableWriter:
         writer's ``write_timestamp_us``. The format encodes each row's
         delta against the sstable-wide minimum (EncodingStats), which
         this writer tracks as rows arrive."""
-        if timestamp_us is not None:
+        if timestamp_us is None:
+            timestamp_us = self.ts
+        else:
             if timestamp_us < TIMESTAMP_EPOCH_US:
                 raise ValueError(
                     f"row timestamp {timestamp_us} predates the "
@@ -1064,10 +1068,10 @@ class SSTableWriter:
                 )
             row = dict(row)
             row[_ROW_TS_KEY] = timestamp_us
-            if timestamp_us < self._min_ts:
-                self._min_ts = timestamp_us
-            if timestamp_us > self._max_ts:
-                self._max_ts = timestamp_us
+        if self._min_ts is None or timestamp_us < self._min_ts:
+            self._min_ts = timestamp_us
+        if self._max_ts is None or timestamp_us > self._max_ts:
+            self._max_ts = timestamp_us
         self._rows.append(row)
         if len(self._rows) >= self._SPILL_THRESHOLD_ROWS:
             self._spill_run()
@@ -1339,6 +1343,8 @@ class SSTableWriter:
 
     def close(self) -> dict:
         os.makedirs(self.dir, exist_ok=True)
+        if self._min_ts is None:
+            self._min_ts = self._max_ts = self.ts
         prefix = f"{VERSION}-{self.gen}-big-"
 
         # The data file streams to disk as the merged rows arrive

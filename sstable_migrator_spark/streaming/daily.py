@@ -381,51 +381,6 @@ def ttl_dedup_stream(
     )
 
 
-def write_ring_placed(
-    stream: DataFrame,
-    path: str,
-    checkpoint: str,
-    partition_key: list[str],
-    clustering: list[str],
-    ring: list[tuple[int, str]],
-    rf: int = 3,
-    racks: dict[str, str] | None = None,
-) -> "object":
-    """Streaming twin of the bulk-load layout (K1/K2 + T1): each
-    micro-batch routes through ``sinks.ring.ring_placement_write``, so
-    the incremental pipeline lands data ALREADY ring-placed — per
-    token-range directories in ring order plus the stream manifest —
-    instead of accumulating a staging area that needs a batch re-sort
-    before sstableloader. foreachBatch is the right tool: the ring
-    write needs its own repartition + partitionBy, which the plain
-    streaming parquet sink cannot express. Each batch lands in its own
-    ``batch_id=<n>/`` subtree written with overwrite, so a replayed
-    batch REWRITES its directory instead of double-appending —
-    idempotence from the checkpointed batch id, the standard foreachBatch
-    exactly-once recipe. The loader streams the union of batch subtrees
-    per range; compact with sinks.compact_small_files on its cadence."""
-    from sstable_migrator_spark.sinks.ring import ring_placement_write
-
-    def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        ring_placement_write(
-            batch_df,
-            f"{path}/batch_id={batch_id}",
-            partition_key=partition_key,
-            clustering=clustering,
-            ring=ring,
-            rf=rf,
-            racks=racks,
-            mode="overwrite",
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def write_sstable_stream(
     stream: DataFrame,
     path: str,
@@ -447,10 +402,11 @@ def write_sstable_stream(
     daily_all_upload.sh), as a single checkpointed streaming query.
 
     foreachBatch + ``sinks.ring.write_sstables`` per batch; each batch
-    lands under ``batch_id=<n>/`` (overwrite on replay — the
-    checkpointed-batch-id idempotence recipe, same as
-    write_ring_placed), holding one sstable per token range with the
-    stream manifest beside it. The loader ships the union of batch
+    lands under ``batch_id=<n>/``, holding one sstable per token range
+    with the stream manifest beside it. A replayed batch id removes and
+    rewrites its directory instead of double-appending — idempotence
+    from the checkpointed batch id, the standard foreachBatch
+    exactly-once recipe. The loader ships the union of batch
     subtrees per range; Cassandra compaction merges them on arrival,
     exactly as it does for any bulk load done in waves."""
     from sstable_migrator_spark.sinks.ring import write_sstables

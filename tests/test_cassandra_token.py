@@ -64,8 +64,6 @@ def test_composite_key_serialization():
     # single component: raw bytes; composite: u16len + bytes + 0x00
     assert serialize_key("ab") == b"ab"
     assert serialize_key("ab", "c") == b"\x00\x02ab\x00\x00\x01c\x00"
-    assert serialize_key(7) == b"\x00\x00\x00\x07"
-    assert serialize_key(1 << 40) == (1 << 40).to_bytes(8, "big")
 
 
 def test_token_column_matches_python(spark):
@@ -73,7 +71,10 @@ def test_token_column_matches_python(spark):
     df = spark.createDataFrame(rows, ["domain"])
     got = {
         r["domain"]: r["tok"]
-        for r in df.select("domain", cassandra_token_col("domain").alias("tok")).collect()
+        for r in df.select(
+            "domain",
+            cassandra_token_col("domain", spark_types=["string"]).alias("tok"),
+        ).collect()
     }
     for (d,) in rows:
         assert got[d] == cassandra_token(d)
@@ -153,25 +154,19 @@ def test_ddl_rejects_unknown_key_or_type(spark):
 
 def test_declared_type_width_controls_token(spark):
     """Cassandra hashes the DECLARED type's encoding: a bigint column
-    holding a small value must token as 8 bytes. The magnitude
-    heuristic would pick 4 and place the row on the wrong node."""
+    holding a small value must token as 8 bytes. Its 4-byte int
+    encoding tokens differently and would place the row on the wrong
+    node."""
     import struct
 
     from sstable_migrator_spark.functions.cassandra import (
-        CqlBigint,
-        CqlInt,
-        cassandra_token,
         cassandra_token_bytes,
         cassandra_token_col,
     )
 
-    assert cassandra_token(CqlBigint(7)) == cassandra_token_bytes(
-        struct.pack(">q", 7)
+    assert cassandra_token_bytes(struct.pack(">q", 7)) != cassandra_token_bytes(
+        struct.pack(">i", 7)
     )
-    assert cassandra_token(CqlInt(7)) == cassandra_token_bytes(struct.pack(">i", 7))
-    assert cassandra_token(CqlBigint(7)) != cassandra_token(CqlInt(7))
-    # plain int heuristic == CqlInt for small values (back-compat)
-    assert cassandra_token(7) == cassandra_token(CqlInt(7))
 
     df = spark.createDataFrame([(7,), (1 << 40,)], "id long")
     toks = {
@@ -181,8 +176,8 @@ def test_declared_type_width_controls_token(spark):
             cassandra_token_col("id", spark_types=["bigint"]).alias("t"),
         ).collect()
     }
-    assert toks[7] == cassandra_token(CqlBigint(7))
-    assert toks[1 << 40] == cassandra_token(CqlBigint(1 << 40))
+    assert toks[7] == cassandra_token_bytes(struct.pack(">q", 7))
+    assert toks[1 << 40] == cassandra_token_bytes(struct.pack(">q", 1 << 40))
 
     # the SSTable writer's own serialization agrees (same 8-byte form)
     from sstable_migrator_spark.sinks.sstable_format import CqlTable
@@ -273,25 +268,3 @@ def test_float_has_no_cql_mapping(spark, tmp_path):
         write_sstables(df, str(tmp_path / "out"), keyspace="k", table="t",
                        partition_key=["k"], clustering=[],
                        ring=build_ring(["n1"], vnodes_per_node=1), rf=1)
-
-
-def test_token_col_undeclared_components(spark):
-    """Without spark_types: text and bytes hash as-is, a plain int takes
-    the magnitude heuristic (4 bytes when it fits, else 8), and a
-    boolean is refused rather than guessed."""
-    df = spark.createDataFrame(
-        [("k", b"\xff\x00", 7, 1 << 40)], "s string, b binary, i bigint, j bigint"
-    )
-    row = df.select(
-        cassandra_token_col("s", "b", "i").alias("t3"),
-        cassandra_token_col("j").alias("tj"),
-    ).collect()[0]
-    assert row["t3"] == cassandra_token("k", b"\xff\x00", 7)
-    assert row["t3"] == cassandra_token_bytes(
-        serialize_key(b"k", b"\xff\x00", b"\x00\x00\x00\x07")
-    )
-    assert row["tj"] == cassandra_token_bytes((1 << 40).to_bytes(8, "big"))
-
-    flags = spark.createDataFrame([(True,)], "f boolean")
-    with pytest.raises(Exception, match="spark_types"):
-        flags.select(cassandra_token_col("f")).collect()

@@ -277,3 +277,53 @@ def test_confusion_report_planted(spark):
     assert rows[("fr", "en")]["row_total"] == 1
     # row totals partition the corpus
     assert sum(r["n"] for r in rows.values()) == 7
+
+
+def test_confusion_report_null_cells_match_join_form(spark):
+    """A NULL truth or pred counts toward the other side's total but
+    its own cell is not emitted: the result equals the cells-join-
+    totals form (q253's oracle shape) run in DuckDB on the same rows."""
+    import duckdb
+
+    from sstable_migrator_spark.operators.quality_model import (
+        confusion_report,
+    )
+
+    data = (
+        [("en", "en")] * 3 + [("en", "de"), ("de", "de"), ("de", "en")]
+        + [(None, "en"), ("de", None)]
+    )
+    got = sorted(
+        (tuple(r) for r in confusion_report(
+            spark.createDataFrame(data, "truth string, pred string"),
+            "truth", "pred",
+        ).collect()),
+        key=repr,
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (truth VARCHAR, pred VARCHAR)")
+    con.executemany("INSERT INTO t VALUES (?, ?)", data)
+    want = sorted(con.execute("""
+        WITH cells AS (SELECT truth, pred, CAST(count(*) AS BIGINT) AS n
+                       FROM t GROUP BY 1, 2),
+        r AS (SELECT truth, CAST(sum(n) AS BIGINT) AS row_total
+              FROM cells GROUP BY 1),
+        c AS (SELECT pred, CAST(sum(n) AS BIGINT) AS col_total
+              FROM cells GROUP BY 1)
+        SELECT cells.truth, cells.pred, cells.n, r.row_total, c.col_total,
+               CAST(cells.truth = cells.pred AS INT) AS is_diag,
+               CAST((1000000 * CAST(cells.n AS HUGEINT)) // r.row_total
+                    AS BIGINT) AS recall_ppm,
+               CAST((1000000 * CAST(cells.n AS HUGEINT)) // c.col_total
+                    AS BIGINT) AS precision_ppm
+        FROM cells
+        JOIN r ON r.truth = cells.truth
+        JOIN c ON c.pred = cells.pred
+    """).fetchall(), key=repr)
+    con.close()
+    assert got == want
+    # the NULL cells still count: de's row total includes ("de", None),
+    # en's column total includes (None, "en")
+    assert ("de", "de", 1, 3, 2, 1, 333333, 500000) in got
+    assert ("en", "en", 3, 4, 5, 1, 750000, 600000) in got
+    assert not any(r[0] is None or r[1] is None for r in got)

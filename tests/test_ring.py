@@ -16,7 +16,6 @@ from sstable_migrator_spark.sinks.ring import (
     MIN_TOKEN,
     build_ring,
     replica_plan,
-    ring_placement_write,
 )
 
 
@@ -76,37 +75,6 @@ def test_replica_plan_rejects_impossible_rf():
         replica_plan([(0, "a"), (10, "b")], rf=3)
 
 
-def test_ring_placement_write_layout(spark, tmp_path):
-    ring = build_ring(["n1", "n2", "n3"], vnodes_per_node=4)
-    df = spark.createDataFrame(
-        [(f"dom{i}.example", i % 7, f"p{i}") for i in range(300)],
-        "domain string, shard int, payload string",
-    )
-    out = str(tmp_path / "ring_out")
-    plan = ring_placement_write(
-        df, out, partition_key=["domain"], clustering=["shard"], ring=ring, rf=2
-    )
-    manifest = json.load(open(f"{out}/_stream_plan.json"))
-    assert manifest["rf"] == 2 and len(manifest["ranges"]) == 12
-    assert manifest["ranges"] == plan
-    by_id = {p["range_id"]: p for p in plan}
-
-    seen = 0
-    for d in glob.glob(f"{out}/cass_range=*"):
-        rid = int(d.rsplit("=", 1)[1])
-        part = spark.read.parquet(d).collect()
-        seen += len(part)
-        toks = [r["cass_token"] for r in part]
-        for r in part:
-            # routed token is the real Murmur3 token of the key and
-            # falls inside the manifest's range bounds
-            assert r["cass_token"] == cassandra_token(r["domain"])
-            assert _owns(by_id[rid], r["cass_token"])
-        # file is ring-ordered: sorted by token (then clustering)
-        assert toks == sorted(toks)
-    assert seen == 300
-
-
 def test_replica_plan_properties_large_ring():
     """Property check over a realistic ring (6 nodes x 16 vnodes, 3
     racks): every range has exactly RF distinct endpoints, the owner
@@ -150,6 +118,9 @@ def test_write_sstables_end_to_end(spark, tmp_path):
         df, str(tmp_path / "out"), keyspace="ferret", table="cnames",
         partition_key=["domain"], clustering=[], ring=ring, rf=2,
     )
+    with open(tmp_path / "out" / "_stream_plan.json") as fh:
+        manifest = json.load(fh)
+    assert manifest["rf"] == 2 and manifest["ranges"] == plan
     by_id = {p["range_id"]: p for p in plan}
 
     seen = {}
@@ -165,6 +136,7 @@ def test_write_sstables_end_to_end(spark, tmp_path):
         for p in got["partitions"]:
             assert _owns(by_id[rid], p["token"])
             dom = p["key_components"][0].decode()
+            assert p["token"] == cassandra_token(dom)
             assert dom not in seen
             seen[dom] = p["rows"][0]["cells"]
     assert len(seen) == 200

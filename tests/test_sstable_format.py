@@ -177,6 +177,33 @@ def test_statistics_header_golden(tmp_path):
     assert ldt_delta == 0x7FFFFFFF - 1442880000
 
 
+def test_row_stamps_set_timestamp_bounds(tmp_path):
+    """Every row brings its own stamp, all later than the writer's
+    default: the header's EncodingStats minimum and StatsMetadata's
+    min/max are the rows' stamps (not the unused writer stamp), and
+    each row reads back with its own."""
+    from sstable_migrator_spark.sinks.sstable_format import _parse_statistics
+
+    lo, hi = 1718000000000000, 1718000000000005
+    w = SSTableWriter(str(tmp_path), _tiny_table())
+    w.add_row({"k": "a", "v": "x"}, timestamp_us=hi)
+    w.add_row({"k": "b", "v": "y"}, timestamp_us=lo)
+    m = w.close()
+    parsed = _parse_statistics(
+        (tmp_path / f"{m['prefix']}-Statistics.db").read_bytes()
+    )
+    assert parsed["min_timestamp_us"] == lo  # HEADER
+    st = parsed["stats_metadata"]
+    assert st["min_timestamp_us"] == lo and st["max_timestamp_us"] == hi
+    got = read_sstable(str(tmp_path))
+    assert got["ok"]
+    stamps = {
+        p["key_components"][0]: [r["timestamp_us"] for r in p["rows"]]
+        for p in got["partitions"]
+    }
+    assert stamps == {b"a": [hi], b"b": [lo]}
+
+
 # ---------------------------------------------------------------------------
 # round-trip on the three reference table shapes
 # ---------------------------------------------------------------------------

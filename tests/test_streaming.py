@@ -241,62 +241,6 @@ def test_ttl_dedup_stream(spark, tmp_path):
         spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
 
 
-def test_write_ring_placed_stream(spark, tmp_path):
-    """Streaming ring-placed sink: micro-batches land already routed to
-    token ranges (batch_id=N/cass_range=K layout), tokens in-range per
-    the manifest, and a rerun of the same availableNow drain does not
-    duplicate rows (batch-dir overwrite idempotence)."""
-    import glob
-    import json
-
-    from sstable_migrator_spark.functions.cassandra import cassandra_token
-    from sstable_migrator_spark.sinks.ring import build_ring
-    from sstable_migrator_spark.streaming.daily import write_ring_placed
-
-    src = tmp_path / "src"
-    src.mkdir()
-    (src / "a.csv").write_text(
-        "".join(f"dom{i}.example,{i}\n" for i in range(50))
-    )
-    ring = build_ring(["n1", "n2"], vnodes_per_node=4)
-    out = str(tmp_path / "ring_out")
-    ckpt = str(tmp_path / "ckpt")
-
-    stream = (
-        spark.readStream.schema("domain string, shard int")
-        .csv(str(src))
-    )
-    write_ring_placed(
-        stream, out, ckpt, partition_key=["domain"], clustering=["shard"],
-        ring=ring, rf=2,
-    ).awaitTermination(120)
-
-    df = spark.read.parquet(out)
-    assert df.count() == 50
-    manifest = json.load(open(glob.glob(f"{out}/batch_id=*/_stream_plan.json")[0]))
-    by_id = {p["range_id"]: p for p in manifest["ranges"]}
-    for r in df.collect():
-        assert r["cass_token"] == cassandra_token(r["domain"])
-    for d in glob.glob(f"{out}/batch_id=*/cass_range=*"):
-        rid = int(d.rsplit("=", 1)[1])
-        ent = by_id[rid]
-        for r in spark.read.parquet(d).collect():
-            tok = r["cass_token"]
-            ok = (tok > ent["start"] or tok <= ent["end"]) if ent["wraps"] \
-                else (ent["start"] < tok <= ent["end"])
-            assert ok
-
-    # drain again with the same checkpoint: no new data -> no dupes
-    stream2 = (
-        spark.readStream.schema("domain string, shard int").csv(str(src))
-    )
-    write_ring_placed(
-        stream2, out, ckpt, partition_key=["domain"], clustering=["shard"],
-        ring=ring, rf=2,
-    ).awaitTermination(120)
-    assert spark.read.parquet(out).count() == 50
-
-
 def test_streaming_near_dup_across_batches(spark, tmp_path):
     """Cross-batch near-dup: a doc arriving in a LATER availableNow run
     (fresh query, same checkpoint) is flagged against a signature
@@ -500,6 +444,16 @@ def test_write_sstable_stream(spark, tmp_path):
     assert len(glob.glob(f"{out}/batch_id=*")) == 2
     # each batch dir carries its own stream manifest
     assert len(glob.glob(f"{out}/batch_id=*/_stream_plan.json")) == 2
+
+    # drain again with the same checkpoint and no new files: no new
+    # batch dir, no duplicated rows
+    tick()
+    assert len(glob.glob(f"{out}/batch_id=*")) == 2
+    assert sum(
+        len(p["rows"])
+        for d in glob.glob(f"{out}/batch_id=*/cass_range=*")
+        for p in read_sstable(d)["partitions"]
+    ) == 40
 
 
 def test_interval_stream_join_multikey_inner(spark, tmp_path):
