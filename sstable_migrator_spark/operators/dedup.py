@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from sstable_migrator_spark.functions import text as TX
 from sstable_migrator_spark.functions import vectors as VX
+from sstable_migrator_spark.operators.graph import connected_components
 
 # --- reference-surface dedup ----------------------------------------------
 
@@ -226,6 +227,29 @@ def _band_explode(
     ).select(id_col, *extra, "signature", "bb.band", "bb.bucket")
 
 
+def _first_band(sig_a, sig_b, bands: int, rows_per_band: int):
+    """The FIRST band whose signature slices are equal. Every LSH join
+    keeps a colliding pair only at this band instead of paying a
+    dropDuplicates shuffle over the candidate set."""
+    first = F.lit(bands - 1)
+    for bi in range(bands - 2, -1, -1):
+        s = bi * rows_per_band + 1
+        same = F.slice(sig_a, s, rows_per_band) == F.slice(sig_b, s, rows_per_band)
+        first = F.when(same, F.lit(bi)).otherwise(first)
+    return first
+
+
+def _est_jaccard(sig_a, sig_b, num_hashes: int):
+    """Signature-estimated Jaccard: the share of positions where the
+    two signatures agree, as one codegen'd sum (no per-element lambda).
+    A NULL position (a NULL text's signature) counts as a non-match."""
+    hits = sum(
+        F.coalesce((sig_a[i] == sig_b[i]).cast("int"), F.lit(0))
+        for i in range(num_hashes)
+    )
+    return hits / F.lit(float(num_hashes))
+
+
 def banded_minhash(
     docs: DataFrame,
     text_col: str = "text",
@@ -365,7 +389,7 @@ def minhash_lsh_pairs(
     connectivity instead of dropping it: buckets over the cap emit
     STAR pairs (the bucket's min-id member vs every other member,
     O(B) per bucket) instead of all C(B,2) pairs. Downstream
-    clustering (``dup_clusters``) recovers the same components —
+    clustering (``duplicate_clusters``) recovers the same components —
     star edges connect exactly the docs the clique edges did; what's
     traded away is exhaustive pair ENUMERATION inside hot buckets.
     The drop rule, exactly: every pair is emitted only at its FIRST
@@ -410,22 +434,13 @@ def minhash_lsh_pairs(
         & (F.col("a.bucket") == F.col("b.bucket"))
         & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
     )
-    # Keep each colliding pair only at its FIRST matching band (slice
-    # comparison on the carried signatures) instead of paying a
-    # dropDuplicates shuffle over the candidate set.
-    def _slice_match(bi: int):
-        sa = F.slice(F.col("a.signature"), bi * rows_per_band + 1, rows_per_band)
-        sb = F.slice(F.col("b.signature"), bi * rows_per_band + 1, rows_per_band)
-        return sa == sb
-
-    first_band = F.lit(bands - 1)
-    for bi in range(bands - 2, -1, -1):
-        first_band = F.when(_slice_match(bi), F.lit(bi)).otherwise(first_band)
+    sig_a, sig_b = F.col("a.signature"), F.col("b.signature")
+    first_band = _first_band(sig_a, sig_b, bands, rows_per_band)
     pairs = joined.filter(F.col("a.band") == first_band).select(
         F.col(f"a.{id_col}").alias("id_a"),
         F.col(f"b.{id_col}").alias("id_b"),
-        F.col("a.signature").alias("sig_a"),
-        F.col("b.signature").alias("sig_b"),
+        sig_a.alias("sig_a"),
+        sig_b.alias("sig_b"),
     )
     if hot is not None:
         # star pairs for over-cap buckets: min-id representative vs
@@ -450,28 +465,10 @@ def minhash_lsh_pairs(
                 F.col("signature").alias("sig_b"),
             )
         )
-
-        def _star_slice_match(bi: int):
-            return F.slice(
-                F.col("sig_a"), bi * rows_per_band + 1, rows_per_band
-            ) == F.slice(F.col("sig_b"), bi * rows_per_band + 1, rows_per_band)
-
-        star_first = F.lit(bands - 1)
-        for bi in range(bands - 2, -1, -1):
-            star_first = F.when(
-                _star_slice_match(bi), F.lit(bi)
-            ).otherwise(star_first)
+        star_first = _first_band(F.col("sig_a"), F.col("sig_b"), bands, rows_per_band)
         star = star.filter(F.col("band") == star_first).drop("band")
         pairs = pairs.unionByName(star)
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-                lambda v: v == 1,
-            )
-        ).cast("double")
-        / F.lit(float(num_hashes))
-    )
+    est = _est_jaccard(F.col("sig_a"), F.col("sig_b"), num_hashes)
     return (
         pairs.withColumn("est_jaccard", est)
         .filter(F.col("est_jaccard") >= jaccard_threshold)
@@ -687,110 +684,27 @@ def duplicate_clusters(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iters: int = 25,
-    driver_threshold_edges: int = 65536,
 ) -> DataFrame:
     """Resolve near-dup PAIRS into duplicate CLUSTERS (connected
     components): every doc in a component gets ``cluster_id`` = the
     minimum doc id reachable through the pair graph, plus an
     ``is_canonical`` keep/drop flag (the survivor is the min id).
+    Returns ``(doc_id, cluster_id, is_canonical)``.
 
     This is the step a real training-data dedup pipeline needs after
     LSH/simhash pair generation — pairs alone over-delete (A~B, B~C
     must keep exactly one of {A,B,C}, not zero).
 
-    Algorithm: min-label propagation with pointer jumping
-    (label <- min(label, min neighbor label, label[label])), which
-    converges in O(log diameter) rounds; each round is one shuffle on
-    node id over the PAIR GRAPH ONLY (never the documents). Rounds are
-    localCheckpoint()ed so iterative lineage doesn't grow. At 100 TB the
-    same loop holds because near-dup graphs are sparse (|edges| ~
-    |dups|); for adversarial dense graphs swap in large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce").
-
-    ``driver_threshold_edges`` (round-10, guide §1.2 "the distributed
-    algorithm"): the same small-side cutover
-    ``graph.connected_components`` makes — a deduped symmetric edge set
-    at or under the threshold (the count is one cheap job over the
-    already-materialized checkpoint) is collected and finished with a
-    driver union-find labeled by minimum reachable id, bit-identical to
-    what the propagation loop converges to (pinned by
-    test_dedup::test_duplicate_clusters_cutover_matches_loop). Each
-    propagation round costs ~4 scheduled jobs regardless of data size;
-    the distilled pair graphs LSH emits are O(duplicate pairs), so
-    paying O(diameter) rounds of cluster scheduling to label a graph
-    that fits in one task is pure overhead. 64k symmetric edges collect
-    to ~1 MB — the judgment a broadcast join makes about a small side,
-    scale-adaptive by measurement, not by cluster size. Pass 0 to force
-    the distributed loop at any size.
-    """
-    e = pairs.select(
-        F.col(id_a).cast("long").alias("src"), F.col(id_b).cast("long").alias("dst")
-    )
-    edges = (
-        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    if edges.count() <= driver_threshold_edges:
-        parent: dict[int, int] = {}
-
-        def _find(x: int) -> int:
-            while parent.setdefault(x, x) != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for u, v in edges.collect():
-            ru, rv = _find(u), _find(v)
-            if ru != rv:
-                parent[max(ru, rv)] = min(ru, rv)
-        from sstable_migrator_spark.sinks import local_rows_df
-
-        return local_rows_df(
-            pairs.sparkSession,
-            [(n, _find(n)) for n in sorted(parent)],
-            "doc_id long, cluster_id long",
-        ).withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("m"))
-        .select(F.col("src").alias("node"), F.least("src", "m").alias("label"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iters):
-        nbr = (
-            edges.join(labels, edges.src == labels.node)
-            .select(F.col("dst").alias("node"), "label")
-            .groupBy("node")
-            .agg(F.min("label").alias("nl"))
-        )
-        stepped = labels.join(nbr, "node", "left").select(
-            "node",
-            F.col("label").alias("old"),
-            F.least("label", F.coalesce("nl", F.col("label"))).alias("label"),
-        )
-        # pointer jump: label <- label(label); carry the pre-round label
-        # so convergence is a filter on the checkpointed result, not a
-        # second shuffle-join job per round
-        ptr = stepped.select(F.col("node").alias("pn"), F.col("label").alias("pl"))
-        jumped = (
-            stepped.join(ptr, stepped.label == ptr.pn, "left")
-            .select(
-                "node",
-                F.least("label", F.coalesce("pl", F.col("label"))).alias("label"),
-                "old",
-            )
-            .localCheckpoint()
-        )
-        changed = jumped.filter(F.col("label") != F.col("old")).count()
-        labels = jumped.select("node", "label")
-        if changed == 0:
-            break
-    return labels.select(
+    A thin wrapper over ``graph.connected_components`` (star
+    contraction over the PAIR GRAPH ONLY, never the documents, with
+    the driver union-find cutover for small pair graphs); it inherits
+    that operator's contract: a pair with a NULL id is dropped, and a
+    doc that appears only in self-pairs is its own cluster."""
+    cc = connected_components(pairs, src=id_a, dst=id_b)
+    return cc.select(
         F.col("node").alias("doc_id"),
-        F.col("label").alias("cluster_id"),
-        (F.col("node") == F.col("label")).alias("is_canonical"),
+        F.col("component").alias("cluster_id"),
+        (F.col("node") == F.col("component")).alias("is_canonical"),
     )
 
 
@@ -884,9 +798,9 @@ def dedup_keep_best(
     quality range — the argmax is ordering-generic, so no new operator
     is needed.
 
-    Plan: the component loop runs over the PAIR GRAPH ONLY (sparse —
-    |edges| ~ |dups|); docs join the O(dup-docs) label table once on
-    id (broadcastable whenever the dup set is small relative to the
+    Plan: ``duplicate_clusters`` runs over the PAIR GRAPH ONLY (sparse
+    — |edges| ~ |dups|; a pair with a NULL id is dropped there); docs
+    join the O(dup-docs) label table once on id (broadcastable whenever the dup set is small relative to the
     corpus), then one shuffle on cluster_id computes the per-cluster
     argmax as ``max(struct(quality, -id))`` — no window, map-side
     partial max. At 100 TB both exchanges carry (id, cluster, quality)
@@ -1705,30 +1619,14 @@ def lsh_pairs_between_banded(
         & (F.col("a.bucket") == F.col("b.bucket")),
     )
 
-    # keep each colliding pair only at its FIRST matching band (same
-    # dedupe-without-a-shuffle trick as the self-join variant)
-    def _slice_match(bi: int):
-        sa = F.slice(F.col("a.signature"), bi * rows_per_band + 1, rows_per_band)
-        sb = F.slice(F.col("b.signature"), bi * rows_per_band + 1, rows_per_band)
-        return sa == sb
-
-    first_band = F.lit(bands - 1)
-    for bi in range(bands - 2, -1, -1):
-        first_band = F.when(_slice_match(bi), F.lit(bi)).otherwise(first_band)
-    est = (
-        sum(
-            (F.element_at(F.col("a.signature"), i + 1)
-             == F.element_at(F.col("b.signature"), i + 1)).cast("int")
-            for i in range(num_hashes)
-        )
-        / F.lit(float(num_hashes))
-    )
+    sig_a, sig_b = F.col("a.signature"), F.col("b.signature")
+    first_band = _first_band(sig_a, sig_b, bands, rows_per_band)
+    est = _est_jaccard(sig_a, sig_b, num_hashes)
     # load-bearing guard (feeds the output column, so it can't be
     # pruned): any colliding row whose stored signature length differs
     # from num_hashes raises instead of mis-estimating
     shape_ok = F.assert_true(
-        (F.size(F.col("a.signature")) == num_hashes)
-        & (F.size(F.col("b.signature")) == num_hashes),
+        (F.size(sig_a) == num_hashes) & (F.size(sig_b) == num_hashes),
         F.lit(
             f"dedup state signature length != num_hashes={num_hashes} — "
             "state built with different parameters?"
@@ -1879,9 +1777,9 @@ def leakage_safe_split(
 
     Returns ``(id, cluster_id, split)`` with split in
     train/valid/test at train_pct/valid_pct/rest. Scale: clustering is
-    the star-contraction/label-propagation path (pairs are the LSH
-    output, O(duplicates)); the split itself is one broadcast-able
-    cluster map join + a map-side hash."""
+    ``duplicate_clusters`` over the pair graph (the LSH output,
+    O(duplicates); a pair with a NULL id is dropped); the split itself
+    is one broadcast-able cluster map join + a map-side hash."""
     if not (0 < train_pct and 0 <= valid_pct and train_pct + valid_pct < 100):
         raise ValueError(f"bad split percentages {train_pct}/{valid_pct}")
     cc = duplicate_clusters(pairs).select(id_col, "cluster_id")

@@ -2,12 +2,13 @@
 
 North-star extension (the reference has no graph surface; its nearest
 analog is the apex-popularity rollup, misc/clickhouse_queries.md:35-43).
-Connected components (min-label propagation with pointer jumping) lives
-in ``operators.dedup.duplicate_clusters``; this module adds PageRank,
-the canonical "iterative algorithm on Spark" shape: each iteration is a
-pure DataFrame job (join + aggregate = two key-shuffles), the loop runs
-on the driver, and lineage is cut with localCheckpoint so plan depth
-stays O(1) across iterations instead of O(iters).
+Connected components (large-star/small-star contraction, the one
+implementation ``operators.dedup.duplicate_clusters`` wraps), PageRank
+and triangle counts. PageRank is the canonical "iterative algorithm on
+Spark" shape: each iteration is a pure DataFrame job (join + aggregate
+= two key-shuffles), the loop runs on the driver, and lineage is cut
+with localCheckpoint so plan depth stays O(1) across iterations
+instead of O(iters).
 
 Scale notes (100 TB graphs):
 - The edge list is the only big table; it is checkpointed ONCE with its
@@ -141,7 +142,11 @@ def _small_star(e: DataFrame) -> DataFrame:
 def _driver_union_find(spark, edge_rows) -> DataFrame:
     """Small-side finish: path-halving union-find over a collected edge
     list, components labeled by their minimum node id — bit-identical
-    to what star contraction converges to (pinned by test_graph)."""
+    to what star contraction converges to (pinned by test_graph). A
+    self-loop registers its node as its own component. The rows are
+    already on the driver, so the result is one partition."""
+    from sstable_migrator_spark.sinks import local_rows_df
+
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -154,8 +159,9 @@ def _driver_union_find(spark, edge_rows) -> DataFrame:
         ru, rv = find(u), find(v)
         if ru != rv:
             parent[max(ru, rv)] = min(ru, rv)
-    rows = [(n, find(n)) for n in parent]
-    return spark.createDataFrame(rows, "node long, component long")
+    return local_rows_df(
+        spark, [(n, find(n)) for n in sorted(parent)], "node long, component long"
+    )
 
 
 def connected_components(
@@ -168,25 +174,23 @@ def connected_components(
     """Connected components via alternating large-star / small-star
     rounds (Kiveris et al. 2014, "Connected Components in MapReduce and
     Beyond"). Returns ``(node, component)`` with component = minimum
-    node id in the component, for every node incident to a NON-self-loop
-    edge (self-loops carry no connectivity information and are dropped
-    up front; a node appearing only in self-loops does not appear in
-    the output — union the node set back in if singleton components
-    matter to the caller).
+    node id in the component, one row per node. Edges are undirected;
+    duplicate and reversed edges collapse. An edge with a NULL endpoint
+    is dropped before anything else (it names no node). A self-loop
+    carries no connectivity but does name its node: a node that appears
+    only in self-loops is emitted as its own component, on both paths.
 
-    This is the scale path for LARGE components:
-    ``dedup.duplicate_clusters`` (min-label propagation) needs
-    O(diameter) rounds — fine for small, dense near-dup clusters, and
-    documented there as its limitation — while star contraction
-    converges in O(log^2 n) rounds regardless of diameter, each round
-    two bounded shuffles (per-node min + join). Skewed hubs are a wide
-    groupBy-min, never a collect_list. Lineage is cut per round
-    (localCheckpoint) so plan depth stays O(1); convergence is detected
-    by an edge-set checksum (count + xor of xxhash64), one cheap action
-    per round instead of a set-difference join. The checksum alone
-    could collide (64-bit xor over the edge set), so a signature match
-    is CONFIRMED by one exact exceptAll before returning — the exact
-    check runs once, at convergence, not per round.
+    Star contraction converges in O(log^2 n) rounds regardless of
+    component diameter, each round two bounded shuffles (per-node min +
+    join). Skewed hubs are a wide groupBy-min, never a collect_list.
+    Lineage is cut per round (localCheckpoint) so plan depth stays
+    O(1); convergence is detected by an edge-set checksum (count + xor
+    of xxhash64), one cheap action per round instead of a
+    set-difference join. The checksum alone could collide (64-bit xor
+    over the edge set), so a signature match is CONFIRMED by one exact
+    exceptAll before returning — the exact check runs once, at
+    convergence, not per round. Raises ``RuntimeError`` when
+    ``max_iters`` rounds do not converge.
 
     ``driver_threshold_edges``: the small-side cutover. A deduped edge
     set at or under the threshold (known for free from the signature
@@ -204,8 +208,7 @@ def connected_components(
     def _ck_with_sig(df: DataFrame) -> tuple[DataFrame, tuple]:
         # The convergence signature (count + xor of xxhash64) rides the
         # SAME job that materializes the round's localCheckpoint via an
-        # Observation (round 10) — previously each round paid a second
-        # full scan + collect job just to read two scalars.
+        # Observation, so reading it costs no extra scan.
         from pyspark.sql import Observation
 
         obs = Observation()
@@ -221,15 +224,16 @@ def connected_components(
         edges.select(
             F.col(src).cast("long").alias("u"), F.col(dst).cast("long").alias("v")
         )
-        .filter(F.col("u") != F.col("v"))
+        .filter(F.col("u").isNotNull() & F.col("v").isNotNull())
         .distinct()
     )
     # Seed the convergence signature with the INPUT edge set: an edge
-    # set that is already a fixed point then converges after ONE star
-    # round instead of two. The signature count doubles as the
-    # small-side cutover test.
+    # set that is already a fixed point (and has no self-loops) then
+    # converges after ONE star round instead of two. The signature
+    # count doubles as the small-side cutover test.
     if prev[0] <= driver_threshold_edges:
         return _driver_union_find(edges.sparkSession, e.collect())
+    loops = e.filter(F.col("u") == F.col("v"))
     for _ in range(max_iters):
         # dedup=False: _small_star's orientation distinct subsumes
         # large-star's, one fewer exchange per round
@@ -244,11 +248,15 @@ def connected_components(
         e = e2
     else:
         raise RuntimeError(f"no convergence in {max_iters} star rounds")
-    parents = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
-    roots = parents.select("component").distinct().select(
-        F.col("component").alias("node"), F.col("component")
+    # converged edges are (member, root) stars; roots and self-loop
+    # nodes label themselves, and the per-node min folds a self-loop
+    # node that is also a member into its real component
+    return (
+        e.union(e.select(F.col("v").alias("u"), "v"))
+        .union(loops)
+        .groupBy(F.col("u").alias("node"))
+        .agg(F.min("v").alias("component"))
     )
-    return parents.union(roots).distinct()
 
 
 def _orient(canon: DataFrame, orientation: str) -> DataFrame:

@@ -1962,9 +1962,11 @@ WHERE rank <= 5
 
 def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup PAIRS -> duplicate CLUSTERS: connected components over
-    the MinHash-LSH pair graph (dedup.duplicate_clusters), cluster_id =
-    min reachable doc id, is_canonical = the keep decision. The oracle
-    is a recursive CTE over the identical pair set."""
+    the MinHash-LSH pair graph (dedup.duplicate_clusters, a wrapper over
+    graph.connected_components; this fixture-sized graph takes its
+    driver union-find cutover), cluster_id = min reachable doc id,
+    is_canonical = the keep decision. The oracle is a recursive CTE
+    over the identical pair set."""
     docs = _synth_near_dup_docs(spark, sf_dir)
     pairs = dedup.minhash_lsh_pairs(docs, num_hashes=16, bands=4, jaccard_threshold=0.5)
     return dedup.duplicate_clusters(pairs)
@@ -6229,18 +6231,17 @@ ORACLES.update({"q144_hard_negatives": SQL_HARD_NEGATIVES})
 
 
 def q_dup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q58's cluster semantics through the OTHER algorithm: the same
-    MinHash-LSH pair graph resolved by graph.connected_components
-    (large-star/small-star contraction — O(log^2 n) rounds regardless
-    of component diameter, the scale path for big components) instead
-    of label propagation. Oracle-checked against the identical
-    recursive-CTE truth as q58, which pins that both algorithms agree
-    bit-for-bit on cluster ids and keep decisions.
-    ``driver_threshold_edges=0`` deliberately disables the operator's
-    small-side union-find cutover: this catalog entry is the PROOF
-    query for the distributed star contraction, so it must exercise
-    the full round loop even on the fixture-sized pair graph (the
-    cutover's equivalence has its own pin in test_graph)."""
+    """q58's cluster semantics through the same operator with its
+    driver cutover forced off: the MinHash-LSH pair graph resolved by
+    graph.connected_components (which dedup.duplicate_clusters wraps)
+    with ``driver_threshold_edges=0``, so the large-star/small-star
+    contraction — O(log^2 n) rounds regardless of component diameter,
+    the scale path — runs its full round loop even on the
+    fixture-sized pair graph. Oracle-checked against the identical
+    recursive-CTE truth as q58, which pins that the star path and the
+    driver union-find agree bit-for-bit on cluster ids and keep
+    decisions (the cutover's equivalence also has its own pins in
+    test_graph and test_dedup)."""
     from sstable_migrator_spark.operators.graph import connected_components
 
     docs = _synth_near_dup_docs(spark, sf_dir)

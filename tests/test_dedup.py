@@ -177,11 +177,11 @@ def test_duplicate_clusters_chain_and_islands(spark):
 
 def test_duplicate_clusters_cutover_matches_loop(spark):
     """The small-side driver union-find cutover must be bit-identical
-    to the distributed label-propagation loop (threshold=0 forces it):
-    same nodes, same min-reachable cluster ids, same keep flags —
-    including self-loops, duplicate/reversed pairs, and a >1-round
-    chain."""
+    to the distributed star contraction (threshold=0 forces it): same
+    nodes, same min-reachable cluster ids, same keep flags — including
+    self-loops, duplicate/reversed pairs, and a >1-round chain."""
     from sstable_migrator_spark.operators.dedup import duplicate_clusters
+    from sstable_migrator_spark.operators.graph import connected_components
 
     pairs = [
         (1, 2), (2, 1), (2, 3), (7, 8), (9, 9),
@@ -196,9 +196,29 @@ def test_duplicate_clusters_cutover_matches_loop(spark):
         )
 
     fast = _rows(duplicate_clusters(df))
-    loop = _rows(duplicate_clusters(df, driver_threshold_edges=0))
+    loop = _rows(
+        connected_components(
+            df, src="id_a", dst="id_b", driver_threshold_edges=0
+        ).select(
+            F.col("node").alias("doc_id"),
+            F.col("component").alias("cluster_id"),
+            (F.col("node") == F.col("component")).alias("is_canonical"),
+        )
+    )
     assert fast == loop
     assert (9, 9, True) in fast  # self-loop node keeps itself
+
+
+def test_duplicate_clusters_drops_null_ids(spark):
+    """A pair with a NULL id names no document: it is dropped, the
+    rest of the graph clusters as usual (the driver union-find used to
+    raise comparing an int with None)."""
+    from sstable_migrator_spark.operators.dedup import duplicate_clusters
+
+    df = spark.createDataFrame([(1, 2), (None, 3), (3, 4)], "id_a long, id_b long")
+    got = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+           for r in duplicate_clusters(df).collect()}
+    assert got == {1: (1, True), 2: (1, False), 3: (3, True), 4: (3, False)}
 
 
 def test_paragraph_dedup(spark):
@@ -531,6 +551,43 @@ def test_winnow_fast_hash_same_pairs(spark):
            for r in winnow_pairs(docs, k=4, w=5, portable=False).collect()}
     assert (1, 2) in got
     assert all(3 not in p for p in got)
+
+
+def test_lsh_self_join_and_cross_paths_agree(spark):
+    """The self-join (both its band path and its hot-bucket star path)
+    and the cross-corpus join estimate a pair's Jaccard the same way:
+    every self-join pair of D appears in D x D with a bit-equal
+    est_jaccard. NULL texts (all-NULL signatures) collide in one bucket
+    and score 0.0 on both paths — a NULL position is a non-match."""
+    from sstable_migrator_spark.operators.dedup import minhash_lsh_pairs_between
+
+    null_docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, None),
+            (3, "astronomy telescopes and the rings of saturn at midnight"),
+            (4, "cooking pasta with garlic butter and fresh basil leaves"),
+        ],
+        "doc_id long, text string",
+    )
+    for docs, thr in ((_docs(spark), 0.3), (null_docs, 0.0)):
+        cross = {
+            (r["new_id"], r["old_id"]): r["est_jaccard"]
+            for r in minhash_lsh_pairs_between(
+                docs, docs, jaccard_threshold=thr
+            ).collect()
+        }
+        for max_bucket in (None, 2):
+            own = minhash_lsh_pairs(
+                docs, jaccard_threshold=thr, max_bucket=max_bucket
+            ).collect()
+            assert own, (thr, max_bucket)
+            for r in own:
+                assert cross[(r["id_a"], r["id_b"])] == r["est_jaccard"], r
+    assert (1, 2) in {(r["id_a"], r["id_b"]) for r in own}
+    assert {k: v for k, v in cross.items() if 1 in k or 2 in k} == {
+        (1, 1): 0.0, (1, 2): 0.0, (2, 1): 0.0, (2, 2): 0.0,
+    }
 
 
 def test_incremental_dedup_outcomes(spark):

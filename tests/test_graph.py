@@ -4,6 +4,8 @@ structural properties (sink handling, early stop)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sstable_migrator_spark.operators.graph import pagerank
@@ -111,6 +113,54 @@ def test_connected_components_directionless(spark):
         got = {r["node"]: r["component"]
                for r in connected_components(df, driver_threshold_edges=thresh).collect()}
         assert got == {3: 3, 4: 3, 5: 3, 8: 8, 9: 8}, thresh
+
+
+def test_connected_components_self_loop_and_null_edges(spark):
+    """A node seen only in a self-loop is its own component, and an
+    edge with a NULL endpoint names no node — on the driver cutover
+    and on the star path alike."""
+    from sstable_migrator_spark.operators.graph import connected_components
+
+    df = spark.createDataFrame(
+        [(1, 2), (9, 9), (2, 2), (None, 3), (3, None), (3, 4)],
+        "src long, dst long",
+    )
+    for thresh in (0, 65536):
+        got = {r["node"]: r["component"]
+               for r in connected_components(df, driver_threshold_edges=thresh).collect()}
+        assert got == {1: 1, 2: 1, 3: 3, 4: 3, 9: 9}, thresh
+
+
+_node = st.integers(min_value=0, max_value=11)
+
+
+@settings(
+    max_examples=25,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    edges=st.lists(st.tuples(_node, _node), min_size=1, max_size=16),
+    chain=st.lists(_node, max_size=8),
+)
+def test_components_match_union_find_property(spark, edges, chain):
+    """Random small edge lists (self-loops, duplicate and reversed
+    pairs, plus a generated chain): the star path and
+    ``duplicate_clusters`` both equal a brute-force union-find."""
+    from sstable_migrator_spark.operators.dedup import duplicate_clusters
+    from sstable_migrator_spark.operators.graph import connected_components
+
+    pairs = edges + list(zip(chain, chain[1:])) + [(b, a) for a, b in edges[:3]]
+    truth = _brute_components(pairs)
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    star = {r["node"]: r["component"]
+            for r in connected_components(
+                df, src="id_a", dst="id_b", driver_threshold_edges=0
+            ).collect()}
+    assert star == truth
+    clusters = {r["doc_id"]: (r["cluster_id"], r["is_canonical"])
+                for r in duplicate_clusters(df).collect()}
+    assert clusters == {n: (c, n == c) for n, c in truth.items()}
 
 
 def _brute_triangles(pairs):
