@@ -5,8 +5,8 @@ A from-scratch rebuild of the capabilities of the reference
 CSV ingest -> validate/normalize -> enrich -> route to three
 Cassandra-shaped tables, plus ClickHouse-documented analytics), expressed
 Spark-first: declarative DataFrame plans, Catalyst optimization,
-broadcast dimensions, sorted partitioned writes, and Structured
-Streaming for the daily micro-batch cadence.
+broadcast dimensions, sorted partitioned writes, and one batch run
+per day for the reference's cron cadence (``pipelines/daily.py``).
 
 Layout:
     session.py    SparkSession factory with scale-tuned confs
@@ -17,7 +17,8 @@ Layout:
     operators/    relational + domain pipelines (clean, ingest, dedup,
                   analytics, simsearch, multimodal)
     plans/        plan-inspection helpers (pushdown / broadcast assertions)
-    streaming/    micro-batch + watermark variants (T1-T5)
+    pipelines/    the daily load (T1-T3) and the corpus/crawl funnels
+    streaming/    availableNow drains: corpus admission gate, URL frontier
 """
 
 __version__ = "0.1.0"

@@ -41,16 +41,6 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
 
 
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(as_double(a), as_double(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def random_hyperplane_sign(vec: Column, plane: list[float]) -> Column:
     """Sign bit of vec . plane — one bit of a random-hyperplane LSH
     signature (cosine LSH). ``plane`` is a fixed literal, so this stays

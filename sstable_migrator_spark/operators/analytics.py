@@ -89,13 +89,6 @@ def merge_aggregate_state(
     )
 
 
-def backfill_column(df: DataFrame, name: str, expr: Column) -> DataFrame:
-    """Q3 — derived-column backfill (``ALTER TABLE UPDATE ... WHERE 1=1``,
-    clickhouse_queries.md:21-33) == withColumn + overwrite of the
-    columnar copy; the transform itself is this projection."""
-    return df.withColumn(name, expr)
-
-
 def prefix_lookup(df: DataFrame, **equals) -> DataFrame:
     """Q4 — point/prefix lookup on partition columns; over storage
     partitioned by those columns this is partition-pruned to O(result)."""

@@ -29,8 +29,7 @@ one cached parse and shuffle nothing.
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
-from contextlib import contextmanager
+from collections.abc import Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -75,35 +74,6 @@ def daily_prepare_job(
     return feed
 
 
-@contextmanager
-def routed_upload(
-    resolved: DataFrame,
-    city_dim: DataFrame,
-    asn_dim: DataFrame,
-    tld_set: Iterable[str] | None,
-    source: str,
-    batch_ts,
-) -> Iterator[dict[str, DataFrame]]:
-    """Job 2's steps, shared by ``daily_upload_job`` and its streaming
-    twin ``streaming.daily.routed_stream_sink``: parse/validate the
-    resolved triples once, enrich the kept A rows, union the kept
-    CNAMEs and route into the three tables. The parse stays cached
-    for the ``with`` block, so every write the caller makes inside it
-    reuses one parse; it is unpersisted on exit."""
-    parsed = ingest.parse_and_route(resolved, tld_set=tld_set, source=source).persist()
-    try:
-        kept = parsed.filter(F.col("keep"))
-        enriched = ingest.geoip_enrich(kept.filter(~F.col("is_cname")), city_dim, asn_dim)
-        yield ingest.route_tables(
-            enriched.unionByName(
-                kept.filter(F.col("is_cname")), allowMissingColumns=True
-            ),
-            batch_ts=batch_ts,
-        )
-    finally:
-        parsed.unpersist()
-
-
 def daily_upload_job(
     resolved: DataFrame,
     city_dim: DataFrame,
@@ -123,9 +93,20 @@ def daily_upload_job(
     the rows where they are: Cassandra placement is ``bulk_load_job``'s
     job, which routes by token itself.
     """
-    with routed_upload(resolved, city_dim, asn_dim, tld_set, source, batch_ts) as routed:
+    parsed = ingest.parse_and_route(resolved, tld_set=tld_set, source=source).persist()
+    try:
+        kept = parsed.filter(F.col("keep"))
+        enriched = ingest.geoip_enrich(kept.filter(~F.col("is_cname")), city_dim, asn_dim)
+        routed = ingest.route_tables(
+            enriched.unionByName(
+                kept.filter(F.col("is_cname")), allowMissingColumns=True
+            ),
+            batch_ts=batch_ts,
+        )
         for name, df in routed.items():
             parquet_export(df, f"{out_dir}/{name}")
+    finally:
+        parsed.unpersist()
 
 
 def bulk_load_job(

@@ -47,22 +47,6 @@ def _plan(df: DataFrame) -> str:
         return buf.getvalue()
 
 
-def has_pushed_filter(df: DataFrame, fragment: str | None = None) -> bool:
-    plan = _plan(df)
-    if "PushedFilters: []" in plan and fragment is None:
-        return False
-    if fragment:
-        return any(
-            "PushedFilters" in ln and fragment in ln for ln in plan.splitlines()
-        )
-    return "PushedFilters: [" in plan and "PushedFilters: []" not in plan
-
-
-def is_broadcast_join(df: DataFrame) -> bool:
-    plan = _plan(df)
-    return "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-
-
 def has_broadcast_hash_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in _plan(df)
 

@@ -5343,9 +5343,8 @@ ORACLES.update(
 
 
 def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native session_window aggregation (the batch twin of the
-    Structured Streaming sessionizer in streaming/daily.py): per-user
-    sessions split at 30-minute silence, via Spark's built-in merging
+    """Native session_window aggregation (q61's built-in sibling):
+    per-user sessions split at 30-minute silence, via Spark's built-in merging
     session windows — one shuffle on (user_id), the window merge
     happens inside the aggregation, no lag/cumsum window pass. Oracle
     replicates the merge rule exactly: a new session starts when

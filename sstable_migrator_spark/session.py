@@ -68,7 +68,7 @@ def get_spark(
     )
     if master.split("[")[0] == "local":
         # Workers the JVM launches import the daemon whatever the caller's
-        # cwd; like protoshim, PYTHONPATH must be set before the JVM starts.
+        # cwd; PYTHONPATH must be set before the JVM starts.
         root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         current = os.environ.get("PYTHONPATH", "")
         if root not in current.split(os.pathsep):

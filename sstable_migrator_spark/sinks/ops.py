@@ -98,39 +98,3 @@ def notify(
     else:
         raise ValueError("notify needs outbox_path or transport")
     return msg
-
-
-def streaming_progress_summary(query) -> dict:
-    """K8 for streams: condense a StreamingQuery's last progress into
-    the integer dict the run log takes — rows in, rows/sec, per-state-
-    operator state size and watermark-dropped rows (the late-data
-    counter that tells an operator their watermark is too tight), and
-    batch id. Zero cost: Spark already collected every number. Input
-    rows SUM over the run's recent progresses — an availableNow drain
-    ends on an empty commit batch, so lastProgress alone under-reports;
-    state metrics come from the newest progress that carries them."""
-
-    def _dict(p):
-        if p is None:
-            return None
-        jv = getattr(p, "jsonValue", None)
-        return jv() if callable(jv) else p
-
-    progresses = [d for d in (_dict(p) for p in query.recentProgress) if d]
-    if not progresses:
-        return {}
-    out = {
-        "batch_id": int(progresses[-1].get("batchId", -1)),
-        "input_rows": sum(int(p.get("numInputRows", 0)) for p in progresses),
-    }
-    for p in reversed(progresses):
-        sos = p.get("stateOperators") or []
-        if sos:
-            for i, so in enumerate(sos):
-                out[f"state{i}_rows"] = int(so.get("numRowsTotal", 0))
-                out[f"state{i}_dropped_by_watermark"] = int(
-                    so.get("numRowsDroppedByWatermark", 0)
-                )
-                out[f"state{i}_mem_bytes"] = int(so.get("memoryUsedBytes", 0))
-            break
-    return out

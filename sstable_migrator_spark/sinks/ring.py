@@ -50,7 +50,6 @@ __all__ = [
     "ring_range_col",
     "write_sstables",
     "compact_stream_batches",
-    "compact_ranges",
 ]
 
 MIN_TOKEN = -(1 << 63)
@@ -357,16 +356,21 @@ def compact_stream_batches(
     partition_key: list[str],
     clustering: list[str] | None = None,
 ) -> list[dict]:
-    """Arrival-side compaction for ``write_sstable_stream`` output:
-    every batch wave under ``root/batch_id=*/cass_range=N`` merges into
-    ONE sstable per range at ``out_path/cass_range=N`` — the compaction
-    a receiving Cassandra cluster would run after a bulk load done in
-    waves, executed here as one Spark task per token range. Within a
-    range, later batches win write-timestamp ties (ascending authority
-    order, the rule ``compact_sstable_inputs`` applies). Driver state
-    is O(ranges): directory listings in, one manifest row per range
-    out."""
+    """Arrival-side compaction for a bulk load done in waves (one
+    ``write_sstables`` call per ``root/batch_id=*``): every sstable of
+    every wave under ``batch_id=*/cass_range=N`` merges into ONE
+    sstable per range at ``out_path/cass_range=N`` — the compaction a
+    receiving Cassandra cluster would run, executed here as one Spark
+    task per token range. Inputs go in ascending authority order:
+    waves by batch id, a wave's generations by generation number
+    (a row-capped range holds several), so later waves win
+    write-timestamp ties (the rule ``compact_sstable_inputs``
+    applies). Driver state is O(ranges): directory listings in, one
+    manifest row per range out."""
     import glob as _glob
+
+    from sstable_migrator_spark.sinks import local_rows_df
+    from sstable_migrator_spark.sinks.sstable_format import sstable_prefixes
 
     clustering = list(clustering or [])
     batches = sorted(
@@ -378,53 +382,17 @@ def compact_stream_batches(
     per_range: dict[int, list[tuple[str, str]]] = {}
     for b in batches:
         for d in sorted(_glob.glob(os.path.join(b, "cass_range=*"))):
-            tocs = [f for f in os.listdir(d) if f.endswith("-TOC.txt")]
-            if not tocs:
-                continue
-            rid = int(d.rsplit("=", 1)[1])
-            per_range.setdefault(rid, []).append(
-                (d, tocs[0][: -len("-TOC.txt")])
-            )
+            prefixes = sstable_prefixes(d)
+            if prefixes:
+                rid = int(d.rsplit("=", 1)[1])
+                per_range.setdefault(rid, []).extend((d, p) for p in prefixes)
     if not per_range:
         raise ValueError(f"no sstables under {root}/batch_id=*")
-    manifests = compact_ranges(
-        spark, per_range, out_path,
-        keyspace=keyspace, table=table,
-        partition_key=partition_key, clustering=clustering,
-    )
-    with open(os.path.join(out_path, "_sstable_manifests.json"), "w") as fh:
-        json.dump(manifests, fh)
-    return manifests
-
-
-def compact_ranges(
-    spark: SparkSession,
-    per_range: dict[int, list[tuple[str, str]]],
-    out_path: str,
-    keyspace: str,
-    table: str,
-    partition_key: list[str],
-    clustering: list[str] | None = None,
-) -> list[dict]:
-    """Distributed core shared by the batch wave compactor above and
-    the incremental streaming one (streaming/sstable_ingest): one Spark
-    task per token range merges that range's ``(directory, prefix)``
-    inputs — ascending authority order — into one new sstable at
-    ``out_path/cass_range=N``. If an input lives in the OUTPUT range
-    directory itself (the streaming path feeds the previous compacted
-    snapshot back in as the lowest-authority input), its component
-    files are deleted after the new generation is written, so a range
-    directory always holds exactly one sstable. Driver state is
-    O(ranges) either way."""
-    clustering = list(clustering or [])
     items = [
         (rid, json.dumps(inputs)) for rid, inputs in sorted(per_range.items())
     ]
-    # one range per parallelize slice: same one-task-per-range placement
-    # as the former repartitionByRange(len, "rid") without the range
-    # sampler's extra pass or the exchange (round-10, guide §2.1)
-    from sstable_migrator_spark.sinks import local_rows_df
-
+    # one range per parallelize slice: one task per range without a
+    # range sampler pass or an exchange
     df = local_rows_df(
         spark, items, "rid int, inputs string", slices=len(items)
     )
@@ -437,23 +405,14 @@ def compact_ranges(
         for pdf in batches_iter:
             rows = []
             for rid, inputs_json in zip(pdf["rid"], pdf["inputs"]):
-                inputs = [tuple(x) for x in json.loads(inputs_json)]
-                out_dir = os.path.join(out_path, f"cass_range={int(rid)}")
                 m = compact_sstable_inputs(
-                    inputs,
-                    out_dir,
+                    [tuple(x) for x in json.loads(inputs_json)],
+                    os.path.join(out_path, f"cass_range={int(rid)}"),
                     keyspace=keyspace,
                     table=table,
                     partition_key=partition_key,
                     clustering=clustering,
                 )
-                # superseded in-place snapshot: drop its components now
-                # that the new generation is fully on disk
-                for d, p in inputs:
-                    if os.path.abspath(d) == os.path.abspath(out_dir):
-                        for f in os.listdir(d):
-                            if f.startswith(p + "-"):
-                                os.remove(os.path.join(d, f))
                 rows.append(
                     {
                         "range_id": int(rid),
@@ -472,4 +431,7 @@ def compact_ranges(
         "range_id int, prefix string, partitions long, rows long, "
         "inputs int, rows_dropped long",
     ).collect()
-    return sorted((r.asDict() for r in out), key=lambda m: m["range_id"])
+    manifests = sorted((r.asDict() for r in out), key=lambda m: m["range_id"])
+    with open(os.path.join(out_path, "_sstable_manifests.json"), "w") as fh:
+        json.dump(manifests, fh)
+    return manifests

@@ -1965,6 +1965,16 @@ def point_lookup(
     return SSTableReader(directory, prefix).get(key_components)
 
 
+def sstable_prefixes(directory: str) -> list[str]:
+    """The prefix of every sstable in ``directory`` (one per
+    ``-TOC.txt``, the component the writer publishes last), in
+    generation order — the authority order compaction merges them in."""
+    return sorted(
+        (f[: -len("-TOC.txt")] for f in os.listdir(directory) if f.endswith("-TOC.txt")),
+        key=lambda p: int(p.split("-")[1]),
+    )
+
+
 def compact_sstables(
     directory: str,
     out_dir: str,
@@ -1985,19 +1995,15 @@ def compact_sstables(
 
     Like the reader it builds on, this is a per-range local operation:
     distribute by running it once per range directory (one task per
-    range — the layout ``write_sstables`` produces; for a streaming
-    sink's batch waves use ``sinks.ring.compact_stream_batches``).
+    range — the layout ``write_sstables`` produces; for bulk-load
+    waves under ``batch_id=*`` use ``sinks.ring.compact_stream_batches``).
     Column names for the key/clustering come from the caller (sstables
     do not store them); types come from each sstable's own
     Statistics.db. Returns the new sstable's close() manifest plus
     ``inputs`` (count) and ``rows_dropped`` (overwritten by LWW)."""
-    tocs = sorted(f for f in os.listdir(directory) if f.endswith("-TOC.txt"))
-    if not tocs:
+    prefixes = sstable_prefixes(directory)
+    if not prefixes:
         raise ValueError(f"no sstables in {directory}")
-    prefixes = sorted(
-        (f[: -len("-TOC.txt")] for f in tocs),
-        key=lambda p: int(p.split("-")[1]),
-    )
     return compact_sstable_inputs(
         [(directory, p) for p in prefixes],
         out_dir,
@@ -2020,7 +2026,7 @@ def compact_sstable_inputs(
     ascending authority order — later inputs win timestamp ties, the
     way a higher generation or a later batch wave should) into one new
     sstable. The in-directory ``compact_sstables`` and the per-range
-    streaming-wave ``sinks.ring.compact_stream_batches`` both delegate
+    bulk-load-wave ``sinks.ring.compact_stream_batches`` both delegate
     here.
 
     Winning rows keep their OWN write timestamps in the output (per-row

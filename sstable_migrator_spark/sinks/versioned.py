@@ -99,17 +99,6 @@ def _publish(path: str, manifest: dict, base_version: int | None = None) -> int:
             raise ConcurrentWriteError(
                 f"snapshot advanced to v{latest} after reading v{base_version}"
             )
-        # stream_txn records are WRITER PROGRESS, not content: every
-        # commit carries them forward (Delta keeps txn actions through
-        # compact/merge/restore for the same reason) — a maintenance
-        # commit that dropped them would let a replayed micro-batch
-        # double-append after the next stream restart.
-        if latest:
-            prev_txn = _load(path, latest).get("stream_txn")
-            if prev_txn:
-                merged = dict(prev_txn)
-                merged.update(manifest.get("stream_txn", {}))
-                manifest["stream_txn"] = merged
         v = latest + 1
         manifest["version"] = v
         target = os.path.join(_manifest_dir(path), f"v{v:06d}.json")
@@ -130,7 +119,6 @@ def versioned_write(
     path: str,
     mode: str = "append",
     stats_cols: list[str] | None = None,
-    txn: tuple[str, int] | None = None,
 ) -> int:
     """Commit ``df`` as a new snapshot. ``append`` keeps the previous
     snapshot's directories; ``overwrite`` starts fresh (old data stays
@@ -142,27 +130,12 @@ def versioned_write(
     ``predicates`` then prunes files at plan time without opening any
     footer. Stats from the base snapshot's directories carry forward
     on append; directories committed without stats are simply never
-    pruned (correctness does not depend on coverage).
-
-    ``txn=(writer_id, epoch)`` makes the append IDEMPOTENT per writer
-    (Delta's txn action): if the latest snapshot already records an
-    epoch >= this one for ``writer_id``, the commit is a no-op
-    returning the current version — which is what lets a Structured
-    Streaming foreachBatch retry replay a micro-batch without
-    double-appending it (``streaming.daily.write_versioned_stream``)."""
+    pruned (correctness does not depend on coverage)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if txn is not None and mode != "append":
-        raise ValueError("txn idempotence applies to append commits only")
     prev = _versions(path)
     base_v = prev[-1] if prev else 0
     base_manifest = _load(path, base_v) if (mode == "append" and base_v) else {}
-    txns: dict = dict(base_manifest.get("stream_txn", {}))
-    if txn is not None:
-        writer, epoch = txn
-        if writer in txns and txns[writer] >= epoch:
-            return base_v  # replayed micro-batch: already committed
-        txns[writer] = int(epoch)
     dirname = f"v{uuid.uuid4().hex[:12]}"
     data_dir = os.path.join(path, "data", dirname)
     df.write.mode("error").parquet(data_dir)
@@ -180,8 +153,6 @@ def versioned_write(
     manifest = {"op": mode, "ts": time.time(), "dirs": base + [rel]}
     if file_stats:
         manifest["file_stats"] = file_stats
-    if txns:
-        manifest["stream_txn"] = txns
     return _publish(
         path, manifest, base_version=base_v if mode == "append" else None
     )

@@ -18,26 +18,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sstable_migrator_spark import schemas
-
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """S1/S3 — schema'd CSV scan (no header, positional, like the
     reference's wire formats)."""
     return spark.read.schema(schema).option("mode", "PERMISSIVE").csv(path)
-
-
-def read_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S2 — raw line source (stdin analog); one ``value`` column."""
-    return spark.read.text(path)
-
-
-def read_dns_records(spark: SparkSession, path: str) -> DataFrame:
-    return read_csv(spark, path, schemas.DNS_RECORDS)
-
-
-def read_subdomain_list(spark: SparkSession, path: str) -> DataFrame:
-    return read_csv(spark, path, schemas.SUBDOMAIN_LIST)
 
 
 def parse_csv_lines(lines: DataFrame, n_fields: int, names: list[str]) -> DataFrame:
@@ -57,19 +42,6 @@ def read_surt_lines(spark: SparkSession, path: str) -> DataFrame:
     """S6 — CommonCrawl cdx/SURT shard scan. Pass a glob covering all
     shards; one distributed job replaces the sequential shard loop."""
     return spark.read.text(path)
-
-
-def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-testdata convenience: one TPC-H-ish table."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: read_parquet_table(spark, sf_dir, n) for n in names}
 
 
 def stage_url(

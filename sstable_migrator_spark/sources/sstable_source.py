@@ -97,8 +97,8 @@ def read_sstables(
     # (write_sstables max_rows_per_sstable) holds several generations
     # in one range dir; each is its own scan task. NOTE: all sstables
     # are unioned verbatim — a directory holding uncompacted OVERWRITE
-    # generations must be compacted first (compact_stream_batches /
-    # streaming.sstable_ingest), exactly as the q179 path does.
+    # generations must be compacted first (compact_stream_batches),
+    # exactly as the q179 path does.
     tables = [
         (d, f[: -len("-TOC.txt")])
         for d in dirs

@@ -1,1 +1,2 @@
-from sstable_migrator_spark.streaming import daily  # noqa: F401
+"""File-arrival drains: the corpus admission gate (corpus_ingest) and
+the URL frontier (frontier)."""

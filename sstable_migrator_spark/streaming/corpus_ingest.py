@@ -7,9 +7,8 @@ ingested) applied per availableNow drain: a file stream of newly
 landed documents is gated inside ``foreachBatch`` — each micro-batch
 is a plain DataFrame, so the batch operator runs UNCHANGED, admitted
 rows append to the corpus store, and the source checkpoint guarantees
-a document is judged exactly once. This is the same ledger discipline
-streaming/sstable_ingest uses for sstable waves, applied to corpus
-curation: a quiet day costs one empty drain.
+a document is judged exactly once. A quiet day costs one empty
+drain.
 
 THE STATE STORE (what makes a drain O(day), not O(corpus)): the gate
 maintains ``<corpus>/_dedup_state`` — a parquet table of

@@ -3,12 +3,6 @@ from __future__ import annotations
 import pytest
 
 from sstable_migrator_spark.session import get_spark
-from sstable_migrator_spark.streaming.protoshim import ensure_protobuf
-
-# BEFORE any SparkSession exists: python workers inherit PYTHONPATH from
-# the JVM's launch environment, and the transformWithState worker needs
-# google.protobuf (real if installed, vendored shim otherwise)
-ensure_protobuf()
 
 SF_DIR = "/root/testdata/sf0.001"
 SF_DIR_MED = "/root/testdata/sf0.01"

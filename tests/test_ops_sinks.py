@@ -36,43 +36,3 @@ def test_notify_outbox_and_transport(tmp_path):
 
     with pytest.raises(ValueError):
         notify("r3", {})
-
-
-def test_streaming_progress_summary(spark, tmp_path):
-    """Watermarked stream drains via availableNow; the progress summary
-    yields run-log-ready integers including state-operator rows."""
-    from pyspark.sql import functions as F
-
-    from sstable_migrator_spark.sinks.ops import (
-        append_run_log,
-        streaming_progress_summary,
-    )
-
-    src = tmp_path / "ev"
-    src.mkdir()
-    (src / "a.csv").write_text(
-        "1,2024-01-01 00:00:00\n1,2024-01-01 00:30:00\n2,2024-01-01 01:10:00\n"
-    )
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp").csv(str(src))
-        .withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    s = streaming_progress_summary(q)
-    assert s["input_rows"] == 3
-    assert s["batch_id"] >= 0
-    assert any(k.endswith("_rows") for k in s if k.startswith("state"))
-    # drops straight into the K8 run log
-    log = str(tmp_path / "runlog")
-    append_run_log(spark, log, "s1", "stream_tick", s, ts=1.0)
-    assert spark.read.parquet(log).count() == 1

@@ -3,6 +3,8 @@ last-write-wins, verified by the independent reader."""
 
 from __future__ import annotations
 
+import glob
+
 import pytest
 
 from sstable_migrator_spark.sinks.sstable_format import (
@@ -126,6 +128,55 @@ def test_compact_stream_batches(spark, tmp_path):
     assert got["k3"] == (103, "wave1")   # overwritten by wave 1
     assert got["k4"] == (4, "wave0")     # untouched
     assert got["fresh5"] == (1005, "wave1")
+
+
+def test_compact_stream_batches_keeps_every_capped_generation(spark, tmp_path):
+    """A row-capped wave holds several sstables per range directory;
+    compaction must merge all of them, and a later wave still wins
+    exact timestamp ties even when its generation numbers are lower."""
+    from sstable_migrator_spark.sinks.ring import (
+        build_ring,
+        compact_stream_batches,
+        write_sstables,
+    )
+    from sstable_migrator_spark.sinks.sstable_format import sstable_prefixes
+    from sstable_migrator_spark.sources.sstable_source import read_sstables
+
+    ring = build_ring(["solo"], vnodes_per_node=1)  # one range owns all
+    root = tmp_path / "waves"
+    w0 = [(f"k{i}", i, "wave0") for i in range(100)]
+    w1 = [(f"k{i}", 100 + i, "wave1") for i in range(0, 100, 5)]
+    for bid, rows, cap in ((0, w0, 30), (1, w1, 8)):
+        write_sstables(
+            spark.createDataFrame(rows, "k string, seq bigint, v string"),
+            str(root / f"batch_id={bid}"), keyspace="ks", table="t",
+            partition_key=["k"], clustering=[], ring=ring, rf=1,
+            write_timestamp_us=1700000000000000,  # same stamp: a tie
+            max_rows_per_sstable=cap,
+        )
+    gens = [
+        sstable_prefixes(d)
+        for d in sorted(glob.glob(str(root / "batch_id=*" / "cass_range=*")))
+    ]
+    assert len(gens) == 2 and len(gens[0]) > 1 and len(gens[1]) > 1, gens
+
+    out = str(tmp_path / "compacted")
+    manifests = compact_stream_batches(
+        spark, str(root), out, keyspace="ks", table="t", partition_key=["k"]
+    )
+    assert len(manifests) == 1
+    assert manifests[0]["inputs"] == len(gens[0]) + len(gens[1])
+    assert manifests[0]["rows"] == 100
+    assert manifests[0]["rows_dropped"] == 20
+
+    got = {
+        r["k"]: (r["seq"], r["v"])
+        for r in read_sstables(spark, out, partition_key=["k"]).collect()
+    }
+    assert got == {
+        f"k{i}": (100 + i, "wave1") if i % 5 == 0 else (i, "wave0")
+        for i in range(100)
+    }
 
 
 # --- property: merge vs a pure-Python LWW model ---------------------------

@@ -1,5 +1,9 @@
-"""Structured-Streaming micro-batch parity (SURVEY T1-T3): the daily
-cron tick as availableNow triggers with watermarked dedup."""
+"""File-arrival drains as Structured Streaming queries: availableNow
+ticks whose foreachBatch gates land documents in the corpus
+(streaming/corpus_ingest) and URLs in the crawl frontier
+(streaming/frontier), plus a stateless quality gate run unchanged
+inside a stream. The nightly DNS load is batch-only
+(tests/test_daily_pipeline.py)."""
 
 from __future__ import annotations
 
@@ -7,645 +11,6 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
-
-from sstable_migrator_spark.streaming.daily import run_available_now
-
-
-def test_available_now_micro_batch(spark, tmp_path):
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    (in_dir / "batch1.csv").write_text(
-        "www.example.com,A,1.2.3.4\n"
-        "dup.example.com,A,1.2.3.5\n"
-        "dup.example.com,A,1.2.3.6\n"
-    )
-    out_dir = str(tmp_path / "bronze")
-    ckpt = str(tmp_path / "ckpt")
-
-    run_available_now(spark, str(in_dir) + "/*.csv", out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    assert got.count() == 2  # in-batch duplicate suppressed
-    assert "batch_date" in got.columns
-
-    # second cron tick: new file, previously-seen key within watermark
-    (in_dir / "batch2.csv").write_text(
-        "dup.example.com,A,1.2.3.7\n"
-        "fresh.example.com,A,1.2.3.8\n"
-    )
-    run_available_now(spark, str(in_dir) + "/*.csv", out_dir, ckpt)
-    got = spark.read.parquet(out_dir)
-    doms = [r["domain"] for r in got.collect()]
-    assert sorted(doms) == ["dup.example.com", "fresh.example.com", "www.example.com"]
-
-
-def test_stateful_sessionize(spark, tmp_path):
-    """applyInPandasWithState sessionizer: a closed session is emitted as
-    soon as a later event exceeds the gap; the still-open session stays
-    in state (append semantics), then closes on the next batch."""
-    from pyspark.sql import types as T
-
-    from sstable_migrator_spark.streaming.daily import stateful_sessionize
-
-    in_dir = tmp_path / "ev"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("ts", T.TimestampType()),
-        ]
-    )
-
-    def run_tick():
-        stream = spark.readStream.schema(schema).csv(str(in_dir) + "/*.csv")
-        q = (
-            stateful_sessionize(stream, gap_seconds=1800)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # user 1: two events 10s apart, then a 2h jump (closes session 1),
-    # then one more event 5s later. user 2: single event.
-    (in_dir / "b1.csv").write_text(
-        "1,2024-01-01 00:00:00\n"
-        "1,2024-01-01 00:00:10\n"
-        "1,2024-01-01 02:00:00\n"
-        "1,2024-01-01 02:00:05\n"
-        "2,2024-01-01 00:00:00\n"
-    )
-    run_tick()
-    got = spark.read.parquet(out_dir).collect()
-    assert len(got) == 1  # only the CLOSED session is emitted
-    r = got[0]
-    assert r["user_id"] == 1 and r["n_events"] == 2
-    assert r["session_start"].isoformat() == "2024-01-01T00:00:00"
-    assert r["session_end"].isoformat() == "2024-01-01T00:00:10"
-
-    # batch 2: an event far past both open sessions closes them
-    (in_dir / "b2.csv").write_text(
-        "1,2024-01-02 00:00:00\n"
-        "2,2024-01-02 00:00:00\n"
-    )
-    run_tick()
-    rows = spark.read.parquet(out_dir).collect()
-    closed = sorted((r["user_id"], r["n_events"]) for r in rows)
-    # session 1 (batch 1) + the two opens closed by batch 2
-    assert closed == [(1, 2), (1, 2), (2, 1)]
-    # exactly-once: a no-new-data rerun from the same checkpoint must
-    # not reprocess or re-emit anything
-    run_tick()
-    assert spark.read.parquet(out_dir).count() == len(rows)
-
-
-def test_routed_stream_sink_multi_table(spark, tmp_path):
-    """foreachBatch multi-sink: ONE micro-batch parse feeds all three
-    routed tables (the streaming twin of daily_upload_job); a second
-    tick appends without reprocessing the first batch (checkpoint)."""
-    from sstable_migrator_spark import schemas
-    from sstable_migrator_spark.sources import dims
-    from sstable_migrator_spark.streaming.daily import routed_stream_sink
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    (in_dir / "b1.csv").write_text(
-        "www.example.com,A,1.2.3.4\n"
-        "alias.example.org,CNAME,target.example.net\n"
-        "bad_domain_,A,1.2.3.5\n"
-    )
-    out_dir = str(tmp_path / "tables")
-    ckpt = str(tmp_path / "ckpt")
-    stream = spark.readStream.schema(schemas.DNS_RECORDS).csv(str(in_dir) + "/*.csv")
-    q = routed_stream_sink(
-        stream,
-        dims.synthetic_geoip_city(spark),
-        dims.synthetic_geoip_asn(spark),
-        out_dir,
-        ckpt,
-    )
-    q.awaitTermination()
-
-    rdns = spark.read.parquet(f"{out_dir}/rdnsv4")
-    subs = spark.read.parquet(f"{out_dir}/subdomains")
-    cnames = spark.read.parquet(f"{out_dir}/cnames")
-    # A record lands in BOTH rdns and subdomains; CNAME only in cnames
-    assert rdns.count() == 1
-    assert subs.count() == 1
-    assert cnames.count() == 1
-    assert rdns.collect()[0]["ipAddress"] == "1.2.3.4"
-    assert cnames.collect()[0]["target"] == "target.example.net"
-
-    # tick 2: only the new file is processed (checkpoint), appends add up
-    (in_dir / "b2.csv").write_text("another.example.io,A,9.8.7.6\n")
-    stream = spark.readStream.schema(schemas.DNS_RECORDS).csv(str(in_dir) + "/*.csv")
-    q = routed_stream_sink(
-        stream,
-        dims.synthetic_geoip_city(spark),
-        dims.synthetic_geoip_asn(spark),
-        out_dir,
-        ckpt,
-    )
-    q.awaitTermination()
-    assert spark.read.parquet(f"{out_dir}/rdnsv4").count() == 2
-    assert spark.read.parquet(f"{out_dir}/cnames").count() == 1
-
-
-def test_ttl_dedup_stream(spark, tmp_path):
-    """transformWithState TTL dedup: first occurrence of a key passes,
-    cross-batch and in-batch repeats are dropped while state lives.
-
-    transformWithState's Python worker needs google.protobuf for the
-    state-server protocol; the vendored shim (streaming/protoshim.py,
-    activated in conftest BEFORE the session so workers inherit the
-    PYTHONPATH) stands in when no real wheel is installed.
-
-    The query runs as ONE always-on stream (processing-time trigger,
-    stopped explicitly) — its production shape. availableNow is
-    deliberately NOT used: with TTL state enabled every micro-batch
-    advances the batch timestamp, TransformWithState then reports more
-    TTL work, and the run-one-more-batch loop never drains ("No new
-    data but cleaning up state" forever) — a trigger/TTL interaction
-    worth knowing about at any scale."""
-    import time
-
-    from sstable_migrator_spark.streaming.protoshim import ensure_protobuf
-
-    ensure_protobuf()
-    from pyspark.sql import types as T
-
-    from sstable_migrator_spark.streaming.daily import ttl_dedup_stream
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    in_dir = tmp_path / "feed"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "deduped")
-    ckpt = str(tmp_path / "ckpt_ttl")
-    schema = T.StructType(
-        [
-            T.StructField("domain", T.StringType()),
-            T.StructField("ip", T.StringType()),
-        ]
-    )
-
-    (in_dir / "b1.csv").write_text(
-        "a.example.com,1.1.1.1\n"
-        "a.example.com,1.1.1.2\n"   # in-batch repeat collapses
-        "b.example.com,2.2.2.2\n"
-    )
-    stream = spark.readStream.schema(schema).csv(str(in_dir) + "/*.csv")
-    q = (
-        ttl_dedup_stream(stream, key_col="domain", ttl_ms=3600_000)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(processingTime="1 second")
-        .start()
-    )
-
-    def wait_for(expected: set[str], timeout_s: float = 180.0) -> set[str]:
-        deadline = time.monotonic() + timeout_s
-        got: set[str] = set()
-        while time.monotonic() < deadline:
-            if q.exception():
-                raise AssertionError(f"query failed: {q.exception()}")
-            try:
-                got = {r["domain"] for r in spark.read.parquet(out_dir).collect()}
-            except Exception:  # noqa: BLE001 — sink not committed yet
-                got = set()
-            if got == expected:
-                return got
-            time.sleep(2)
-        raise AssertionError(f"timed out waiting for {expected}, got {got}")
-
-    try:
-        wait_for({"a.example.com", "b.example.com"})
-
-        (in_dir / "b2.csv").write_text(
-            "a.example.com,9.9.9.9\n"   # cross-batch repeat: dropped
-            "c.example.com,3.3.3.3\n"
-        )
-        wait_for({"a.example.com", "b.example.com", "c.example.com"})
-        rows = spark.read.parquet(out_dir).collect()
-        assert len(rows) == 3  # the two repeats never reached the sink
-    finally:
-        q.stop()
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_streaming_near_dup_across_batches(spark, tmp_path):
-    """Cross-batch near-dup: a doc arriving in a LATER availableNow run
-    (fresh query, same checkpoint) is flagged against a signature
-    registered in an earlier run — state survives via the checkpoint."""
-    from sstable_migrator_spark.streaming.daily import streaming_near_dup_candidates
-
-    base = ("the quick brown fox jumps over the lazy dog while the cat "
-            "sleeps near the warm stove in the old kitchen")
-    other = "completely different text about spark engines and shuffle plans"
-
-    src = tmp_path / "docs"
-    src.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-
-    out = str(tmp_path / "hits")
-
-    def drain(_name):
-        stream = spark.readStream.schema("doc_id long, text string").json(str(src))
-        q = (
-            streaming_near_dup_candidates(stream, num_hashes=16, bands=8,
-                                          min_matches=10)
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination(120)
-        try:
-            return spark.read.parquet(out).collect()
-        except Exception:  # no files yet (no hits emitted)
-            return []
-
-    import json as _json
-    (src / "b1.jsonl").write_text(
-        "\n".join(_json.dumps({"doc_id": i, "text": t})
-                  for i, t in [(0, base), (1, other)])
-    )
-    first = drain("nd_run1")
-    assert first == []  # nothing to collide with yet
-
-    (src / "b2.jsonl").write_text(
-        _json.dumps({"doc_id": 10, "text": base.replace("cat", "bird")})
-    )
-    second = drain("nd_run2")
-    hits = {(r["doc_id"], r["dup_of"]) for r in second}
-    assert hits == {(10, 0)}
-    assert all(r["matches"] >= 10 for r in second)
-
-
-def test_sessionize_event_time_timeout(spark, tmp_path):
-    """EventTimeTimeout close semantics: sessions of users who never
-    return are emitted once the watermark (driven by OTHER users'
-    events) passes session end + gap — no per-user poke needed."""
-    from pyspark.sql import types as T
-
-    from sstable_migrator_spark.streaming.daily import stateful_sessionize_event_time
-
-    in_dir = tmp_path / "ev"
-    in_dir.mkdir()
-    out_dir = str(tmp_path / "sessions")
-    ckpt = str(tmp_path / "ckpt")
-    schema = T.StructType(
-        [T.StructField("user_id", T.LongType()), T.StructField("ts", T.TimestampType())]
-    )
-
-    def run_tick():
-        stream = spark.readStream.schema(schema).csv(str(in_dir) + "/*.csv")
-        q = (
-            stateful_sessionize_event_time(stream, gap_seconds=1800,
-                                           watermark="10 minutes")
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    (in_dir / "b1.csv").write_text(
-        "1,2024-01-01 00:00:00\n1,2024-01-01 00:00:10\n2,2024-01-01 00:00:30\n"
-    )
-    run_tick()
-    import glob
-
-    first = (spark.read.parquet(out_dir).collect()
-             if glob.glob(f"{out_dir}/*.parquet") else [])
-    assert first == []  # watermark hasn't passed end+gap yet
-
-    # ONLY user 99 appears later; its event pushes the watermark past
-    # users 1 and 2's (end + 30 min), closing their sessions unpoked
-    (in_dir / "b2.csv").write_text("99,2024-01-01 03:00:00\n")
-    run_tick()
-    rows = spark.read.parquet(out_dir).collect()
-    got = {(r["user_id"], r["n_events"]) for r in rows}
-    assert got == {(1, 2), (2, 1)}
-    for r in rows:
-        if r["user_id"] == 1:
-            assert r["session_start"].isoformat() == "2024-01-01T00:00:00"
-            assert r["session_end"].isoformat() == "2024-01-01T00:00:10"
-
-
-def test_watermark_dedup_within(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: key-only dedup across micro-
-    batches with evictable state — repeats with DIFFERENT event times
-    collapse; a fresh key passes."""
-    from pyspark.sql import types as T
-
-    from sstable_migrator_spark.streaming.daily import watermark_dedup_within
-
-    in_dir = tmp_path / "in"
-    in_dir.mkdir()
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-    schema = T.StructType([
-        T.StructField("domain", T.StringType()),
-        T.StructField("seen_ts", T.TimestampType()),
-    ])
-
-    def tick():
-        stream = spark.readStream.schema(schema).csv(str(in_dir) + "/*.csv")
-        q = (
-            watermark_dedup_within(stream, key="domain", window="1 hour")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ck)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    (in_dir / "b1.csv").write_text(
-        "a.com,2024-01-01 10:00:00\n"
-        "a.com,2024-01-01 10:05:00\n"   # same key, different ts: collapses
-        "b.com,2024-01-01 10:00:00\n"
-    )
-    tick()
-    assert sorted(r["domain"] for r in spark.read.parquet(out).collect()) == [
-        "a.com", "b.com",
-    ]
-    (in_dir / "b2.csv").write_text(
-        "a.com,2024-01-01 10:10:00\n"   # cross-batch repeat inside window
-        "c.com,2024-01-01 10:10:00\n"
-    )
-    tick()
-    assert sorted(r["domain"] for r in spark.read.parquet(out).collect()) == [
-        "a.com", "b.com", "c.com",
-    ]
-
-def test_write_sstable_stream(spark, tmp_path):
-    """Stream -> real SSTables: two micro-batch ticks land batch_id
-    subtrees of readable BIG-format sstables; the union of all batches
-    holds every streamed row exactly once, token-ordered per range."""
-    import glob
-
-    from pyspark.sql import types as T
-
-    from sstable_migrator_spark.sinks.ring import build_ring
-    from sstable_migrator_spark.sinks.sstable_format import read_sstable
-    from sstable_migrator_spark.streaming.daily import write_sstable_stream
-
-    ring = build_ring(["n1", "n2"], vnodes_per_node=2)
-    in_dir = tmp_path / "feed"
-    in_dir.mkdir()
-    out = str(tmp_path / "sstables")
-    ck = str(tmp_path / "ck")
-    schema = T.StructType([
-        T.StructField("domain", T.StringType()),
-        T.StructField("source", T.StringType()),
-    ])
-
-    def tick():
-        stream = spark.readStream.schema(schema).csv(str(in_dir) + "/*.csv")
-        q = write_sstable_stream(
-            stream, out, ck, keyspace="ferret", table="cnames",
-            partition_key=["domain"], clustering=[], ring=ring, rf=2,
-        )
-        q.awaitTermination()
-
-    (in_dir / "b1.csv").write_text(
-        "".join(f"dom{i}.example.com,crt\n" for i in range(30))
-    )
-    tick()
-    (in_dir / "b2.csv").write_text(
-        "".join(f"late{i}.example.org,ct\n" for i in range(10))
-    )
-    tick()
-
-    seen = set()
-    for d in glob.glob(f"{out}/batch_id=*/cass_range=*"):
-        got = read_sstable(d)
-        assert got["index_ok"] and got["digest_ok"] and got["crc_ok"]
-        toks = [p["token"] for p in got["partitions"]]
-        assert toks == sorted(toks)
-        for p in got["partitions"]:
-            dom = p["key_components"][0].decode()
-            assert dom not in seen  # batches are disjoint, ranges disjoint
-            seen.add(dom)
-    assert len(seen) == 40
-    assert len(glob.glob(f"{out}/batch_id=*")) == 2
-    # each batch dir carries its own stream manifest
-    assert len(glob.glob(f"{out}/batch_id=*/_stream_plan.json")) == 2
-
-    # drain again with the same checkpoint and no new files: no new
-    # batch dir, no duplicated rows
-    tick()
-    assert len(glob.glob(f"{out}/batch_id=*")) == 2
-    assert sum(
-        len(p["rows"])
-        for d in glob.glob(f"{out}/batch_id=*/cass_range=*")
-        for p in read_sstable(d)["partitions"]
-    ) == 40
-
-
-def test_interval_stream_join_multikey_inner(spark, tmp_path):
-    """Stream-stream interval join: clicks attribute to the impression
-    whose [ts, ts + 10m] window holds them; out-of-window and
-    foreign-key clicks drop."""
-    from sstable_migrator_spark.streaming.joins import interval_stream_join
-
-    imp_dir, clk_dir = tmp_path / "imp", tmp_path / "clk"
-    imp_dir.mkdir(), clk_dir.mkdir()
-    (imp_dir / "i.csv").write_text(
-        "ad1,2024-05-01 10:00:00\n"
-        "ad2,2024-05-01 10:00:00\n"
-        "ad3,2024-05-01 12:00:00\n"
-    )
-    (clk_dir / "c.csv").write_text(
-        "ad1,2024-05-01 10:05:00\n"   # in window -> match
-        "ad2,2024-05-01 10:20:00\n"   # 20m later -> out of window
-        "adX,2024-05-01 10:01:00\n"   # no impression
-        "ad3,2024-05-01 11:59:00\n"   # BEFORE the impression -> no match
-    )
-    imps = (
-        spark.readStream.schema("ad_id string, imp_ts timestamp")
-        .csv(str(imp_dir))
-    )
-    clicks = (
-        spark.readStream.schema("ad_id string, click_ts timestamp")
-        .csv(str(clk_dir))
-    )
-    joined = interval_stream_join(
-        imps, clicks, on=["ad_id"], left_ts="imp_ts", right_ts="click_ts",
-        max_delay="10 minutes",
-    )
-    out = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    assert [(r["ad_id"], str(r["click_ts"])) for r in rows] == [
-        ("ad1", "2024-05-01 10:05:00")
-    ]
-
-
-def test_interval_stream_join_left_outer_timeout(spark, tmp_path):
-    """leftOuter: an impression with no click emits null click columns
-    once the watermark proves no click can still arrive (a far-later
-    row on both streams advances it)."""
-    from sstable_migrator_spark.streaming.joins import interval_stream_join
-
-    imp_dir, clk_dir = tmp_path / "imp", tmp_path / "clk"
-    imp_dir.mkdir(), clk_dir.mkdir()
-    (imp_dir / "i.csv").write_text(
-        "ad1,2024-05-01 10:00:00\n"
-        "ad2,2024-05-01 10:00:00\n"
-        "late,2024-05-02 10:00:00\n"  # watermark driver
-    )
-    (clk_dir / "c.csv").write_text(
-        "ad1,2024-05-01 10:03:00\n"
-        "late,2024-05-02 10:00:30\n"  # watermark driver
-    )
-    imps = (
-        spark.readStream.schema("ad_id string, imp_ts timestamp")
-        .csv(str(imp_dir))
-    )
-    clicks = (
-        spark.readStream.schema("ad_id string, click_ts timestamp")
-        .csv(str(clk_dir))
-    )
-    joined = interval_stream_join(
-        imps, clicks, on=["ad_id"], left_ts="imp_ts", right_ts="click_ts",
-        max_delay="5 minutes", watermark="1 minute", right_watermark="1 minute",
-        how="leftOuter",
-    )
-    out = str(tmp_path / "out")
-    q = (
-        joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["ad_id"]: (None if r["click_ts"] is None else str(r["click_ts"]))
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got["ad1"] == "2024-05-01 10:03:00"  # matched
-    assert "ad2" in got and got["ad2"] is None  # timed out -> null click
-
-
-def test_interval_stream_join_misuse(spark):
-    from sstable_migrator_spark.streaming.joins import interval_stream_join
-
-    a = spark.readStream.format("rate").load()  # timestamp, value
-    b = spark.readStream.format("rate").load()
-    a2 = a.withColumnRenamed("timestamp", "ts_a")
-    b2 = b.withColumnRenamed("timestamp", "ts_b")
-    with pytest.raises(ValueError, match="inner|leftOuter"):
-        interval_stream_join(a2, b2, ["value"], "ts_a", "ts_b", how="full")
-    with pytest.raises(ValueError, match="at least one"):
-        interval_stream_join(a2, b2, [], "ts_a", "ts_b")
-    with pytest.raises(ValueError, match="distinct names"):
-        interval_stream_join(a, b, ["value"], "timestamp", "timestamp")
-    with pytest.raises(ValueError, match="both sides"):
-        interval_stream_join(
-            a2.withColumn("x", a2["value"]),
-            b2.withColumn("x", b2["value"]),
-            ["value"], "ts_a", "ts_b",
-        )
-
-
-def test_sstable_ingest_available_now(spark, tmp_path):
-    """Incremental reverse-migration: two sstable waves landing across
-    two availableNow drains must reconcile to the same snapshot as one
-    batch compaction over both waves (the q179 path), and a drain with
-    nothing new must be a no-op."""
-    from sstable_migrator_spark.sinks.ring import (
-        build_ring,
-        compact_stream_batches,
-        write_sstables,
-    )
-    from sstable_migrator_spark.sources.sstable_source import read_sstables
-    from sstable_migrator_spark.streaming.sstable_ingest import (
-        compact_sstables_available_now,
-    )
-
-    root = str(tmp_path / "landing")
-    out = str(tmp_path / "snapshot")
-    ckpt = str(tmp_path / "ckpt")
-    ring = build_ring(["n1", "n2"], vnodes_per_node=3)
-    base = spark.createDataFrame(
-        [(i, f"name-{i}") for i in range(60)], "k long, name string"
-    )
-    kw = dict(
-        keyspace="ks", table="t", partition_key=["k"], clustering=[], ring=ring,
-        rf=1,
-    )
-
-    # wave 0 lands, first drain
-    write_sstables(base, f"{root}/batch_id=0", write_timestamp_us=1700000000000000, **kw)
-    d1 = compact_sstables_available_now(
-        spark, root, out, ckpt, keyspace="ks", table="t", partition_key=["k"]
-    )
-    assert d1, "first drain saw no sstables"
-    got = {r["k"]: r["name"] for r in read_sstables(spark, out, partition_key=["k"]).collect()}
-    assert got == {i: f"name-{i}" for i in range(60)}
-
-    # wave 1 lands (every third key rewritten, later timestamp), second drain
-    wave1 = base.filter(F.col("k") % 3 == 0).withColumn("name", F.upper("name"))
-    write_sstables(wave1, f"{root}/batch_id=1", write_timestamp_us=1700000000000001, **kw)
-    d2 = compact_sstables_available_now(
-        spark, root, out, ckpt, keyspace="ks", table="t", partition_key=["k"]
-    )
-    assert d2
-    # each folded range merged exactly snapshot + the one new wave
-    assert all(m["inputs"] <= 2 for m in d2), d2
-    got = {r["k"]: r["name"] for r in read_sstables(spark, out, partition_key=["k"]).collect()}
-    expect = {
-        i: (f"name-{i}".upper() if i % 3 == 0 else f"name-{i}") for i in range(60)
-    }
-    assert got == expect
-
-    # equivalence with the batch path over both waves at once
-    batch_out = str(tmp_path / "batch_snapshot")
-    compact_stream_batches(
-        spark, root, batch_out, keyspace="ks", table="t", partition_key=["k"]
-    )
-    batch_rows = {
-        r["k"]: r["name"]
-        for r in read_sstables(spark, batch_out, partition_key=["k"]).collect()
-    }
-    assert batch_rows == got
-
-    # a drain with nothing new is a no-op (checkpoint ledger holds)
-    d3 = compact_sstables_available_now(
-        spark, root, out, ckpt, keyspace="ks", table="t", partition_key=["k"]
-    )
-    assert d3 == []
-    # and each snapshot range dir holds exactly one sstable
-    import os
-
-    for rd in os.listdir(out):
-        if not rd.startswith("cass_range="):
-            continue
-        tocs = [f for f in os.listdir(os.path.join(out, rd)) if f.endswith("-TOC.txt")]
-        assert len(tocs) == 1, (rd, tocs)
-
 
 def test_streaming_quality_gate(spark, tmp_path):
     """The frozen-weight quality scorer is a stateless projection, so

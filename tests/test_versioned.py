@@ -326,80 +326,6 @@ def test_compact_keeps_stats_and_optimize_zorder(spark, tmp_path):
     assert read_version(spark, path, version=v2).count() == 4000
 
 
-def test_versioned_stream_sink_idempotent(spark, tmp_path):
-    """Streaming commits: one snapshot per micro-batch, replayed
-    batches no-op via the manifest txn record, stats prune."""
-    from pyspark.sql import functions as F
-
-    from sstable_migrator_spark.sinks.versioned import (
-        history,
-        read_version,
-        versioned_write,
-    )
-    from sstable_migrator_spark.streaming.daily import write_versioned_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "a.csv").write_text("".join(f"{i},x{i}\n" for i in range(100)))
-    table = str(tmp_path / "table")
-
-    stream = spark.readStream.schema("id long, s string").csv(str(src))
-    q = write_versioned_stream(
-        stream, table, str(tmp_path / "ck"), writer_id="w1", stats_cols=["id"]
-    )
-    q.awaitTermination(120)
-    assert read_version(spark, table).count() == 100
-
-    # second tick with a new file appends exactly its rows
-    (src / "b.csv").write_text("".join(f"{i},y{i}\n" for i in range(100, 150)))
-    q = write_versioned_stream(
-        stream, table, str(tmp_path / "ck"), writer_id="w1", stats_cols=["id"]
-    )
-    q.awaitTermination(120)
-    assert read_version(spark, table).count() == 150
-
-    # a REPLAYED batch epoch no-ops: same writer, stale batch_id
-    n_versions = len(history(table))
-    df = spark.createDataFrame([(999, "dup")], "id long, s string")
-    v = versioned_write(df, table, txn=("w1", 0))
-    assert len(history(table)) == n_versions and v == n_versions
-    assert read_version(spark, table).filter(F.col("id") == 999).count() == 0
-
-    # per-batch stats prune
-    got = read_version(spark, table, predicates=[("id", ">=", 120)])
-    assert got.count() == 30
-    total = len(read_version(spark, table).inputFiles())
-    assert len(got.inputFiles()) < total
-
-
-def test_stream_txn_survives_maintenance_commits(spark, tmp_path):
-    """compact / optimize_zorder / rollback / overwrite must carry the
-    txn records forward — a maintenance commit that dropped them would
-    let a replayed micro-batch double-append."""
-    from sstable_migrator_spark.sinks.versioned import (
-        compact,
-        optimize_zorder,
-        rollback,
-        versioned_write,
-    )
-
-    t = str(tmp_path / "t")
-    df = spark.range(100).selectExpr("id", "id % 7 AS m")
-    versioned_write(df, t, txn=("w1", 7))
-    compact(spark, t, order_by="id")
-    v = versioned_write(spark.range(100, 101).selectExpr("id", "id % 7 AS m"),
-                        t, txn=("w1", 7))  # replay AFTER compact: must no-op
-    assert read_version(spark, t).count() == 100
-    assert history(t)[-1]["version"] == v  # no new commit
-
-    optimize_zorder(spark, t, ["id"], n_files=2)
-    rollback(t, 1)
-    v2 = versioned_write(spark.range(200, 201).selectExpr("id", "id % 7 AS m"),
-                         t, txn=("w1", 6))  # still stale after optimize+rollback
-    assert read_version(spark, t).filter("id >= 200").count() == 0
-    assert history(t)[-1]["version"] == v2
-
-
 def test_rollback_restores_file_stats(spark, tmp_path):
     from sstable_migrator_spark.sinks.versioned import rollback, versioned_write
 
