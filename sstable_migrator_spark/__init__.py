@@ -17,8 +17,7 @@ Layout:
     operators/    relational + domain pipelines (clean, ingest, dedup,
                   analytics, simsearch, multimodal)
     plans/        plan-inspection helpers (pushdown / broadcast assertions)
-    pipelines/    the daily load (T1-T3) and the corpus/crawl funnels
-    streaming/    availableNow drains: corpus admission gate, URL frontier
+    pipelines/    the daily load (T1-T3) and the corpus/web-ingest funnels
 """
 
 __version__ = "0.1.0"

@@ -39,19 +39,3 @@ def cosine(a: Column, b: Column) -> Column:
     d = dot(a, b)
     na, nb = norm(a), norm(b)
     return F.when((na > 0) & (nb > 0), d / (na * nb)).otherwise(F.lit(0.0))
-
-
-def random_hyperplane_sign(vec: Column, plane: list[float]) -> Column:
-    """Sign bit of vec . plane — one bit of a random-hyperplane LSH
-    signature (cosine LSH). ``plane`` is a fixed literal, so this stays
-    pure expression; a k-bit signature is k of these concatenated."""
-    d = F.aggregate(
-        F.zip_with(
-            as_double(vec),
-            F.array(*[F.lit(float(p)) for p in plane]),
-            lambda x, y: x * y,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.when(d >= 0, F.lit(1)).otherwise(F.lit(0))

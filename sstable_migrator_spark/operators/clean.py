@@ -5,10 +5,10 @@ The reference fans each line across 500 goroutines and emits valid rows
 to stdout, rejects (prefixed ``EL``/``ED``/``EA``) to stderr
 (utils/cleaner/utils.go:95-165, clean_rdns.go, clean_subdomains.go,
 clean_cname.go). Here the worker pool is partition parallelism and the
-stream split is one cached DataFrame with an ``error_code`` column
-(NULL == valid) — see sinks.split_write. Output order is unordered on
-both sides (the Go pool does not preserve order), which licenses
-Spark's unordered semantics.
+stream split is one DataFrame with an ``error_code`` column
+(NULL == valid): filter on it for the valid and the reject side.
+Output order is unordered on both sides (the Go pool does not preserve
+order), which licenses Spark's unordered semantics.
 
 Error codes:
     EL  wrong arity (line doesn't split into the expected field count)

@@ -278,11 +278,10 @@ def build_dedup_state(
     """The persisted incremental-dedup state for a corpus: ONE pass
     over the text computes both the exact-dup fingerprint and the
     MinHash signature, exploded to ``bands`` rows per document —
-    ``(id, fp, signature, band, bucket)``. Persist to parquet (the
-    streaming admission gate maintains ``<corpus>/_dedup_state`` this
-    way) and feed it back as ``old_state=``: a daily drain then costs
-    O(day), never a corpus re-scan — the contract
-    ``incremental_dedup`` advertises."""
+    ``(id, fp, signature, band, bucket)``. Persist to parquet (e.g.
+    ``<corpus>/_dedup_state``) and feed it back as ``old_state=``: a
+    daily judgement then costs O(day), never a corpus re-scan — the
+    contract ``incremental_dedup`` advertises."""
     _check_bands(num_hashes, bands)
     sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_k)
     staged = sigs.select(
@@ -1561,12 +1560,11 @@ def contamination_flags(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Benchmark decontamination (q79's shape as a reusable operator —
-    the streaming admission gate composes it): flag every document
-    sharing any word-``shingle_k``-shingle with the held-out eval set.
-    The eval shingle set is small and fixed at any corpus scale — it
-    broadcasts, so the corpus side never shuffles for the probe; the
-    only shuffle is the per-doc rollup. Returns
+    """Benchmark decontamination (q79's shape as a reusable operator):
+    flag every document sharing any word-``shingle_k``-shingle with the
+    held-out eval set. The eval shingle set is small and fixed at any
+    corpus scale — it broadcasts, so the corpus side never shuffles for
+    the probe; the only shuffle is the per-doc rollup. Returns
     ``(id, n_shingles, n_hits, contaminated)``."""
     ev = (
         eval_docs.select(
@@ -1671,7 +1669,7 @@ def minhash_lsh_pairs_between(
     consumes its stored signatures directly. Passing ``old_docs``
     (text) instead recomputes them, which is correct but costs a
     corpus pass per call — fine for one-shots, wrong at daily cadence
-    (the streaming gate maintains the persisted form)."""
+    (persist the banded form once instead)."""
     _check_bands(num_hashes, bands)
     if (old_docs is None) == (old_banded is None):
         raise ValueError("pass exactly one of old_docs / old_banded")
@@ -1703,7 +1701,6 @@ def incremental_dedup(
     jaccard_threshold: float = 0.5,
     *,
     old_state: DataFrame | None = None,
-    new_state: DataFrame | None = None,
 ) -> DataFrame:
     """Admission decision for every NEW document against the existing
     corpus: ``(doc_id, exact_dup, n_near_dups, admitted)`` — exact_dup
@@ -1716,17 +1713,12 @@ def incremental_dedup(
     The old side is EITHER ``old_docs`` (text — re-fingerprints and
     re-hashes the whole corpus, one-shot use) OR ``old_state`` (a
     persisted ``build_dedup_state`` table — the production form: a
-    drain's cost then scales with the day, never the corpus; the
-    streaming admission gate maintains exactly that table under
-    ``<corpus>/_dedup_state``). ``new_state`` optionally supplies the
-    new side pre-built (the gate builds it once and reuses it for the
-    decision AND the state append)."""
+    day's cost then scales with the day, never the corpus)."""
     if (old_docs is None) == (old_state is None):
         raise ValueError("pass exactly one of old_docs / old_state")
-    if new_state is None:
-        new_state = build_dedup_state(
-            new_docs, text_col, id_col, num_hashes, bands, shingle_k
-        ).localCheckpoint()
+    new_state = build_dedup_state(
+        new_docs, text_col, id_col, num_hashes, bands, shingle_k
+    ).localCheckpoint()
     if old_state is None:
         old_state = build_dedup_state(
             old_docs, text_col, id_col, num_hashes, bands, shingle_k

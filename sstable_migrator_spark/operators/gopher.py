@@ -63,10 +63,10 @@ def gopher_quality_flags(
 ) -> DataFrame:
     """Per-document Gopher rule flags (1 = passes the rule) plus the
     integer counters behind them and the overall ``keep`` conjunction.
-    Pure projection — composes into the streaming admission gate and
-    the batch funnel alike. ``keep_cols`` carries extra input columns
-    through (e.g. the apex for a per-domain gate rollup, or the text
-    for further gates downstream) so the whole flag ensemble stays one
+    Pure projection — composes into any admission step or the batch
+    funnel alike. ``keep_cols`` carries extra input columns through
+    (e.g. the apex for a per-domain gate rollup, or the text for
+    further gates downstream) so the whole flag ensemble stays one
     map-side select."""
     text = F.col(text_col)
     # STAGED EVALUATION (round 10): the token/line arrays and the

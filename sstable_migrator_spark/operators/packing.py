@@ -38,8 +38,8 @@ PRECONDITION shared by every operator here: ``id_col`` must be UNIQUE
 that makes it a total order, which ``global_prefix_sum`` requires; a
 duplicated id could land its two rows on either side of a range
 boundary in arbitrary relative order). Corpus ids are unique by
-construction everywhere else in this engine (the admission gate, the
-funnel); enforce upstream if composing from raw inputs.
+construction everywhere else in this engine (the funnel); enforce
+upstream if composing from raw inputs.
 
 Reference analog: the PK-ordered write family (SURVEY §2 O2/O4) —
 ordering as a first-class output property — applied to the training

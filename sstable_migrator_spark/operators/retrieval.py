@@ -271,7 +271,6 @@ def write_postings_index(
     n_buckets: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    batch: int | None = None,
 ) -> dict:
     """Persist the postings as a QUERYABLE INDEX: real retrieval serves
     MANY queries against ONE corpus, so the corpus pass (tokenize +
@@ -286,13 +285,7 @@ def write_postings_index(
 
     Same shared-filesystem contract as every persisted store here:
     ``path`` must be visible to all executors
-    (sinks.scratch_path / SPARK_GRAFT_SCRATCH).
-
-    ``batch`` (streaming/corpus_ingest's first drain passes its
-    foreachBatch id) nests the rows under ``pb=<b>/batch=<bid>/`` so
-    the index's CREATING batch shares the uniform partition layout its
-    later idempotent appends use; serving prunes on the outer ``pb=``
-    either way."""
+    (sinks.scratch_path / SPARK_GRAFT_SCRATCH)."""
     from sstable_migrator_spark.functions import text as TX
 
     post = build_postings(
@@ -312,37 +305,24 @@ def write_postings_index(
         F.sum("_fst").cast("long").alias("n"),
         F.sum("tf").cast("long").alias("t"),
     ).drop("_fst")
-    parts = ["pb"]
-    if batch is not None:
-        keyed = keyed.withColumn("batch", F.lit(int(batch)))
-        parts.append("batch")
     keyed.repartition("pb").write.mode("overwrite").partitionBy(
-        *parts
+        "pb"
     ).parquet(path)
     spark = docs.sparkSession
     got = obs.get
     n, t = got["n"] or 0, got["t"]
-    _write_stats_base(
-        spark, path, int(n), int(t or 0), int(n_buckets),
-        batch=-1 if batch is None else int(batch),
-    )
+    _write_stats_base(spark, path, int(n), int(t or 0), int(n_buckets))
     return {"n": int(n), "t": int(t or 0), "n_buckets": int(n_buckets)}
 
 
-def _write_stats_base(
-    spark, path: str, n: int, t: int, n_buckets: int, batch: int = -1
-) -> None:
+def _write_stats_base(spark, path: str, n: int, t: int, n_buckets: int) -> None:
     """(Re)set ``_corpus_stats`` to a single BASE row. The stats table
-    is DELTA rows summed at read (base at ``batch=-1``, unkeyed append
-    deltas at ``batch=-2``, retry-keyed deltas at ``batch=<bid>``), so
-    incremental appends stay O(day) AND a retried streaming batch can
-    overwrite exactly its own delta instead of double-bumping. A
-    CREATING streaming batch keys its base row by its own bid (not -1)
-    so its retry-through-append self-excludes it correctly."""
+    is DELTA rows summed at read (base at ``batch=-1``, append deltas
+    at ``batch=-2``), so incremental appends stay O(day)."""
     from sstable_migrator_spark.sinks import local_rows_df
 
     local_rows_df(
-        spark, [(n, t, n_buckets, batch)], "n long, t long, n_buckets int, batch int"
+        spark, [(n, t, n_buckets, -1)], "n long, t long, n_buckets int, batch int"
     ).write.mode("overwrite").partitionBy("batch").parquet(
         os.path.join(path, "_corpus_stats")
     )
@@ -378,12 +358,11 @@ def append_postings_index(
     path: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    batch: int | None = None,
 ) -> dict:
     """INCREMENTAL index maintenance — the serve-path twin of the
     dedup state store: append the NEW documents' postings to an
     existing ``write_postings_index`` layout and bump the corpus
-    constants, so a daily drain costs O(day) for retrieval too (the
+    constants, so a daily append costs O(day) for retrieval too (the
     full rebuild re-tokenizes the corpus). The new docs' rows land in
     the same ``pb=`` directories (append mode writes additional files
     per partition dir); scoring reads postings per (term, doc) row, so
@@ -391,17 +370,9 @@ def append_postings_index(
     query — ``bm25_topk_from_postings`` on the appended index equals a
     full rebuild EXACTLY when the doc sets are disjoint (test-pinned).
     Appending an already-indexed doc_id is the caller's bug (postings
-    would double-count its tf); gate admission upstream, as
-    streaming/corpus_ingest does. Single-writer discipline, same as
+    would double-count its tf); gate admission upstream
+    (``dedup.incremental_dedup``). Single-writer discipline, same as
     every store here. Returns the updated ``{n, t, n_buckets}``.
-
-    ``batch`` makes the append IDEMPOTENT under at-least-once retries
-    (streaming/corpus_ingest passes its foreachBatch id): the new
-    postings land under ``pb=<b>/batch=<bid>/`` and the stats delta
-    under its own ``batch=<bid>`` partition, both via dynamic
-    partition overwrite, so a retried batch REPLACES its rows instead
-    of double-appending them. Serving is unchanged — partition pruning
-    still keys on the outer ``pb=``.
 
     CRASH REPAIR: the postings append and the stats-delta write are
     two writes; a crash between them leaves ``_corpus_stats``
@@ -412,54 +383,15 @@ def append_postings_index(
     from sstable_migrator_spark.functions import text as TX
 
     spark = docs.sparkSession
-    # a mixed layout (files both at pb=X/ and under pb=X/batch=N/)
-    # breaks partition discovery for every later reader — refuse it
-    # up front instead of corrupting the index
-    batched_layout = "batch" in spark.read.parquet(path).columns
-    if batch is not None and not batched_layout:
-        raise ValueError(
-            f"postings index at {path} is not batch-keyed; a batched "
-            "append would mix partition layouts. Rebuild it with "
-            "write_postings_index(..., batch=...) or append without "
-            "batch"
-        )
-    if batch is None and batched_layout:
-        raise ValueError(
-            f"postings index at {path} is batch-keyed (a streaming "
-            "gate maintains it); pass batch=<bid> so the append stays "
-            "idempotent and the layout uniform"
-        )
     base = read_corpus_stats(spark, path)
     n0, t0, n_buckets = base["n"], base["t"], base["n_buckets"]
-    # when this batch RETRIES, its own prior delta must not count as
-    # pre-existing corpus (self-exclusion, the frontier pattern)
-    if batch is not None:
-        prior = (
-            spark.read.parquet(os.path.join(path, "_corpus_stats"))
-            .filter(F.col("batch") != batch)
-            .agg(F.sum("n"), F.sum("t"))
-            .first()
-        )
-        n0, t0 = int(prior[0] or 0), int(prior[1] or 0)
     # day-sized: pin it so the write and the stats delta share one
     # tokenize pass (same lesson as write_postings_index's read-back)
     post = build_postings(docs, text_col=text_col, id_col=id_col).localCheckpoint()
     keyed = post.withColumn(
         "pb", TX.hash64(F.col("term"), seed=_PB_SEED) % n_buckets
     )
-    if batch is None:
-        keyed.repartition("pb").write.mode("append").partitionBy(
-            "pb"
-        ).parquet(path)
-    else:
-        (
-            keyed.withColumn("batch", F.lit(int(batch)))
-            .repartition("pb")
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("pb", "batch")
-            .parquet(path)
-        )
+    keyed.repartition("pb").write.mode("append").partitionBy("pb").parquet(path)
     dn, dt = (
         post.select("doc", "dl")
         .distinct()
@@ -471,16 +403,12 @@ def append_postings_index(
 
     delta = local_rows_df(
         spark,
-        [(dn, dt, n_buckets, -2 if batch is None else int(batch))],
+        [(dn, dt, n_buckets, -2)],
         "n long, t long, n_buckets int, batch int",
     )
-    w = delta.write.partitionBy("batch")
-    if batch is None:
-        w.mode("append").parquet(os.path.join(path, "_corpus_stats"))
-    else:
-        w.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).parquet(os.path.join(path, "_corpus_stats"))
+    delta.write.mode("append").partitionBy("batch").parquet(
+        os.path.join(path, "_corpus_stats")
+    )
     return {"n": n0 + dn, "t": t0 + dt, "n_buckets": n_buckets}
 
 

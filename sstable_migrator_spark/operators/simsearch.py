@@ -74,10 +74,10 @@ def lsh_bucketize(
     """Attach a b-bit random-hyperplane signature as an int bucket id.
     Map-only at any scale; partitioned-by-bucket writes then give
     co-located candidates. Round 10 (guide §4.2): the signature is an
-    Arrow kernel — the ``random_hyperplane_sign`` expression form is
-    three interpreted HOF folds PER PLANE per row (~1 ms/row at dim
-    64, and the dim-expanded codegen form blows the 64 KB method
-    limit). Bucket-identical to the fold by construction: per plane,
+    Arrow kernel — the pure-expression form (a zip_with + aggregate
+    sign fold per plane) is three interpreted HOF folds PER PLANE per
+    row (~1 ms/row at dim 64, and the dim-expanded codegen form blows
+    the 64 KB method limit). Bucket-identical to the fold by construction: per plane,
     ``np.cumsum(v * plane, axis=1)`` forces the fold's left-to-right
     addition order (never np.sum's pairwise shortcut), the sign test
     and bit weights are unchanged. Width contract: every vector must

@@ -19,7 +19,9 @@ would actually run it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+import os
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sstable_migrator_spark.functions import text as TX
@@ -29,6 +31,7 @@ from sstable_migrator_spark.operators import analytics, dedup
 __all__ = [
     "quality_score",
     "build_training_corpus",
+    "admission_report",
     "export_packed_sequences",
     "export_sft_sequences",
     "export_training_epochs",
@@ -130,9 +133,8 @@ def build_training_corpus(
       ``parts`` parameterize the layout; ``chunk_size``/``stride``/
       ``shard_tokens`` are ignored.
 
-    ``ledger_dir``: opt-in PER-DOCUMENT attrition ledger — the batch
-    twin of the streaming gate's ``_admissions``: one parquet row per
-    INPUT document with the first stage that dropped it (``c4`` /
+    ``ledger_dir``: opt-in PER-DOCUMENT attrition ledger (read by
+    ``admission_report``): one parquet row per INPUT document with the first stage that dropped it (``c4`` /
     ``quality`` / ``lang`` / ``exact_dup`` / ``near_dup``) or
     ``kept`` — the "why did my document disappear" audit a corpus
     owner actually asks. Ids-only lineage: five doc_id-keyed joins of
@@ -405,6 +407,137 @@ def build_training_corpus(
     counts = {k: int(o.get["n"]) for k, o in obs.items()}
     counts["near_dup_kept"] = counts["exact"] - n_losers
     return counts
+
+
+# the per-document decision-row schema of an ``_admissions/`` ledger
+# (partitioned JSON, ``batch`` the partition column), PINNED for the
+# report: schema inference would pay an extra pass over the ledger and
+# could type a short or degenerate ledger loosely (e.g. an early
+# all-reject wave). ``c4_keep``/``lang_keep``/``license_keep``/
+# ``code_quality_keep`` exist only in the batch funnel's gate set — the
+# JSON reader yields null for them on ledgers that lack them, and the
+# report coalesces null to "gate not run = pass", so one schema covers
+# both ledger forms.
+_LEDGER_SCHEMA = (
+    "doc_id long, exact_dup int, n_near_dups bigint, quality_keep int, "
+    "ppl_keep int, decon_keep int, rep_keep int, c4_keep int, "
+    "lang_keep int, license_keep int, code_quality_keep int, "
+    "admitted int, batch int"
+)
+
+
+def _batch_ledger_as_admissions(spark: SparkSession, ledger_path: str) -> DataFrame:
+    """The batch funnel's per-doc stage ledger
+    (``build_training_corpus(ledger_dir=)``: one parquet row
+    ``(doc_id, stage)`` naming the FIRST dropping stage, or 'kept')
+    pivoted into the ``_admissions`` gate-int frame, so ONE report
+    covers both ledger forms. First-drop semantics map exactly onto the
+    report's per-gate attribution: the dropping stage's gate reads 0,
+    every other gate 1 (passed or not reached — the funnel stopped
+    judging), ``admitted`` iff kept. Gates the batch funnel doesn't
+    run (ppl/decon/rep) read 1 everywhere, so their reject columns are
+    honestly zero. One synthetic batch 0 — a funnel run is one wave."""
+    return spark.read.parquet(ledger_path).selectExpr(
+        "doc_id",
+        "CAST(stage = 'exact_dup' AS INT) AS exact_dup",
+        "CAST(CAST(stage = 'near_dup' AS INT) AS BIGINT) AS n_near_dups",
+        "CAST(stage != 'quality' AS INT) AS quality_keep",
+        "CAST(1 AS INT) AS ppl_keep",
+        "CAST(1 AS INT) AS decon_keep",
+        "CAST(1 AS INT) AS rep_keep",
+        "CAST(stage != 'c4' AS INT) AS c4_keep",
+        "CAST(stage != 'lang' AS INT) AS lang_keep",
+        "CAST(stage != 'license' AS INT) AS license_keep",
+        "CAST(stage != 'code_quality' AS INT) AS code_quality_keep",
+        "CAST(stage = 'kept' AS INT) AS admitted",
+        "CAST(0 AS INT) AS batch",
+    )
+
+
+def admission_report(spark: SparkSession, corpus_path: str) -> DataFrame:
+    """Gate HEALTH report over an attrition ledger — the ops view a
+    corpus owner reads each morning: per batch, how much arrived, how
+    much was admitted, which gate rejected the rest (exact dup / near
+    dup / quality / c4-cleanup / language / perplexity /
+    decontamination / repetition counts), and an exact-integer drift
+    flag marking batches whose admit rate deviates more than 25%
+    RELATIVE from the all-time rate (the q176 cross-multiply
+    discipline — a flagged batch usually means a new source, an
+    encoder change upstream, or a broken feed).
+
+    READS BOTH LEDGER FORMS: a directory with an ``_admissions``
+    subdir holds a per-batch JSON decision ledger (``_LEDGER_SCHEMA``,
+    partitioned by ``batch``); a bare parquet directory of
+    ``(doc_id, stage)`` rows is the batch funnel's ledger
+    (``build_training_corpus(ledger_dir=)``) pivoted through
+    ``_batch_ledger_as_admissions`` — same ops question, one report.
+    Plan: one ledger scan, one batch-keyed agg, the all-time totals as
+    a single-row broadcast cross. The ledger is O(decisions) rows of
+    integers — at 100 TB this reads the ledger, never the corpus."""
+    adm = os.path.join(corpus_path, "_admissions")
+    if os.path.isdir(adm):
+        led = spark.read.schema(_LEDGER_SCHEMA).json(adm)
+    elif os.path.isdir(corpus_path):
+        led = _batch_ledger_as_admissions(spark, corpus_path)
+    else:
+        raise ValueError(
+            f"no attrition ledger at {corpus_path}: expected either a "
+            "directory with an _admissions/ JSON ledger or "
+            "a batch-funnel (doc_id, stage) parquet directory"
+        )
+    per = led.groupBy("batch").agg(
+        F.count(F.lit(1)).alias("judged"),
+        F.sum("admitted").alias("admitted"),
+        F.sum("exact_dup").alias("exact_dups"),
+        F.sum(
+            ((F.col("exact_dup") == 0) & (F.col("n_near_dups") > 0)).cast("int")
+        ).alias("near_dup_hits"),
+        F.sum((F.col("quality_keep") == 0).cast("int")).alias("quality_rejects"),
+        F.sum((F.col("ppl_keep") == 0).cast("int")).alias("ppl_rejects"),
+        F.sum((F.col("decon_keep") == 0).cast("int")).alias("decon_rejects"),
+        F.sum((F.col("rep_keep") == 0).cast("int")).alias("rep_rejects"),
+        # null = the ledger doesn't carry this gate (an _admissions
+        # ledger without c4/lang columns) -> pass, so the reject count is 0
+        F.sum((F.coalesce("c4_keep", F.lit(1)) == 0).cast("int")).alias(
+            "c4_rejects"
+        ),
+        F.sum((F.coalesce("lang_keep", F.lit(1)) == 0).cast("int")).alias(
+            "lang_rejects"
+        ),
+        F.sum(
+            (F.coalesce("license_keep", F.lit(1)) == 0).cast("int")
+        ).alias("license_rejects"),
+        F.sum(
+            (F.coalesce("code_quality_keep", F.lit(1)) == 0).cast("int")
+        ).alias("code_quality_rejects"),
+    )
+    totals = led.agg(
+        F.count(F.lit(1)).alias("_j_all"), F.sum("admitted").alias("_a_all")
+    )
+    # exact integers: batch rate r = admitted/judged vs all-time
+    # R = _a_all/_j_all; flag when r < 0.75R or r > 1.25R, cross-
+    # multiplied so no float division happens
+    low = F.col("admitted") * F.col("_j_all") * 4 < F.col("judged") * F.col("_a_all") * 3
+    high = F.col("admitted") * F.col("_j_all") * 4 > F.col("judged") * F.col("_a_all") * 5
+    return (
+        per.join(F.broadcast(totals))
+        .select(
+            "batch",
+            "judged",
+            "admitted",
+            "exact_dups",
+            "near_dup_hits",
+            "quality_rejects",
+            "c4_rejects",
+            "lang_rejects",
+            "license_rejects",
+            "code_quality_rejects",
+            "ppl_rejects",
+            "decon_rejects",
+            "rep_rejects",
+            (low | high).alias("rate_drift"),
+        )
+    )
 
 
 def export_packed_sequences(

@@ -2788,8 +2788,8 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode and the corpus side never shingles eval docs. Previously both
     # branches derived from one full-corpus explode that Spark recomputed
     # per-branch (2x the shingling work; the round-2 bench regression).
-    # (Shape extracted to dedup.contamination_flags in round 6 so the
-    # streaming admission gate can compose it; identical expressions.)
+    # (Shape extracted to dedup.contamination_flags in round 6 so other
+    # pipelines can compose it; identical expressions.)
     return contamination_flags(
         docs.filter(F.col("doc_id") % 97 != 0),
         docs.filter(F.col("doc_id") % 97 == 0),
@@ -9678,13 +9678,12 @@ ORACLES.update({"q189_leakage_safe_split": _sql_leakage_safe_split()})
 def q_incremental_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q188's decision computed the PRODUCTION way: the old corpus is
     reduced ONCE to its persisted dedup state (fingerprint + banded
-    MinHash rows — ``build_dedup_state``, what the streaming admission
-    gate maintains under ``<corpus>/_dedup_state``) and the new
-    snapshot is judged against that table; the old corpus's TEXT is
-    never re-read. Shares q188's oracle SQL verbatim — the state path
-    must be decision-identical to the recompute-from-text path, and
-    this entry hash-gates that equivalence. At 100 TB this is the
-    difference between a drain costing O(day) and O(corpus)."""
+    MinHash rows — ``build_dedup_state``) and the new snapshot is
+    judged against that table; the old corpus's TEXT is never re-read.
+    Shares q188's oracle SQL verbatim — the state path must be
+    decision-identical to the recompute-from-text path, and this entry
+    hash-gates that equivalence. At 100 TB this is the difference
+    between a daily judgement costing O(day) and O(corpus)."""
     from sstable_migrator_spark.operators.dedup import (
         build_dedup_state,
         incremental_dedup,
@@ -12259,8 +12258,8 @@ ORACLES.update({"q229_ann_index_serve": SQL_ANN_RECALL})
 
 
 # ---------------------------------------------------------------------------
-# Streaming ops — the admission-gate health report under the oracle
-# (streaming/corpus_ingest.admission_report over a hand-built ledger)
+# Corpus ops — the admission health report under the oracle
+# (pipelines/corpus.admission_report over a hand-built ledger)
 # ---------------------------------------------------------------------------
 
 
@@ -12270,15 +12269,12 @@ def q_admission_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-engine oracle: a DETERMINISTIC ledger fixture is derived
     arithmetically from the documents table (every gate column a pure
     doc_id modulus, one batch with a deliberately depressed admit rate
-    so the drift flag fires), written through the SAME partitioned-JSON
-    layout the drain writes (_overwrite_batch), and the report is run
+    so the drift flag fires), written as the ``batch``-partitioned
+    JSON ``_admissions/`` ledger the report reads, and the report is run
     against it — so the pinned ledger schema, the rollup, AND the
     cross-multiplied drift rule are all under the hash. The report
     reads the O(decisions) ledger, never a corpus."""
-    from sstable_migrator_spark.streaming.corpus_ingest import (
-        _overwrite_batch,
-        admission_report,
-    )
+    from sstable_migrator_spark.pipelines.corpus import admission_report
 
     root = _scratch_dir("admissions-q227")
     led = _t(spark, sf_dir, "documents").selectExpr(
@@ -12299,7 +12295,9 @@ def q_admission_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import os as _os
 
-    _overwrite_batch(led, _os.path.join(root, "_admissions"), fmt="json")
+    led.write.mode("overwrite").partitionBy("batch").json(
+        _os.path.join(root, "_admissions")
+    )
     return admission_report(spark, root)
 
 
@@ -12824,7 +12822,7 @@ ORACLES.update({"q234_residual_pq_int": _sql_residual_pq_int()})
 
 # ---------------------------------------------------------------------------
 # Batch — the batch funnel's attrition ledger under the SAME report as
-# the streaming gate (admission_report reads both ledger forms)
+# q227's JSON ledger (admission_report reads both ledger forms)
 # ---------------------------------------------------------------------------
 
 
@@ -12839,9 +12837,9 @@ def q_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     (c4/lang/license/code_quality — the code gates included since the
     funnel grew license_policy/code_quality stages), AND the shared
     drift rule are all under the hash. One
-    report now covers streaming drains and batch funnels (the round-8
-    'two ledgers, same ops question' unification)."""
-    from sstable_migrator_spark.streaming.corpus_ingest import admission_report
+    report covers both ledger forms (the round-8 'two ledgers, same
+    ops question' unification)."""
+    from sstable_migrator_spark.pipelines.corpus import admission_report
 
     root = _scratch_dir("funnel-ledger-q235")
     led = _t(spark, sf_dir, "documents").selectExpr(

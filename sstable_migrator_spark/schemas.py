@@ -20,9 +20,6 @@ DNS_RECORDS = T.StructType(
     ]
 )
 
-# bare domain list (App.java:482-490)
-SUBDOMAIN_LIST = T.StructType([T.StructField("domain", T.StringType())])
-
 # rdns pair: ip,domain (clean_rdns.go:43-71)
 RDNS_PAIRS = T.StructType(
     [T.StructField("ip", T.StringType()), T.StructField("domain", T.StringType())]

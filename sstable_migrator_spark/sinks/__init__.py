@@ -81,23 +81,6 @@ def parquet_export(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("compression", "snappy").parquet(path)
 
 
-def split_write(
-    df: DataFrame,
-    valid_path: str,
-    reject_path: str,
-    error_col: str = "error_code",
-    mode: str = "overwrite",
-) -> None:
-    """K4 — single-pass valid/reject split (stdout/stderr analog,
-    utils.go:95-109): cache once, two filtered writes."""
-    df = df.persist()
-    try:
-        df.filter(F.col(error_col).isNull()).drop(error_col).write.mode(mode).parquet(valid_path)
-        df.filter(F.col(error_col).isNotNull()).write.mode(mode).parquet(reject_path)
-    finally:
-        df.unpersist()
-
-
 def append_sink(df: DataFrame, path: str) -> None:
     """K5 — accumulate shard outputs (the ``cat b >> domains`` analog)."""
     df.write.mode("append").parquet(path)

@@ -19,12 +19,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    """S1/S3 — schema'd CSV scan (no header, positional, like the
-    reference's wire formats)."""
-    return spark.read.schema(schema).option("mode", "PERMISSIVE").csv(path)
-
-
 def parse_csv_lines(lines: DataFrame, n_fields: int, names: list[str]) -> DataFrame:
     """Schema-on-read split of a ``value`` line column into positional
     fields, keeping rows with at least ``n_fields`` fields (stricter
@@ -36,12 +30,6 @@ def parse_csv_lines(lines: DataFrame, n_fields: int, names: list[str]) -> DataFr
         lines.select(F.col("value"), F.size(parts).alias("_arity"), *cols)
         .filter(F.col("_arity") >= n_fields)
     )
-
-
-def read_surt_lines(spark: SparkSession, path: str) -> DataFrame:
-    """S6 — CommonCrawl cdx/SURT shard scan. Pass a glob covering all
-    shards; one distributed job replaces the sequential shard loop."""
-    return spark.read.text(path)
 
 
 def stage_url(

@@ -1,10 +1,10 @@
 """WARC / WET source — CommonCrawl's actual corpus container.
 
 The reference pipeline's CommonCrawl side consumes the INDEX shards
-(S6, cdx/SURT lines — sources.readers.read_surt_lines); a training-data
-pipeline consumes the CONTENT: WARC files (ISO 28500) and their WET
-("conversion": extracted plain text) siblings. This module reads them
-dependency-free:
+(S6, cdx/SURT lines — ``spark.read.text`` + ``surt_line_to_domain``);
+a training-data pipeline consumes the CONTENT: WARC files (ISO 28500)
+and their WET ("conversion": extracted plain text) siblings. This
+module reads them dependency-free:
 
 - record grammar: a ``WARC/1.x`` version line, ``Name: value`` header
   lines to a blank line, exactly ``Content-Length`` payload bytes, then

@@ -475,54 +475,43 @@ def test_web_corpus_capstone_end_to_end(spark, tmp_path):
 
 
 def test_stateful_web_corpus_capstone_v2(spark, tmp_path):
-    """Round-7 capstone: the STATEFUL acquisition arc composes end to
-    end — frontier drains with a persisted seen-set and robots cache ->
-    batch-stamped fetch plans -> raw-WARC responses (HTTP messages, not
-    pre-extracted WET) -> header strip + html_to_text ingestion ->
-    multi-epoch packed training export with a resume cursor. A
-    re-offered frontier schedules nothing (second drain), disallowed
-    pages never reach the training stream, and both epochs carry the
-    same token multiset in different orders."""
-    import json as _json
-    import os
-
+    """Round-7 capstone: the raw-WARC acquisition arc composes end to
+    end — robots gate + politeness plan over the discovered URLs ->
+    raw-WARC responses (HTTP messages, not pre-extracted WET) -> header
+    strip + html_to_text ingestion -> multi-epoch packed training
+    export with a resume cursor. Disallowed pages never reach the
+    training stream, and both epochs carry the same token multiset in
+    different orders."""
     from pyspark.sql import functions as F
 
+    from sstable_migrator_spark.operators.crawl import (
+        crawl_schedule,
+        robots_allowed,
+    )
     from sstable_migrator_spark.pipelines.corpus import (
         export_training_epochs,
         read_epoch_sequences,
     )
     from sstable_migrator_spark.pipelines.web_ingest import ingest_warc_corpus
     from sstable_migrator_spark.sources.warc import encode_warc_responses
-    from sstable_migrator_spark.streaming.frontier import (
-        schedule_frontier_available_now,
-    )
 
-    # 1. frontier drain: discovered URLs -> seen-set + robots gate + plan
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    frontier = str(tmp_path / "frontier")
-    ckpt = str(tmp_path / "fckpt")
-    urls = [
-        f"http://site{i % 2}.com/{'private' if i % 5 == 0 else 'page'}/{i}"
-        for i in range(20)
-    ]
-    with open(inbox / "d1.jsonl", "w") as fh:
-        for u in urls:
-            fh.write(_json.dumps({"url": u}) + "\n")
+    # 1. discovered URLs -> robots gate + politeness plan
+    urls = spark.createDataFrame(
+        [(f"http://site{i % 2}.com/{'private' if i % 5 == 0 else 'page'}/{i}",)
+         for i in range(20)],
+        "url string",
+    )
     rules = spark.createDataFrame(
         [("site0.com", "*", "disallow", "/private/"),
          ("site1.com", "*", "disallow", "/private/")],
         "host string, agent string, rule string, prefix string",
     )
-    s1 = schedule_frontier_available_now(
-        spark, str(inbox), frontier, ckpt, robots_rules=rules, now_ms=10_000
-    )
-    assert s1 == {"offered": 20, "new": 20, "scheduled": 16}
+    allowed = robots_allowed(urls, rules).filter("allowed = 1").select("url")
+    plan = crawl_schedule(allowed).collect()
+    assert len(plan) == 16  # 4 of 20 hit /private/
 
-    # 2. "fetch" the PLAN (not the raw frontier): one raw-WARC response
+    # 2. "fetch" the PLAN (not the raw URL list): one raw-WARC response
     #    shard per host, real HTTP messages
-    plan = spark.read.parquet(os.path.join(frontier, "plans")).collect()
     warcdir = tmp_path / "warc"
     warcdir.mkdir()
     hosts: dict = {}
@@ -576,16 +565,6 @@ def test_stateful_web_corpus_capstone_v2(spark, tmp_path):
     assert rem.count() == sum(1 for r in e0 if r["seq_id"] > cursor)
     # no disallowed page anywhere in the training stream
     assert "private" not in " ".join(r["seq_text"] for r in e0)
-
-    # 5. drain 2 re-offers the whole frontier: nothing schedules, the
-    #    corpus needs no refetch — the arc is incremental end to end
-    with open(inbox / "d2.jsonl", "w") as fh:
-        for u in urls:
-            fh.write(_json.dumps({"url": u}) + "\n")
-    s2 = schedule_frontier_available_now(
-        spark, str(inbox), frontier, ckpt, now_ms=20_000
-    )
-    assert s2 == {"offered": 20, "new": 0, "scheduled": 0}
 
 
 def test_bpe_tokenized_epoch_export(spark, tmp_path):
@@ -643,67 +622,6 @@ def test_epoch_resume_filter_pushes_down(spark, tmp_path):
     assert "PushedFilters" in plan and "seq_id" in plan.split("PushedFilters", 1)[1][:200]
 
 
-def test_daily_crawl_job_ticks_idempotently(spark, tmp_path):
-    """The daily crawl tick (pipelines/crawl_daily.py): discovered
-    URLs -> frontier -> injected fetch -> raw-WARC shard -> extraction
-    -> admission gate, in one call. Re-running the SAME tick is a
-    no-op at every stage (frontier seen-set, batch-stamped fetch,
-    gate checkpoint); a second day's new URLs flow through while
-    re-offered ones do not."""
-    import json as _json
-    import os
-
-    from sstable_migrator_spark.pipelines.crawl_daily import daily_crawl_job
-
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    work = str(tmp_path / "work")
-    rules = spark.createDataFrame(
-        [("site0.com", "*", "disallow", "/private/")],
-        "host string, agent string, rule string, prefix string",
-    )
-    urls_d1 = [
-        "http://site0.com/page/1",
-        "http://site0.com/page/2",
-        "http://site0.com/private/x",   # robots-blocked
-        "http://site1.com/page/3",
-    ]
-    with open(inbox / "d1.jsonl", "w") as fh:
-        for u in urls_d1:
-            fh.write(_json.dumps({"url": u}) + "\n")
-    t1 = daily_crawl_job(
-        spark, str(inbox), work, robots_rules=rules, now_ms=86_400_000
-    )
-    assert t1["scheduled"] == 3 and t1["fetched"] == 3
-    assert t1["judged"] == 3 and t1["admitted"] == 3
-    corpus = spark.read.parquet(os.path.join(work, "corpus"))
-    assert corpus.count() == 3
-    # the durable artifact exists and is replayable raw WARC
-    assert any(f.startswith("tick-") for f in os.listdir(
-        os.path.join(work, "warc")))
-
-    # re-run the same tick: no schedule, no fetch, no admission
-    t1b = daily_crawl_job(
-        spark, str(inbox), work, now_ms=86_400_001
-    )
-    assert (t1b["scheduled"], t1b["fetched"], t1b["judged"]) == (0, 0, 0)
-    assert spark.read.parquet(os.path.join(work, "corpus")).count() == 3
-
-    # day 2: one re-offered URL + one new -> only the new one flows
-    with open(inbox / "d2.jsonl", "w") as fh:
-        fh.write(_json.dumps({"url": "http://site0.com/page/1"}) + "\n")
-        fh.write(_json.dumps({"url": "http://site1.com/page/9"}) + "\n")
-    t2 = daily_crawl_job(
-        spark, str(inbox), work, now_ms=2 * 86_400_000
-    )
-    assert t2["scheduled"] == 1 and t2["fetched"] == 1
-    assert t2["judged"] == 1 and t2["admitted"] == 1
-    assert spark.read.parquet(os.path.join(work, "corpus")).count() == 4
-    # attributable end to end: the gate's ledger covers all 4 docs
-    ledger = spark.read.json(os.path.join(work, "corpus", "_admissions"))
-    assert ledger.count() == 4
-
-
 def test_funnel_c4_stage(spark, tmp_path):
     """c4=True cleans BEFORE the rest of the funnel: junk lines vanish
     from surviving docs, lorem-ipsum pages never reach the chunks, and
@@ -748,183 +666,6 @@ def test_funnel_c4_stage(spark, tmp_path):
         r["chunk_text"] for r in spark.read.parquet(out2).collect()
     )
     assert "clickbait" in raw and "lorem" in raw.lower()
-
-
-def test_daily_crawl_job_recovers_unfetched_batches(spark, tmp_path):
-    """The crash window the crash note promises to cover: a plan
-    written but the fetch cursor not yet advanced (simulated by
-    resetting the cursor file). The NEXT tick — even with an empty
-    frontier drain — fetches the pending batch instead of skipping it
-    forever."""
-    import json as _json
-    import os
-
-    from sstable_migrator_spark.pipelines.crawl_daily import daily_crawl_job
-
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    work = str(tmp_path / "work")
-    with open(inbox / "d1.jsonl", "w") as fh:
-        fh.write(_json.dumps({"url": "http://h.com/page/1"}) + "\n")
-    t1 = daily_crawl_job(spark, str(inbox), work, now_ms=86_400_000)
-    assert t1["fetched"] == 1 and t1["admitted"] == 1
-
-    # simulate the crash: cursor lost AFTER plan write + fetch; the
-    # docs of batch 0 are already admitted (dedup absorbs the refetch)
-    os.remove(os.path.join(work, "_last_fetched_batch"))
-    t2 = daily_crawl_job(spark, str(inbox), work, now_ms=86_400_001)
-    # empty drain, but batch 0 re-fetches; the rewritten inbox file
-    # keeps its tick name, so the gate's checkpoint (which already
-    # consumed it) judges nothing — no re-admission, no double work
-    assert t2["scheduled"] == 0 and t2["fetched"] == 1
-    assert t2["judged"] == 0 and t2["admitted"] == 0
-    assert spark.read.parquet(os.path.join(work, "corpus")).count() == 1
-
-
-def test_daily_crawl_fetch_runs_executor_side_per_host(spark, tmp_path):
-    """The tick's fetch is distributed: the fetcher runs inside
-    executor tasks (TaskContext present — a driver-side fetch has
-    none), each invocation sees its rows in per-host slot order, and a
-    host is never split across tasks (each host's URLs land in exactly
-    one WARC shard), so per-host politeness is one task's sequential
-    schedule while hosts fetch in parallel."""
-    import json as _json
-    import os
-
-    from sstable_migrator_spark.pipelines.crawl_daily import daily_crawl_job
-    from sstable_migrator_spark.sources.warc import read_warc_responses
-
-    def probe_fetcher(rows):
-        import hashlib
-
-        from pyspark import TaskContext
-
-        assert TaskContext.get() is not None, "fetcher ran on the driver"
-        by_host: dict[str, list[int]] = {}
-        for r in rows:
-            by_host.setdefault(r["host"], []).append(int(r["fetch_seq"]))
-        for seqs in by_host.values():
-            assert seqs == sorted(seqs), "per-host slot order violated"
-        out = []
-        for r in rows:
-            h = hashlib.md5(r["url"].encode()).hexdigest()
-            words = " ".join(h[i : i + 4] for i in range(0, 32, 4))
-            out.append(
-                {
-                    "url": r["url"],
-                    "date": "2024-06-01T00:00:00Z",
-                    "html": "<html><body><p>page "
-                    + r["url"].rsplit("/", 1)[-1]
-                    + " says "
-                    + words
-                    + "</p></body></html>",
-                    "status": 200,
-                }
-            )
-        return out
-
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    work = str(tmp_path / "work")
-    urls = [
-        f"http://site{h}.com/page/{i}" for h in range(3) for i in range(3)
-    ]
-    with open(inbox / "d1.jsonl", "w") as fh:
-        for u in urls:
-            fh.write(_json.dumps({"url": u}) + "\n")
-    t1 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=probe_fetcher,
-        fetch_partitions=4, now_ms=86_400_000,
-    )
-    assert t1["scheduled"] == 9 and t1["fetched"] == 9
-    assert t1["judged"] == 9 and t1["admitted"] == 9
-
-    resp = read_warc_responses(
-        spark, os.path.join(work, "warc", "tick-*-p*.warc.gz")
-    )
-    host_shards: dict[str, set[str]] = {}
-    for r in resp.select("file", "url").collect():
-        host = r["url"].split("/")[2]
-        host_shards.setdefault(host, set()).add(r["file"])
-    assert set(host_shards) == {"site0.com", "site1.com", "site2.com"}
-    assert all(len(s) == 1 for s in host_shards.values()), (
-        "a host's URLs were split across fetch tasks"
-    )
-
-
-def test_daily_crawl_robots_refetch_on_expiry(spark, tmp_path):
-    """Expired robots don't silently run on the REP default forever:
-    the tick re-fetches robots.txt for expired hosts through the same
-    injected transport BEFORE the frontier drain, so a newly
-    disallowed URL stops being scheduled (attributably fresh,
-    robots_fresh=1) and a previously disallowed path whose rule was
-    dropped becomes crawlable again."""
-    import hashlib
-    import json as _json
-    import os
-
-    from sstable_migrator_spark.pipelines.crawl_daily import daily_crawl_job
-
-    def fetcher(rows):
-        out = []
-        for r in rows:
-            url = r["url"]
-            if url.endswith("/robots.txt"):
-                out.append(
-                    {"url": url, "date": "2024-06-02T00:00:00Z",
-                     "status": 200,
-                     "html": "User-agent: *\nDisallow: /blocked/\n"}
-                )
-                continue
-            h = hashlib.md5(url.encode()).hexdigest()
-            words = " ".join(h[i : i + 4] for i in range(0, 32, 4))
-            out.append(
-                {"url": url, "date": "2024-06-02T00:00:00Z", "status": 200,
-                 "html": f"<html><body><p>page says {words}</p></body></html>"}
-            )
-        return out
-
-    day = 86_400_000
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    work = str(tmp_path / "work")
-    rules = spark.createDataFrame(
-        [("site0.com", "*", "disallow", "/private/")],
-        "host string, agent string, rule string, prefix string",
-    )
-    with open(inbox / "d1.jsonl", "w") as fh:
-        fh.write(_json.dumps({"url": "http://site0.com/a"}) + "\n")
-        fh.write(_json.dumps({"url": "http://site0.com/private/x"}) + "\n")
-    t1 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, robots_rules=rules,
-        now_ms=day,
-    )
-    assert t1["scheduled"] == 1 and t1["fetched"] == 1
-
-    # next day, past the TTL: cache expired -> robots re-fetched; the
-    # NEW rules block /blocked/ and no longer block /private/
-    with open(inbox / "d2.jsonl", "w") as fh:
-        fh.write(_json.dumps({"url": "http://site0.com/blocked/y"}) + "\n")
-        fh.write(_json.dumps({"url": "http://site0.com/private/z"}) + "\n")
-        fh.write(_json.dumps({"url": "http://site0.com/c"}) + "\n")
-    t2 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, now_ms=2 * day + 1
-    )
-    assert t2["scheduled"] == 2 and t2["fetched"] == 2
-
-    ledger = {
-        r["url"]: r
-        for r in spark.read.json(
-            os.path.join(work, "frontier", "_ledger")
-        ).collect()
-        if r["batch"] == 1
-    }
-    blocked = ledger["http://site0.com/blocked/y"]
-    # fresh verdict from the RE-FETCHED rules, not a stale cache or
-    # the REP default
-    assert (blocked["allowed"], blocked["robots_fresh"]) == (0, 1)
-    assert ledger["http://site0.com/private/z"]["allowed"] == 1
-    assert ledger["http://site0.com/c"]["scheduled"] == 1
 
 
 def test_epoch_shard_digests_detect_corruption(spark, tmp_path):
@@ -1234,170 +975,6 @@ def test_funnel_sft_layout_end_to_end(spark, sf_dir, tmp_path):
         build_training_corpus(corpus, str(tmp_path / "x"), layout="nope")
 
 
-def test_daily_crawl_robots_https_first_with_http_fallback(spark, tmp_path):
-    """The robots refetch is https-first: a host that answers https
-    gets judged there; a host whose https probe yields NO record
-    (transport failure) falls back to plain http; a host that answers
-    https with 5xx is NOT downgraded (stays stale, retries next
-    tick)."""
-    import hashlib
-    import json as _json
-
-    from sstable_migrator_spark.pipelines.crawl_daily import daily_crawl_job
-
-    def fetcher(rows):
-        out = []
-        for r in rows:
-            url = r["url"]
-            if url.endswith("/robots.txt"):
-                if url.startswith("https://tls.com"):
-                    out.append({"url": url, "date": "2024-06-02T00:00:00Z",
-                                "status": 200,
-                                "html": "User-agent: *\nDisallow: /blocked/\n"})
-                elif url.startswith("https://old.com"):
-                    pass  # no TLS: transport failure, no record
-                elif url.startswith("http://old.com"):
-                    out.append({"url": url, "date": "2024-06-02T00:00:00Z",
-                                "status": 200,
-                                "html": "User-agent: *\nDisallow: /blocked/\n"})
-                elif url.startswith("https://flaky.com"):
-                    out.append({"url": url, "date": "2024-06-02T00:00:00Z",
-                                "status": 503, "html": ""})
-                elif url.startswith("http://flaky.com"):
-                    # a DOWNGRADE would read this block-everything body;
-                    # correct behavior (flaky answered https with 5xx)
-                    # never probes it
-                    out.append({"url": url, "date": "2024-06-02T00:00:00Z",
-                                "status": 200,
-                                "html": "User-agent: *\nDisallow: /\n"})
-                continue
-            h = hashlib.md5(url.encode()).hexdigest()
-            words = " ".join(h[i : i + 4] for i in range(0, 32, 4))
-            out.append({"url": url, "date": "2024-06-02T00:00:00Z",
-                        "status": 200,
-                        "html": f"<html><body><p>page {words}</p></body></html>"})
-        return out
-
-    day = 86_400_000
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    work = str(tmp_path / "work")
-    rules = spark.createDataFrame(
-        [(h, "*", "disallow", "/old/") for h in ("tls.com", "old.com", "flaky.com")],
-        "host string, agent string, rule string, prefix string",
-    )
-    with open(inbox / "d1.jsonl", "w") as fh:
-        for h in ("tls.com", "old.com", "flaky.com"):
-            fh.write(_json.dumps({"url": f"http://{h}/a"}) + "\n")
-    t1 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, robots_rules=rules, now_ms=day
-    )
-    assert t1["scheduled"] == 3
-
-    # past the TTL: refetch; new rules block /blocked/ for the hosts
-    # that answered (tls via https, old via http fallback)
-    with open(inbox / "d2.jsonl", "w") as fh:
-        for h in ("tls.com", "old.com", "flaky.com"):
-            fh.write(_json.dumps({"url": f"http://{h}/blocked/x"}) + "\n")
-    t2 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, now_ms=2 * day + 1
-    )
-    # tls + old blocked by FRESH rules (tls via https, old via the http
-    # fallback); flaky answered https with 5xx, so it was NOT
-    # downgraded to http (whose body blocks everything) — its stale
-    # cache (disallow /old/ only) still allows the URL
-    assert t2["scheduled"] == 1 and t2["fetched"] == 1
-
-    # the robots cache agrees: fresh /blocked/ prefixes for tls + old,
-    # flaky still carries ONLY its original /old/ rule
-    import os as _os
-
-    rub = spark.read.parquet(_os.path.join(work, "frontier", "_robots"))
-    by_host = {
-        h: {r["prefix"] for r in rows}
-        for h, rows in [
-            (h, [r for r in rub.collect() if r["host"] == h])
-            for h in ("tls.com", "old.com", "flaky.com")
-        ]
-    }
-    assert "/blocked/" in by_host["tls.com"]
-    assert "/blocked/" in by_host["old.com"]
-    assert by_host["flaky.com"] == {"/old/"}
-
-
-def test_daily_crawl_per_task_cap_requeues_remainder(spark, tmp_path):
-    """max_fetch_per_task bounds one fetch task's URL budget: the
-    over-budget remainder is deferred (never silently lost, never
-    blocking the tick) and the NEXT tick's retry pass fetches it —
-    even with no new frontier batches. A fetcher that never answers a
-    hung URL keeps deferring just that URL while everything else
-    flows."""
-    import json as _json
-    import os as _os
-
-    from sstable_migrator_spark.pipelines.crawl_daily import daily_crawl_job
-
-    def fetcher(rows):
-        import hashlib
-
-        out = []
-        for r in rows:
-            url = r["url"]
-            if "hung" in url:
-                continue  # a hung host: the fetcher answers by not answering
-            h = hashlib.md5(url.encode()).hexdigest()
-            words = " ".join(h[i : i + 4] for i in range(0, 32, 4))
-            out.append({"url": url, "date": "2024-06-01T00:00:00Z",
-                        "status": 200,
-                        "html": f"<html><body><p>page {words}</p></body></html>"})
-        return out
-
-    inbox = tmp_path / "urls"
-    inbox.mkdir()
-    work = str(tmp_path / "work")
-    with open(inbox / "d1.jsonl", "w") as fh:
-        for i in range(5):
-            fh.write(_json.dumps({"url": f"http://big.com/page/{i}"}) + "\n")
-        fh.write(_json.dumps({"url": "http://big.com/hung/x"}) + "\n")
-
-    t1 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, max_fetch_per_task=4,
-        now_ms=1,
-    )
-    # one host = one task: 4 within budget; the hung URL sorts into the
-    # capped window (seq order) or the tail — either way 6 planned,
-    # <=4 fetched, the rest deferred
-    assert t1["scheduled"] == 6
-    assert t1["fetched"] + t1["deferred"] == 6 and t1["deferred"] >= 2
-    warc = _os.path.join(work, "warc")
-    assert any(f.startswith("defer-tick-") for f in _os.listdir(warc))
-
-    # next tick, NO new URLs: the retry pass drains the deferral;
-    # the hung URL re-defers, everything else lands
-    t2 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, max_fetch_per_task=4,
-        now_ms=2,
-    )
-    assert t2["scheduled"] == 0
-    assert t2["refetched"] == t1["deferred"] - 1  # all but the hung URL
-    assert t2["deferred"] == 1  # the hung URL re-queued again
-    # consumed deferral files are gone; only the fresh retry deferral remains
-    defers = [f for f in _os.listdir(warc) if f.startswith("defer-")]
-    assert defers and all(f.startswith("defer-retry-") for f in defers)
-
-    # every fetched document was admitted exactly once across ticks
-    assert t1["admitted"] + t2["admitted"] == 5
-    corpus = spark.read.parquet(_os.path.join(work, "corpus"))
-    assert corpus.count() == 5
-
-    # a third tick: only the hung URL cycles; nothing else re-fetches
-    t3 = daily_crawl_job(
-        spark, str(inbox), work, fetcher=fetcher, max_fetch_per_task=4,
-        now_ms=3,
-    )
-    assert (t3["fetched"], t3["deferred"], t3["admitted"]) == (0, 1, 0)
-
-
 def test_funnel_per_doc_attrition_ledger(spark, sf_dir, tmp_path):
     """ledger_dir=: one row per INPUT document naming the first stage
     that dropped it (quality/lang/exact_dup/near_dup) or 'kept' — and
@@ -1448,11 +1025,11 @@ def test_admission_report_reads_batch_funnel_ledger(spark, sf_dir, tmp_path):
     """ONE report over both ledger forms: admission_report over a real
     build_training_corpus(ledger_dir=) parquet rolls up exactly the
     funnel's returned stage counts, with the batch-only gates (c4/lang)
-    attributed in their own columns and the streaming-only gates
-    (ppl/decon/rep) honestly zero."""
+    attributed in their own columns and the gates the funnel does not
+    run (ppl/decon/rep) honestly zero."""
     from pyspark.sql import functions as F
 
-    from sstable_migrator_spark.streaming.corpus_ingest import admission_report
+    from sstable_migrator_spark.pipelines.corpus import admission_report
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
     alien = docs.limit(1).select(
@@ -1493,7 +1070,7 @@ def test_funnel_code_gates(spark, sf_dir, tmp_path):
     new gates into its reject columns."""
     from pyspark.sql import functions as F
 
-    from sstable_migrator_spark.streaming.corpus_ingest import admission_report
+    from sstable_migrator_spark.pipelines.corpus import admission_report
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     # newline-ify the prose: the CODE mean-line screen (<=100 chars)
