@@ -1,7 +1,7 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship pipeline (synth DNS records ->
-validate/clean -> domain_parts -> route -> apex top-100, the reference's
+validate/clean -> with_domain_parts -> route -> apex top-100, the reference's
 headline analytics query, misc/clickhouse_queries.md:35-43) at sf0.001.
 ``queries()``/``oracle_sql()`` expose the operator catalog from
 ``sstable_migrator_spark.queries`` for the DuckDB correctness gate.

@@ -9,7 +9,7 @@ Re-expresses the reference's core semantics (behavior studied at
 - ``strip_dot``        — drop one trailing dot (utils.go:67-74).
 - ``attempt_cleanup``  — strip leading ``\\"`` or ``*.`` then revalidate
   (App.java:827-841, utils.go:207-220).
-- ``domain_parts``     — fixed-arity reversed label decomposition
+- ``with_domain_parts`` — fixed-arity reversed label decomposition
   (App.java:744-825): (success, apex, p1..p7). NOTE: the reference's
   overflow-join branch (App.java:812-817) appends an 8th part slot that
   the SSTable writers never read (they bind indices 2..8 only,
@@ -152,18 +152,12 @@ def _strip_lower(col: Column) -> Column:
     ).otherwise(low)
 
 
-def _parts_struct(
-    parts: Column,
-    n: Column,
-    tlds: list[str],
-    has_l2: Column | None = None,
-    prev: Column | None = None,
-) -> Column:
-    """Slot layout from a pre-split label array (see domain_parts).
+def _parts_struct(parts: Column, n: Column, has_l2: Column, prev: Column) -> Column:
+    """Slot layout from a pre-split label array (see with_domain_parts).
 
-    ``has_l2``/``prev`` may be passed as pre-staged columns (hot path:
-    ``with_domain_parts``) so the TLD membership tree appears ONCE in
-    the plan instead of being inlined into apex, l2tld, p2 and p3.
+    ``has_l2``/``prev`` are pre-staged columns so the TLD membership
+    tree appears ONCE in the plan instead of being inlined into apex,
+    l2tld, p2 and p3.
     """
 
     def at(i: Column) -> Column:
@@ -171,11 +165,6 @@ def _parts_struct(
         return F.when((i >= 1) & (i <= n), F.element_at(parts, i)).otherwise(F.lit(""))
 
     success = n >= 2
-    if prev is None:
-        prev = F.element_at(parts, n - 1)  # parts[tldIndex-1]
-    if has_l2 is None:
-        has_l2 = F.when(success, _tld_member(prev, tlds)).otherwise(F.lit(False))
-
     tld = F.when(success, F.element_at(parts, n)).otherwise(F.lit(""))
     l2tld = F.when(has_l2, prev).otherwise(F.lit(""))
 
@@ -206,11 +195,13 @@ def _parts_struct(
     )
 
 
-def domain_parts(col: Column, tld_set: Iterable[str] | None = None) -> Column:
-    """F5 — the flagship derived projection (App.java:744-825).
-
-    Returns a struct
-    ``(success, apex, tld, l2tld, p1, p2, p3, p4, p5, p6, p7)``:
+def with_domain_parts(
+    df, src: str = "domain", out: str = "dp", tld_set: Iterable[str] | None = None
+):
+    """F5 — the flagship derived projection (App.java:744-825): appends
+    ``out``, a struct
+    ``(success, apex, tld, l2tld, p1, p2, p3, p4, p5, p6, p7)`` of the
+    domain in column ``src``:
 
     - lowercase; strip one trailing dot; split on '.';
       ``tldIndex = n-1``; fail when n < 2.
@@ -221,21 +212,9 @@ def domain_parts(col: Column, tld_set: Iterable[str] | None = None) -> Column:
       p1 = tld; (p2, p3) = (l2tld, '') if l2tld else ('', parts[n-2]);
       p4..p7 = parts[n-3], parts[n-4], parts[n-5], parts[n-6] or ''.
 
-    Pure-Column form; hot paths should use ``with_domain_parts`` (stages
-    the split array once — smaller codegen, no recomputation per slot).
-    """
-    tlds = list(tld_set) if tld_set is not None else default_tld_set()
-    parts = F.split(_strip_lower(col), "\\.")
-    n = F.size(parts)
-    return _parts_struct(parts, n, tlds)
-
-
-def with_domain_parts(
-    df, src: str = "domain", out: str = "dp", tld_set: Iterable[str] | None = None
-):
-    """Staged domain_parts: materializes the label array as a column so
-    the 11 slot expressions read one attribute (split runs once per row
-    and whole-stage codegen stays under the 64KB method limit)."""
+    Staged: the label array is materialized as a column so the 11 slot
+    expressions read one attribute (split runs once per row and
+    whole-stage codegen stays under the 64KB method limit)."""
     tlds = list(tld_set) if tld_set is not None else default_tld_set()
     df = df.withColumn("_dp_parts", F.split(_strip_lower(F.col(src)), "\\."))
     df = df.withColumn("_dp_n", F.size(F.col("_dp_parts")))
@@ -254,7 +233,6 @@ def with_domain_parts(
         _parts_struct(
             F.col("_dp_parts"),
             F.col("_dp_n"),
-            tlds,
             has_l2=F.col("_dp_hasl2"),
             prev=F.coalesce(F.col("_dp_prev"), F.lit("")),
         ),
@@ -374,7 +352,7 @@ def py_is_valid_domain(s: str) -> bool:
 
 
 def py_domain_parts(domain: str, tld_set: set[str]) -> dict:
-    """Parity twin of ``domain_parts`` (writer-visible slots).
+    """Parity twin of ``with_domain_parts`` (writer-visible slots).
 
     Normalization contract: strip ONE trailing dot, then split keeping
     empty strings. On validated domains this equals Java's

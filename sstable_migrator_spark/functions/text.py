@@ -216,21 +216,11 @@ def char_ngrams(col: Column, n: int = 4) -> Column:
 def hash64(col: Column, seed: int = 0) -> Column:
     """Portable 60-bit hash: first 15 hex chars of md5(seed || x) parsed
     base-16. Reproducible in DuckDB via the same md5/substr and hex
-    parse — slower than xxhash64 but engine-agnostic. Use xxhash64 for
-    pure-Spark paths."""
+    parse — slower than xxhash64 but engine-agnostic, so every per-token
+    and per-id hash of the corpus operators (winnowing, shuffles and
+    samples, the perplexity LM, the quality featurizer) uses it and
+    their catalog entries are oracle-gated."""
     return F.conv(F.substring(F.md5(F.concat(F.lit(str(seed) + "|"), col)), 1, 15), 16, 10).cast("long")
-
-
-def hash64_fast(col: Column, seed: int = 0) -> Column:
-    """Non-negative 63-bit xxhash64 — the PRODUCTION twin of
-    ``hash64``: JVM-side, whole-stage-codegen friendly, several times
-    cheaper than md5, but not reproducible outside Spark. Operators
-    that hash per TOKEN at corpus scale (perplexity LM, winnowing,
-    learned-quality featurizer) take a ``portable=`` switch choosing
-    between the two; their oracle-gated catalog entries pin md5, their
-    100 TB callers should pin this. The sign bit is cleared so ``% m``
-    bucketing agrees with the non-negative contract of hash64."""
-    return F.xxhash64(F.lit(str(seed) + "|"), col).bitwiseAND(F.lit((1 << 63) - 1))
 
 
 # (pattern, replacement) pipeline shared verbatim by html_to_text and

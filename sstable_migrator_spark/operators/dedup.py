@@ -250,23 +250,6 @@ def _est_jaccard(sig_a, sig_b, num_hashes: int):
     return hits / F.lit(float(num_hashes))
 
 
-def banded_minhash(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Banded MinHash rows (id, signature, band, bucket) for ``docs`` —
-    the persistable LSH side of a cross-corpus join. Write this to
-    parquet once per corpus; every later incremental run joins against
-    it instead of re-hashing the corpus text."""
-    _check_bands(num_hashes, bands)
-    sigs = minhash_signatures(docs, text_col, id_col, num_hashes, shingle_k)
-    return _band_explode(sigs.select(id_col, "signature"), id_col, num_hashes, bands)
-
-
 def build_dedup_state(
     docs: DataFrame,
     text_col: str = "text",
@@ -1250,7 +1233,6 @@ def winnow_fingerprints(
     w: int = 5,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = True,
 ) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken 2003,
     the MOSS algorithm): hash every k-token gram, slide a w-gram window
@@ -1266,7 +1248,6 @@ def winnow_fingerprints(
     Entirely expression-level (transform/slice/array_min) — the
     extraction is map-only over each document; nothing shuffles until
     the caller aggregates fingerprints."""
-    h = TX.hash64 if portable else TX.hash64_fast
     toks = docs.select(
         F.col(id_col).alias("doc"),
         TX.tokens(F.lower(F.col(text_col))).alias("tk"),
@@ -1275,7 +1256,7 @@ def winnow_fingerprints(
         "doc",
         F.transform(
             F.sequence(F.lit(1), F.size("tk") - (k - 1)),
-            lambda i: h(F.array_join(F.slice("tk", i, k), " "), seed=13),
+            lambda i: TX.hash64(F.array_join(F.slice("tk", i, k), " "), seed=13),
         ).alias("gh"),
     )
     sel = grams.select(
@@ -1309,7 +1290,6 @@ def winnow_pairs(
     max_df: int = 10,
     text_col: str = "text",
     id_col: str = "doc_id",
-    portable: bool = True,
 ) -> DataFrame:
     """Pair mining over winnowed fingerprints: docs sharing selected
     fingerprints, with the same boilerplate df-cap and in-bucket
@@ -1321,7 +1301,6 @@ def winnow_pairs(
     ``(id_a, id_b, shared_fps)``. Scale: fingerprint explode is
     map-only at 2/(w+1) density; shuffles move (fp, id) pairs only;
     pair cost bounded by C(max_df, 2) per fingerprint."""
-    h = TX.hash64 if portable else TX.hash64_fast
     toks = docs.select(
         F.col(id_col).alias("doc"),
         TX.tokens(F.lower(F.col(text_col))).alias("tk"),
@@ -1332,7 +1311,7 @@ def winnow_pairs(
         "doc",
         F.transform(
             F.sequence(F.lit(1), F.size("tk") - (k - 1)),
-            lambda i: h(F.array_join(F.slice("tk", i, k), " "), seed=13),
+            lambda i: TX.hash64(F.array_join(F.slice("tk", i, k), " "), seed=13),
         ).alias("gh"),
     )
     fps = grams.select(
@@ -1596,8 +1575,8 @@ def lsh_pairs_between_banded(
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Cross-corpus candidate pairs from two PRE-BANDED signature
-    tables (``banded_minhash`` / ``build_dedup_state`` output — the old
-    side typically a persisted parquet). New x old band-bucket join
+    tables (``build_dedup_state`` output — the old side typically a
+    persisted parquet). New x old band-bucket join
     only; no text is touched. Returns ``(new_id, old_id,
     est_jaccard)``.
 
@@ -1639,54 +1618,6 @@ def lsh_pairs_between_banded(
             est.alias("est_jaccard"),
         )
         .filter(F.col("est_jaccard") >= jaccard_threshold)
-    )
-
-
-def minhash_lsh_pairs_between(
-    new_docs: DataFrame | None,
-    old_docs: DataFrame | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    jaccard_threshold: float = 0.5,
-    *,
-    new_banded: DataFrame | None = None,
-    old_banded: DataFrame | None = None,
-) -> DataFrame:
-    """Cross-corpus MinHash-LSH candidate pairs: NEW documents against
-    an EXISTING corpus — the production incremental-dedup shape (a
-    daily snapshot is checked against everything already ingested).
-    Same seeds/banding as the self-join ``minhash_lsh_pairs``, but the
-    band-bucket join is new x old only — no new-new or old-old pairs,
-    so a day's work scales with |new| x collision rate, not with the
-    corpus. Returns ``(new_id, old_id, est_jaccard)``.
-
-    Pass ``old_banded=`` (a persisted ``banded_minhash`` /
-    ``build_dedup_state`` table) to make that scaling REAL: the old
-    corpus's text is then never read, let alone re-hashed — the join
-    consumes its stored signatures directly. Passing ``old_docs``
-    (text) instead recomputes them, which is correct but costs a
-    corpus pass per call — fine for one-shots, wrong at daily cadence
-    (persist the banded form once instead)."""
-    _check_bands(num_hashes, bands)
-    if (old_docs is None) == (old_banded is None):
-        raise ValueError("pass exactly one of old_docs / old_banded")
-    if new_banded is None:
-        if new_docs is None:
-            raise ValueError("pass one of new_docs / new_banded")
-        sigs = minhash_signatures(
-            new_docs, text_col, id_col, num_hashes, shingle_k
-        ).select(id_col, "signature").localCheckpoint()
-        new_banded = _band_explode(sigs, id_col, num_hashes, bands)
-    if old_banded is None:
-        sigs = minhash_signatures(
-            old_docs, text_col, id_col, num_hashes, shingle_k
-        ).select(id_col, "signature").localCheckpoint()
-        old_banded = _band_explode(sigs, id_col, num_hashes, bands)
-    return lsh_pairs_between_banded(
-        new_banded, old_banded, id_col, num_hashes, bands, jaccard_threshold
     )
 
 

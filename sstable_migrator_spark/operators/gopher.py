@@ -162,10 +162,6 @@ def gopher_quality_flags(
 # distinct same-k n-grams could concat_ws to one string and merge
 # their counts (and corrupt gram_chars) on adversarial input.
 _SEP = "\x01"
-# C0 controls minus \t \n \x0b \x0c \r (those are whitespace: they
-# shape token/line boundaries and must survive to the splits)
-_CTRL_RE = "[\\x00-\\x08\\x0e-\\x1f\\x7f]"
-
 # (flag name, numerator, denominator): metric * den <= total * num
 # encodes "fraction <= num/den" with integers only. Thresholds are the
 # published MassiveText values (Rae et al. 2021, Table A1).

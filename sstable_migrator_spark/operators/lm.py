@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 __all__ = ["train_bigram_lm", "perplexity_score", "q16_surprisal_int"]
 
 _LM_SEED = 11
-GLOBAL_CTX = -1  # sentinel context bucket for the uniform backoff row
 
 
 def q16_surprisal_int(num: int, den: int) -> int:
@@ -81,18 +80,10 @@ def _q16_col(num: Column, den: Column) -> Column:
     return (msb * 16 + frac - 64).cast("long")
 
 
-def _bucket(tok: Column, vocab: int, portable: bool = True) -> Column:
-    from sstable_migrator_spark.functions import text as TX
-
-    h = TX.hash64 if portable else TX.hash64_fast
-    return h(tok, seed=_LM_SEED) % vocab
-
-
 def _bigrams(
     df: DataFrame,
     text_col: str,
     vocab: int,
-    portable: bool = True,
     outer: bool = False,
 ) -> DataFrame:
     """Explode each document into (ctx, tok) bigram bucket pairs.
@@ -103,35 +94,16 @@ def _bigrams(
     MINUS ``text_col`` (per-bigram rows must not replicate the
     document text), plus ``ctx``/``tok``.
 
-    The portable (md5-bucket) path runs as an Arrow kernel (round-10,
-    guide §4.2): the previous ``transform(toks, md5-bucket)`` HOF is
-    INTERPRETED per element — Spark never codegens lambda bodies — and
-    the ~6-node expression walk per token dominated scoring (measured
-    1.67 s of the q182 entry's 2.6 s at sf0.1 for the explode alone;
-    ~0.35 s as this kernel, C md5 via hashlib). Map-only either way:
-    the kernel preserves the zero-shuffle shape, only (id, text) cross
-    the boundary, and tokenize/lower/bucket semantics are pinned by
-    the q182/q231 oracle at three SFs plus test_lm."""
-    from sstable_migrator_spark.functions import text as TX
-
-    if not portable:
-        toks = TX.tokens(F.lower(F.col(text_col)))
-        buckets = F.transform(toks, lambda t: _bucket(t, vocab, portable))
-        pairs = F.when(
-            F.size(buckets) >= 2,
-            F.zip_with(
-                F.slice(buckets, 1, F.greatest(F.size(buckets) - 1, F.lit(1))),
-                F.slice(buckets, 2, F.greatest(F.size(buckets) - 1, F.lit(1))),
-                lambda a, b: F.struct(a.alias("ctx"), b.alias("tok")),
-            ),
-        ).otherwise(F.array().cast("array<struct<ctx:long,tok:long>>"))
-        ex = F.explode_outer(pairs) if outer else F.explode(pairs)
-        return df.withColumn("_bg", ex).select(
-            *[c for c in df.columns if c != text_col],
-            F.col("_bg.ctx").alias("ctx"),
-            F.col("_bg.tok").alias("tok"),
-        )
-
+    Tokens are bucketed with the portable md5 hash (``TX.hash64``
+    seeded with ``_LM_SEED``, mod ``vocab``), computed in an Arrow
+    kernel (round-10, guide §4.2): the previous ``transform(toks,
+    md5-bucket)`` HOF is INTERPRETED per element — Spark never codegens
+    lambda bodies — and the ~6-node expression walk per token dominated
+    scoring (measured 1.67 s of the q182 entry's 2.6 s at sf0.1 for the
+    explode alone; ~0.35 s as this kernel, C md5 via hashlib). The
+    kernel is map-only: it preserves the zero-shuffle shape, only (id,
+    text) cross the boundary, and tokenize/lower/bucket semantics are
+    pinned by the q182/q231 oracle at three SFs plus test_lm."""
     import hashlib
     import re as _re
 
@@ -200,7 +172,6 @@ def train_bigram_lm(
     docs: DataFrame,
     text_col: str = "text",
     vocab: int = 256,
-    portable: bool = True,
 ) -> DataFrame:
     """Fit the smoothed bigram table: returns
     ``(ctx, tok, sq)`` rows for every OBSERVED bigram plus one
@@ -209,10 +180,8 @@ def train_bigram_lm(
     it. The uniform unseen-context backoff is the constant
     ``q16_surprisal_int(1, vocab)``; scoring applies it without a row.
     One data-sized aggregation (bigram counts, map-side combined); the
-    context totals re-aggregate the BOUNDED count table.
-    ``portable=False`` swaps the md5 token hash for xxhash64 — the
-    production choice at corpus scale; train and score MUST agree."""
-    bg = _bigrams(docs, text_col, vocab, portable).select("ctx", "tok")
+    context totals re-aggregate the BOUNDED count table."""
+    bg = _bigrams(docs, text_col, vocab).select("ctx", "tok")
     counts = bg.groupBy("ctx", "tok").agg(F.count(F.lit(1)).alias("c"))
     ctx_tot = counts.groupBy("ctx").agg(F.sum("c").alias("ctot"))
     seen = (
@@ -259,7 +228,6 @@ def perplexity_score(
     id_col: str = "doc_id",
     vocab: int = 256,
     threshold_q16: int | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """Score every document's total and average quantized surprisal
     under ``lm``. Output: (id, n_bigrams, surprise_q16, keep) — all
@@ -277,9 +245,7 @@ def perplexity_score(
     sq0 = q16_surprisal_int(1, vocab)
     if threshold_q16 is None:
         threshold_q16 = sq0
-    bg = _bigrams(
-        docs.select(id_col, text_col), text_col, vocab, portable, outer=True
-    )
+    bg = _bigrams(docs.select(id_col, text_col), text_col, vocab, outer=True)
     seen = lm.filter(F.col("tok") >= 0)
     backoff = lm.filter(F.col("tok") < 0).select(
         "ctx", F.col("sq").alias("sq_u")

@@ -65,9 +65,8 @@ __all__ = [
     "systematic_sample_per_group",
 ]
 
-def _shuffle_key(id_col: str, seed: int, portable: bool) -> F.Column:
-    h = TX.hash64 if portable else TX.hash64_fast
-    return h(F.col(id_col).cast("string"), seed=seed)
+def _shuffle_key(id_col: str, seed: int) -> F.Column:
+    return TX.hash64(F.col(id_col).cast("string"), seed=seed)
 
 
 def _check_picks_range(n: int, total: int) -> None:
@@ -88,15 +87,13 @@ def deterministic_shuffle(
     id_col: str = "doc_id",
     out_col: str = "position",
     parts: int | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """Append a 0-based global training ``position`` — the rank of the
     portable hash of ``(seed | id)``, ties broken by id, so the
     permutation is a pure function of (corpus, seed): any worker, any
     partitioning, any engine recomputes the identical order. Change
-    ``seed`` per epoch for fresh orders. ``portable=False`` swaps md5
-    for xxhash64 (the production choice; oracle entries pin md5)."""
-    df = docs.withColumn("_sk", _shuffle_key(id_col, seed, portable)).withColumn(
+    ``seed`` per epoch for fresh orders."""
+    df = docs.withColumn("_sk", _shuffle_key(id_col, seed)).withColumn(
         "_one", F.lit(1).cast("long")
     )
     ranked, _total = global_prefix_sum(
@@ -115,7 +112,6 @@ def curriculum_shuffle(
     out_col: str = "position",
     descending: bool = True,
     parts: int | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """Curriculum ordering: the training position sorts FIRST by a
     difficulty/quality key (descending by default — highest-quality or
@@ -128,7 +124,7 @@ def curriculum_shuffle(
     window. Use an INTEGER key (a quality logit, a perplexity bucket)
     for cross-engine exactness."""
     df = (
-        docs.withColumn("_sk", _shuffle_key(id_col, seed, portable))
+        docs.withColumn("_sk", _shuffle_key(id_col, seed))
         .withColumn(
             "_ck",
             (-F.col(key_col)).cast("long") if descending else F.col(key_col).cast("long"),
@@ -150,7 +146,6 @@ def pack_sequences(
     id_col: str = "doc_id",
     seed: int = 0,
     parts: int | None = None,
-    portable: bool = True,
     tokens_col: str | None = None,
     eod_token: str | None = None,
 ) -> DataFrame:
@@ -187,7 +182,7 @@ def pack_sequences(
         else TX.token_count(F.col(text_col))
     )
     df = (
-        docs.withColumn("_sk", _shuffle_key(id_col, seed, portable))
+        docs.withColumn("_sk", _shuffle_key(id_col, seed))
         .withColumn("n_tokens", n_tok.cast("long"))
         .filter(F.col("n_tokens") > 0)
     )
@@ -223,7 +218,6 @@ def pack_sequence_texts(
     id_col: str = "doc_id",
     seed: int = 0,
     parts: int | None = None,
-    portable: bool = True,
     tokens_col: str | None = None,
     eod_token: str | None = None,
     with_boundaries: bool = False,
@@ -265,7 +259,7 @@ def pack_sequence_texts(
         F.col(tokens_col) if tokens_col is not None else TX.tokens(F.col(text_col))
     )
     df = (
-        docs.withColumn("_sk", _shuffle_key(id_col, seed, portable))
+        docs.withColumn("_sk", _shuffle_key(id_col, seed))
         .withColumn("_tk", tk)
         .withColumn("n_tokens", F.size("_tk").cast("long"))
         .filter(F.col("n_tokens") > 0)
@@ -360,7 +354,6 @@ def systematic_sample(
     seed: int = 0,
     id_col: str = "doc_id",
     parts: int | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """Weighted SYSTEMATIC sampling — "give me exactly n draws from the
     corpus, probability proportional to weight, reproducibly": lay the
@@ -392,7 +385,7 @@ def systematic_sample(
         raise ValueError(f"n must be >= 1, got {n}")
     df = (
         docs.filter(F.col(weight_col) > 0)
-        .withColumn("_sk", _shuffle_key(id_col, seed, portable))
+        .withColumn("_sk", _shuffle_key(id_col, seed))
     )
     ranked, total = global_prefix_sum(
         df, ["_sk", id_col], weight_col, out_col="_incl", parts=parts
@@ -476,7 +469,6 @@ def systematic_sample_per_group(
     seed: int = 0,
     id_col: str = "doc_id",
     parts: int | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """MIXTURE construction with exact per-group draw counts: the
     weighted systematic draw run independently inside every group —
@@ -504,7 +496,7 @@ def systematic_sample_per_group(
     df = (
         docs.filter(F.col(weight_col) > 0)
         .filter(F.col(group_col).isin(list(n_per_group)))
-        .withColumn("_sk", _shuffle_key(id_col, seed, portable))
+        .withColumn("_sk", _shuffle_key(id_col, seed))
     )
     ranked, group_totals = grouped_prefix_sum(
         df, [group_col], ["_sk", id_col], weight_col, out_col="_incl", parts=parts
@@ -562,7 +554,6 @@ def pack_documents_greedy(
     tokens_col: str | None = None,
     overflow: str = "flag",
     parts: int | None = None,
-    portable: bool = True,
 ) -> DataFrame:
     """WHOLE-DOCUMENT greedy packing — the SFT/instruction-tuning
     layout, where a document must NEVER straddle a sequence boundary
@@ -607,7 +598,7 @@ def pack_documents_greedy(
     df = (
         docs.select(F.col(id_col), n_tok.alias("n_tokens"))
         .filter(F.col("n_tokens") >= 1)
-        .withColumn("_sk", _shuffle_key(id_col, seed, portable))
+        .withColumn("_sk", _shuffle_key(id_col, seed))
     )
     parts = parts or df.sparkSession.sparkContext.defaultParallelism
     staged = df.repartitionByRange(parts, "_sk", id_col).sortWithinPartitions(

@@ -6,125 +6,57 @@ quality classifier (a fastText/logistic model trained on
 known-good vs known-bad text, used to score the crawl and keep the
 high-probability tail). This module is that component on Spark ML:
 
-- featurize: tokenize -> feature-hash into a fixed-width sparse vector
-  (HashingTF — the hashing trick, no vocabulary state to ship; the
-  same reason fastText hashes n-grams);
-- train: LogisticRegression on a labeled frame (driver-coordinated
-  LBFGS over executor-aggregated gradients — MLlib's standard
-  distributed fit);
-- score: the fitted pipeline is a pure map-side transform (broadcast
-  coefficients, per-row dot product + sigmoid) — scoring a 100 TB
-  corpus shuffles NOTHING.
+- featurize: tokenize -> feature-hash each token into a fixed number
+  of buckets with the engine-portable md5 hash
+  (``functions.text.hash64``, the same trick the MinHash/CMS families
+  use) — the hashing trick, no vocabulary state to ship; the same
+  reason fastText hashes n-grams;
+- train (``train_quality_classifier_portable``): LogisticRegression on
+  the bag-of-buckets counts (driver-coordinated LBFGS over
+  executor-aggregated gradients — MLlib's standard distributed fit);
+- freeze (``quantize_weights``): round the fitted coefficients to
+  integers (w * scale — the same move real inference stacks make to
+  ship models);
+- score (``score_quality_frozen``): with frozen integer weights,
+  ``score = bias + sum over tokens of w[bucket(token)]`` is a pure
+  BIGINT map-side projection with no float accumulation — the sum is
+  order-free, so it hash-matches a DuckDB twin bit-for-bit, survives
+  any partitioning, and scoring a 100 TB corpus shuffles NOTHING. The
+  keep decision thresholds the integer score; the probability, when
+  wanted, is one deterministic double op per row (sigmoid(score /
+  scale)), not a float reduction.
 
-Training is float-iterative, so this is deliberately NOT an
+Training is float-iterative, so the fit itself is not an
 oracle-catalog query (the DuckDB twin cannot run LBFGS); the test
-suite pins behavior instead: exact separation on a margin-separated
-corpus, determinism of scoring under repartitioning, and the
-no-shuffle property of the scoring plan.
+suite pins it instead: exact separation on a margin-separated corpus,
+determinism of scoring under repartitioning, and the no-shuffle
+property of the scoring plan.
 """
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-if TYPE_CHECKING:  # pyspark.ml is imported lazily: this module rides
-    # the operators package root, and the ml machinery (~0.5 s import)
-    # should not tax every catalog/bench/driver start that never trains
-    from pyspark.ml import PipelineModel
-
 __all__ = [
-    "train_quality_classifier",
-    "score_quality",
+    "train_quality_classifier_portable",
+    "quantize_weights",
+    "score_quality_frozen",
     "ranked_auc",
     "calibration_report",
     "confusion_report",
 ]
 
-
-def train_quality_classifier(
-    labeled: DataFrame,
-    text_col: str = "text",
-    label_col: str = "label",
-    num_features: int = 1 << 12,
-    reg_param: float = 1e-4,
-    max_iter: int = 50,
-) -> "PipelineModel":
-    """Fit tokenizer -> feature hash -> logistic regression on a frame
-    of (text, label in {0.0, 1.0}). Feature width is a power of two
-    (hash-trick convention); regularization keeps the separable case
-    from driving coefficients unbounded."""
-    from pyspark.ml import Pipeline
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.feature import HashingTF, RegexTokenizer
-
-    tok = RegexTokenizer(
-        inputCol=text_col, outputCol="_qm_toks", pattern="\\s+"
-    )
-    tf = HashingTF(
-        inputCol="_qm_toks", outputCol="_qm_feat", numFeatures=num_features
-    )
-    lr = LogisticRegression(
-        featuresCol="_qm_feat",
-        labelCol=label_col,
-        regParam=reg_param,
-        maxIter=max_iter,
-    )
-    return Pipeline(stages=[tok, tf, lr]).fit(labeled)
-
-
-def score_quality(
-    model: "PipelineModel",
-    df: DataFrame,
-    out_col: str = "quality_p",
-) -> DataFrame:
-    """Map-side scoring: appends P(label=1) as ``out_col`` and drops
-    the intermediate feature columns. ``df`` must carry the same text
-    column name the model was trained with. No shuffle is introduced —
-    the plan stays a projection over the input."""
-    from pyspark.ml.functions import vector_to_array
-
-    scored = model.transform(df)
-    p1 = F.element_at(vector_to_array(F.col("probability")), 2)
-    return scored.withColumn(out_col, p1).drop(
-        "_qm_toks", "_qm_feat", "rawPrediction", "probability", "prediction"
-    )
-
-
-# ---------------------------------------------------------------------------
-# Portable-hash variant: train once, freeze integer weights, score anywhere
-# ---------------------------------------------------------------------------
-#
-# The MLlib pipeline above hashes tokens with HashingTF (JVM murmur3) —
-# fine for Spark-only scoring, but the hash is not reproducible in an
-# external engine, so the scoring path cannot be oracle-gated. This
-# variant featurizes with the engine-portable md5 hash
-# (functions.text.hash64, the same trick the MinHash/CMS families use),
-# trains the identical distributed LogisticRegression, then QUANTIZES
-# the fitted coefficients to integers (w * scale, rounded — the same
-# move real inference stacks make to ship models). Scoring with frozen
-# integer weights is then:
-#   score = bias + sum over tokens of w[bucket(token)]
-# a pure BIGINT map-side expression with no float accumulation — the
-# sum is order-free, so it hash-matches a DuckDB twin bit-for-bit and
-# survives any partitioning. The keep decision thresholds the integer
-# score; the probability, when wanted, is one deterministic double op
-# per row (sigmoid(score/scale)), not a float reduction.
-
 _QM_SEED = 7
 
 
-def portable_feature_bucket(col, num_features: int, portable: bool = True):
+def portable_feature_bucket(col, num_features: int):
     """Feature bucket of a token mod num_features: md5-based hash64
-    (seed 7, engine-portable, non-negative so Java/SQL signed % agree)
-    or xxhash64 with ``portable=False`` (the cheaper production hash;
-    training and scoring must agree on the choice)."""
+    (seed 7, engine-portable, non-negative so Java/SQL signed % agree).
+    Training and scoring share it."""
     from sstable_migrator_spark.functions import text as TX
 
-    h = TX.hash64 if portable else TX.hash64_fast
-    return h(col, seed=_QM_SEED) % num_features
+    return TX.hash64(col, seed=_QM_SEED) % num_features
 
 
 def train_quality_classifier_portable(
@@ -134,7 +66,6 @@ def train_quality_classifier_portable(
     num_features: int = 64,
     reg_param: float = 1e-3,
     max_iter: int = 100,
-    portable: bool = True,
 ) -> tuple[list[float], float]:
     """Fit LogisticRegression on portable-hash bag-of-buckets counts;
     returns (coefficients, intercept). The featurization is native
@@ -153,9 +84,7 @@ def train_quality_classifier_portable(
     # whole document per feature (num_features x the md5 work — lambda
     # bodies are excluded from CSE).
     counts = TX.bind_once(
-        F.transform(
-            toks, lambda t: portable_feature_bucket(t, num_features, portable)
-        ),
+        F.transform(toks, lambda t: portable_feature_bucket(t, num_features)),
         lambda buckets: F.transform(
             F.sequence(F.lit(0), F.lit(num_features - 1)),
             lambda b: F.size(F.filter(buckets, lambda x: x == b)).cast("double"),
@@ -189,36 +118,18 @@ def score_quality_frozen(
     score_col: str = "q_score",
     keep_col: str = "keep",
     threshold: int = 0,
-    portable: bool = True,
 ) -> DataFrame:
     """Map-side scoring with frozen integer weights: appends the BIGINT
     logit score (scaled by the quantization factor) and the keep flag
     (score > threshold). No shuffle, no float accumulation, no state —
     the 100 TB plan is a projection over the scan."""
-    from sstable_migrator_spark.functions import text as TX
-
     m = num_features or len(weights)
     if len(weights) != m:
         raise ValueError(f"{len(weights)} weights for {m} features")
-    if not portable:
-        warr = F.array(*[F.lit(int(w)).cast("long") for w in weights])
-        toks = TX.tokens(F.lower(F.col(text_col)))
-        score = F.lit(int(bias)).cast("long") + F.aggregate(
-            toks,
-            F.lit(0).cast("long"),
-            lambda acc, t: acc
-            + F.element_at(
-                warr, (portable_feature_bucket(t, m, portable) + 1).cast("int")
-            ),
-        )
-        return df.withColumn(score_col, score).withColumn(
-            keep_col, (F.col(score_col) > threshold).cast("int")
-        )
-
-    # Portable (md5-bucket) scoring as an Arrow kernel (round-10, guide
-    # §4.2): the aggregate() fold hashes every token through an
-    # INTERPRETED lambda — Spark never codegens HOF bodies — and that
-    # per-token expression walk was the dominant term of every entry
+    # Scoring runs as an Arrow kernel (round-10, guide §4.2): an
+    # aggregate() fold over portable_feature_bucket hashes every token
+    # through an INTERPRETED lambda — Spark never codegens HOF bodies —
+    # and that per-token expression walk was the dominant term of every entry
     # that scores with the frozen model (q181/q208/q211/q212). C md5
     # via hashlib, integer sums — exact by construction; still a
     # map-only projection (all input columns pass through untouched,

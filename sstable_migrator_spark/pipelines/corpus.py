@@ -547,7 +547,6 @@ def export_packed_sequences(
     seed: int = 0,
     rows_per_shard: int = 10000,
     shard_format: str = "parquet",
-    portable: bool = True,
     tokens_col: str | None = None,
 ) -> dict:
     """The TRAINER-FACING export: curated documents -> materialized
@@ -573,7 +572,7 @@ def export_packed_sequences(
     from sstable_migrator_spark.operators.packing import pack_sequence_texts
 
     seqs = pack_sequence_texts(
-        docs, seq_tokens, seed=seed, portable=portable, tokens_col=tokens_col
+        docs, seq_tokens, seed=seed, tokens_col=tokens_col
     ).localCheckpoint()
     agg = seqs.agg(
         F.count(F.lit(1)).alias("n"), F.sum("n_tokens").alias("t")
@@ -626,7 +625,6 @@ def export_sft_sequences(
     id_col: str = "doc_id",
     text_col: str = "text",
     parts: int | None = None,
-    portable: bool = True,
 ) -> dict:
     """The SFT/instruction-tuning sibling of ``export_packed_sequences``:
     sequences assembled by WHOLE-DOCUMENT greedy packing
@@ -670,7 +668,6 @@ def export_sft_sequences(
         text_col=text_col,
         overflow=overflow,
         parts=parts,
-        portable=portable,
     ).localCheckpoint()
     oversize = layout.filter(F.col("seq_id") < 0).count()
     body = F.col("_t")
@@ -763,7 +760,6 @@ def export_training_epochs(
     base_seed: int = 0,
     rows_per_shard: int = 10000,
     shard_format: str = "parquet",
-    portable: bool = True,
     tokens_col: str | None = None,
 ) -> dict:
     """The OPERATIONAL contract a trainer actually consumes: N epochs
@@ -810,7 +806,6 @@ def export_training_epochs(
             seed=base_seed + e,
             rows_per_shard=rows_per_shard,
             shard_format=shard_format,
-            portable=portable,
             tokens_col=tokens_col,
         )
         shards = _digest_shard_files(docs.sparkSession, epoch_dir)
@@ -823,7 +818,6 @@ def export_training_epochs(
         "base_seed": base_seed,
         "seq_tokens": seq_tokens,
         "shard_format": shard_format,
-        "portable": portable,
         "n_epochs": n_epochs,
         "epochs": epochs,
     }

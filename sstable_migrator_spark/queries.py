@@ -714,8 +714,8 @@ _FLAGSHIP_CACHE: dict = {}
 
 def flagship_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole §3.1 lifecycle as one plan: synthesized
-    massdns triples -> validate/clean -> domain_parts -> route -> apex
-    popularity top-100 (clickhouse_queries.md:35-43).
+    massdns triples -> validate/clean -> with_domain_parts -> route ->
+    apex popularity top-100 (clickhouse_queries.md:35-43).
 
     The built DataFrame (an immutable logical plan) is memoized per
     (session, sf_dir): constructing this plan costs ~2s of Python-side
@@ -8845,8 +8845,8 @@ def q_quality_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     sibling of heuristic q48): score every document with a FROZEN
     integer-quantized logistic model over portable-hash bag-of-words
     features (quality_model.score_quality_frozen; trained offline via
-    train_quality_classifier_portable — float-iterative LBFGS happens
-    once, never per query). The score is
+    train_quality_classifier_portable and frozen by quantize_weights —
+    float-iterative LBFGS happens once, never per query). The score is
     ``bias + sum over tokens of w[md5_bucket(token)]`` — a BIGINT
     map-side expression with no float accumulation, so it is order-free
     and hash-exact cross-engine, and the 100 TB plan is a projection
@@ -9514,7 +9514,7 @@ ORACLES.update({"q187_corpus_report": SQL_CORPUS_REPORT})
 
 # ---------------------------------------------------------------------------
 # Batch — incremental corpus dedup (new snapshot vs existing corpus:
-# dedup.minhash_lsh_pairs_between + dedup.incremental_dedup)
+# dedup.incremental_dedup over build_dedup_state + lsh_pairs_between_banded)
 # ---------------------------------------------------------------------------
 
 

@@ -20,30 +20,6 @@ DNS_RECORDS = T.StructType(
     ]
 )
 
-# rdns pair: ip,domain (clean_rdns.go:43-71)
-RDNS_PAIRS = T.StructType(
-    [T.StructField("ip", T.StringType()), T.StructField("domain", T.StringType())]
-)
-
-# legacy rdns quad: f0,apexdomain,domain,f3 (clean_rdns.go:9-41)
-RDNS_V1 = T.StructType(
-    [
-        T.StructField("f0", T.StringType()),
-        T.StructField("apexdomain", T.StringType()),
-        T.StructField("domain", T.StringType()),
-        T.StructField("f3", T.StringType()),
-    ]
-)
-
-# cname triple: target,apexdomain,domain (clean_cname.go:9-31)
-CNAME_RECORDS = T.StructType(
-    [
-        T.StructField("target", T.StringType()),
-        T.StructField("apexdomain", T.StringType()),
-        T.StructField("domain", T.StringType()),
-    ]
-)
-
 # --- core tables (§1.1), Cassandra -> Spark --------------------------------
 
 _TS = [
@@ -94,8 +70,6 @@ CNAMES = T.StructType(
         *_TS,
     ]
 )
-CNAMES_PARTITION_KEY = ["target"]
-CNAMES_CLUSTERING = ["apexDomain", "domain"]
 
 # --- dimensions (§1.2) -----------------------------------------------------
 
@@ -114,22 +88,5 @@ GEOIP_ASN = T.StructType(
         T.StructField("net_end", T.LongType()),
         T.StructField("asn", T.IntegerType()),
         T.StructField("as_name", T.StringType()),
-    ]
-)
-
-# ClickHouse-side analytics copy (clickhouse_queries.md:2-11)
-CH_DOMAINS = T.StructType(
-    [
-        T.StructField("domain", T.StringType()),
-        T.StructField("apexdomain", T.StringType()),
-        T.StructField("tld", T.StringType()),
-    ]
-)
-
-# parquet export (utils/parquet_converter/main.go:15-18)
-PARQUET_EXPORT = T.StructType(
-    [
-        T.StructField("ip_address", T.StringType()),
-        T.StructField("domain", T.StringType()),
     ]
 )

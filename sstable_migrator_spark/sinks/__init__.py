@@ -81,62 +81,6 @@ def parquet_export(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     df.write.mode(mode).option("compression", "snappy").parquet(path)
 
 
-def append_sink(df: DataFrame, path: str) -> None:
-    """K5 — accumulate shard outputs (the ``cat b >> domains`` analog)."""
-    df.write.mode("append").parquet(path)
-
-
-def sorted_columnar_write(df: DataFrame, path: str, order_col: str, mode: str = "overwrite") -> None:
-    """K6 — MergeTree ``ORDER BY domain`` analog: range-partition by the
-    order key then sort within partitions -> globally ordered layout
-    with min/max zone-map pruning on the order column."""
-    (
-        df.repartitionByRange(F.col(order_col))
-        .sortWithinPartitions(order_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def observe_counts(df: DataFrame, name: str = "metrics"):
-    """A3/K7 — row counters via ``observe`` (no extra pass). Returns
-    ``(df, observation)``: the Observation handle must escape or the
-    metrics are unreachable except through a QueryExecutionListener —
-    read ``obs.get["rows"]`` after the first action over the returned
-    DataFrame."""
-    from pyspark.sql import Observation  # local import: optional API
-
-    obs = Observation(name)
-    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
-
-
-def bucketed_write(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed table write — the shuffle-free-join layout.
-
-    Two tables bucketed by the same columns into the same bucket count
-    join WITHOUT an Exchange on either side: the bucket id IS the
-    partitioning, established once at write time and reused by every
-    downstream join/aggregation on those keys. This is the batch analog
-    of co-located storage: at 100 TB, bucketing the fact tables on their
-    join key turns the nightly join from a 2-sided shuffle of the whole
-    data into a local zip of bucket pairs.
-
-    Requires a saveAsTable catalog target (bucket metadata lives in the
-    catalog, not the files).
-    """
-    w = df.write.format("parquet").mode(mode).bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.saveAsTable(table)
-
-
 def compact_small_files(
     spark,
     path: str,
@@ -183,32 +127,6 @@ def compact_small_files(
     os.rename(tmp, path)
     shutil.rmtree(old)
     return n_files
-
-
-def write_jsonl_shards(df: DataFrame, path: str, n_shards: int, mode: str = "overwrite") -> None:
-    """Training-export sink: gzip'd JSON-lines in ``n_shards`` files.
-    Round-robin repartition (keyless — no skew) sizes the shards
-    evenly; at scale pick n_shards from bytes/128 MB like
-    ``compact_small_files`` does rather than a constant."""
-    df.repartition(n_shards).write.mode(mode).option("compression", "gzip").json(path)
-
-
-def orc_export(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """ORC sink (K3's columnar-export analog in the other major
-    columnar format): snappy-compressed, dictionary-encoded. Kept
-    option-for-option parallel to ``parquet_export`` so format choice
-    is a one-word swap."""
-    df.write.option("compression", "snappy").mode(mode).orc(path)
-
-
-def partitioned_export(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
-) -> None:
-    """Hive-style partitioned layout (T3's dated bronze generalized):
-    directory-per-value so reads filtered on the partition column scan
-    ONLY matching directories (partition pruning — the file-layout twin
-    of Cassandra's partition-key routing, README.md:40)."""
-    df.write.partitionBy(*partition_cols).mode(mode).parquet(path)
 
 
 def dynamic_partition_upsert(

@@ -17,8 +17,8 @@ both is the metrics themselves — delivery is I/O at the edge. Here:
   cluster (network delivery is deliberately out of the engine, same
   scoping as the reference keeping its bot token in the shell).
 
-Both take plain dict metrics, which is what ``observe_counts`` /
-``Observation.get`` yield — the counts come from the one pipeline
+Both take plain dict metrics, which is what ``Observation.get`` yields
+after a ``df.observe(...)`` — the counts come from the one pipeline
 pass, never from extra count() jobs.
 """
 

@@ -1,35 +1,19 @@
-"""Sources (SURVEY §2.1, S1-S9).
+"""Sources (SURVEY §2.1, S1-S9): driver-side staging of remote inputs.
 
-Every reader is declarative (``spark.read`` with an explicit schema) so
-Catalyst gets pushdown/pruning for free; directory globbing replaces the
-reference's per-file loops (App.java:63-69: listFiles + BufferedReader),
-and a single job over all CommonCrawl shards replaces the 300-iteration
-shell loop (utils/cc_download_convert/start.sh:5).
+Reads themselves are plain ``spark.read`` calls with an explicit schema
+at each caller, so Catalyst gets pushdown/pruning for free; directory
+globbing replaces the reference's per-file loops (App.java:63-69:
+listFiles + BufferedReader), and a single job over all CommonCrawl
+shards replaces the 300-iteration shell loop
+(utils/cc_download_convert/start.sh:5).
 
 Compressed inputs: Spark reads ``.gz`` text/CSV natively, which covers
 the reference's wget+gzip staging (daily_subdomain_upload.sh:15-24);
 7z archives must be staged to gzip/zstd first (S5) — that is a
-driver-side fetch concern, exposed here as ``stage_url`` hooks.
+driver-side fetch concern, exposed here as ``stage_url``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-
-def parse_csv_lines(lines: DataFrame, n_fields: int, names: list[str]) -> DataFrame:
-    """Schema-on-read split of a ``value`` line column into positional
-    fields, keeping rows with at least ``n_fields`` fields (stricter
-    P2 arity/shape checks live in operators.clean; this is the
-    permissive split + minimum-arity gate)."""
-    parts = F.split(F.col("value"), ",")
-    cols = [F.get(parts, i).alias(name) for i, name in enumerate(names)]
-    return (
-        lines.select(F.col("value"), F.size(parts).alias("_arity"), *cols)
-        .filter(F.col("_arity") >= n_fields)
-    )
 
 
 def stage_url(
@@ -100,27 +84,3 @@ def _extract_if_7z(dest_path: str) -> str:
         with open(os.path.join(dest_path, safe), "wb") as out:
             out.write(data)
     return dest_path
-
-
-def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str | None = None) -> DataFrame:
-    """JSON-lines reader — the interchange format LLM-data pipelines
-    emit/consume. With an explicit schema the reader skips the
-    inference pass (two scans -> one; mandatory at 100 TB) and
-    malformed lines land in ``_corrupt_record`` instead of failing the
-    job (PERMISSIVE is the analog of the reference cleaners'
-    reject-stream, utils.go:95-109)."""
-    r = spark.read
-    if schema is not None:
-        r = r.schema(schema)
-    return r.option("mode", "PERMISSIVE").option(
-        "columnNameOfCorruptRecord", "_corrupt_record"
-    ).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """ORC reader — same columnar contract as parquet (predicate
-    pushdown, column pruning, vectorized scan) for pipelines whose
-    upstream emits ORC (Hive-era warehouses). Schema comes from the
-    file footer; filters land in the scan's PushedFilters the same way
-    tests/test_plans.py proves for parquet."""
-    return spark.read.orc(path)

@@ -41,7 +41,6 @@ _K_FOLDER = 0x0B
 _K_UNPACK_SIZES = 0x0C
 _K_NUM_UNPACK_STREAM = 0x0D
 _K_EMPTY_STREAM = 0x0E
-_K_EMPTY_FILE = 0x0F
 _K_NAME = 0x11
 _K_ENCODED_HEADER = 0x17
 

@@ -37,7 +37,7 @@ def test_dynamic_partition_upsert_touches_only_delta_partitions(spark, tmp_path)
 
     from pyspark.sql import functions as F
 
-    from sstable_migrator_spark.sinks import dynamic_partition_upsert, partitioned_export
+    from sstable_migrator_spark.sinks import dynamic_partition_upsert
 
     base = spark.range(100).select(
         F.col("id"),
@@ -45,7 +45,7 @@ def test_dynamic_partition_upsert_touches_only_delta_partitions(spark, tmp_path)
         F.lit("orig").alias("v"),
     )
     out = str(tmp_path / "tbl")
-    partitioned_export(base, out, ["day"])
+    base.write.partitionBy("day").mode("overwrite").parquet(out)
 
     def mtimes(day):
         d = f"{out}/day={day}"

@@ -532,34 +532,16 @@ def test_winnow_pairs_df_cap_drops_boilerplate(spark):
     assert winnow_pairs(docs, k=4, w=5, max_df=10).count() == 15  # C(6,2)
 
 
-def test_winnow_fast_hash_same_pairs(spark):
-    """The xxhash64 production path selects different fingerprint
-    VALUES but the span guarantee is hash-independent: the overlapping
-    pair must still surface and the unrelated doc must not."""
-    from sstable_migrator_spark.operators.dedup import winnow_pairs
-
-    shared = "the five boxing wizards jump quickly over the lazy brown dog"
-    docs = spark.createDataFrame(
-        [
-            (1, "intro words here " + shared + " trailing content one"),
-            (2, shared + " completely different ending text follows now"),
-            (3, "nothing in common with anybody else at all in this document body"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {(r["id_a"], r["id_b"])
-           for r in winnow_pairs(docs, k=4, w=5, portable=False).collect()}
-    assert (1, 2) in got
-    assert all(3 not in p for p in got)
-
-
 def test_lsh_self_join_and_cross_paths_agree(spark):
     """The self-join (both its band path and its hot-bucket star path)
     and the cross-corpus join estimate a pair's Jaccard the same way:
     every self-join pair of D appears in D x D with a bit-equal
     est_jaccard. NULL texts (all-NULL signatures) collide in one bucket
     and score 0.0 on both paths — a NULL position is a non-match."""
-    from sstable_migrator_spark.operators.dedup import minhash_lsh_pairs_between
+    from sstable_migrator_spark.operators.dedup import (
+        build_dedup_state,
+        lsh_pairs_between_banded,
+    )
 
     null_docs = spark.createDataFrame(
         [
@@ -571,10 +553,11 @@ def test_lsh_self_join_and_cross_paths_agree(spark):
         "doc_id long, text string",
     )
     for docs, thr in ((_docs(spark), 0.3), (null_docs, 0.0)):
+        state = build_dedup_state(docs).localCheckpoint()
         cross = {
             (r["new_id"], r["old_id"]): r["est_jaccard"]
-            for r in minhash_lsh_pairs_between(
-                docs, docs, jaccard_threshold=thr
+            for r in lsh_pairs_between_banded(
+                state, state, jaccard_threshold=thr
             ).collect()
         }
         for max_bucket in (None, 2):
@@ -595,8 +578,9 @@ def test_incremental_dedup_outcomes(spark):
     fingerprint set, near-dup blocked by cross-corpus LSH, novel doc
     admitted; and the pairs are new x old ONLY."""
     from sstable_migrator_spark.operators.dedup import (
+        build_dedup_state,
         incremental_dedup,
-        minhash_lsh_pairs_between,
+        lsh_pairs_between_banded,
     )
 
     base = " ".join(
@@ -625,18 +609,15 @@ def test_incremental_dedup_outcomes(spark):
     assert got[103] ["exact_dup"] == 0 and got[103]["n_near_dups"] == 0
     assert got[103]["admitted"] == 1
     # pair direction: only new x old, no new-new / old-old pairs
-    pairs = minhash_lsh_pairs_between(new, old).collect()
+    new_state = build_dedup_state(new)
+    pairs = lsh_pairs_between_banded(new_state, build_dedup_state(old)).collect()
     assert all(r["new_id"] >= 100 and r["old_id"] < 100 for r in pairs)
 
-    # THE PERSISTED-STATE CONTRACT: judging against a build_dedup_state
-    # table (what the streaming gate persists — the corpus text never
-    # read) gives BIT-IDENTICAL decisions to the recompute-from-text
-    # path, for both the decision operator and the pair miner.
-    from sstable_migrator_spark.operators.dedup import (
-        banded_minhash,
-        build_dedup_state,
-    )
-
+    # THE PERSISTED-STATE CONTRACT: judging against a materialized
+    # build_dedup_state table (what a daily job persists — the corpus
+    # text never read) gives BIT-IDENTICAL decisions to the
+    # recompute-from-text path, for both the decision operator and the
+    # pair miner.
     state = build_dedup_state(old).localCheckpoint()
     via_state = {
         r["doc_id"]: r
@@ -645,9 +626,7 @@ def test_incremental_dedup_outcomes(spark):
     assert {k: tuple(v) for k, v in got.items()} == {
         k: tuple(v) for k, v in via_state.items()
     }
-    pairs_state = minhash_lsh_pairs_between(
-        new, old_banded=banded_minhash(old)
-    ).collect()
+    pairs_state = lsh_pairs_between_banded(new_state, state).collect()
     assert sorted(map(tuple, pairs)) == sorted(map(tuple, pairs_state))
 
 
@@ -714,7 +693,7 @@ def test_mismatched_state_signature_length_fails_loudly(spark):
     import pytest as _pytest
 
     from sstable_migrator_spark.operators.dedup import (
-        banded_minhash,
+        build_dedup_state,
         lsh_pairs_between_banded,
     )
 
@@ -722,7 +701,7 @@ def test_mismatched_state_signature_length_fails_loudly(spark):
         [(1, "alpha beta gamma delta epsilon zeta eta theta")],
         "doc_id long, text string",
     )
-    new_ok = banded_minhash(docs, num_hashes=16, bands=4)
+    new_ok = build_dedup_state(docs, num_hashes=16, bands=4)
     # the realistic corruption: band/bucket collide (same doc) but the
     # stored signature has the WRONG length (built with num_hashes=8)
     old_bad = new_ok.select(

@@ -18,13 +18,13 @@ from sstable_migrator_spark.functions.domains import (
     apex_domain,
     apex_domain_naive,
     attempt_cleanup,
-    domain_parts,
     is_valid_domain,
     py_domain_parts,
     py_is_valid_domain,
     strip_dot,
     rejoin_subdomain,
     surt_line_to_domain,
+    with_domain_parts,
 )
 
 TLDS = ["com", "net", "org", "de", "uk", "in", "io", "ai", "co", "gov", "xyz", "ru"]
@@ -99,7 +99,7 @@ def test_cleanup_goldens(spark):
     assert got == list(cases.values())
 
 
-# --- domain_parts slot layout (App.java:788-824) --------------------------
+# --- with_domain_parts slot layout (App.java:788-824) ---------------------
 
 PARTS_GOLDENS = {
     # no l2tld: p2='' and p3 gets the label (the documented swap quirk)
@@ -122,7 +122,7 @@ PARTS_GOLDENS = {
 def test_domain_parts_goldens(spark):
     doms = list(PARTS_GOLDENS)
     df = spark.createDataFrame([(d,) for d in doms], "v string")
-    rows = df.select(domain_parts(F.col("v"), TLDS).alias("dp")).collect()
+    rows = with_domain_parts(df, "v", "dp", TLDS).select("dp").collect()
     for d, row in zip(doms, rows):
         dp = row["dp"]
         exp = PARTS_GOLDENS[d]
@@ -133,8 +133,9 @@ def test_domain_parts_goldens(spark):
 
 
 def test_domain_parts_failure(spark):
-    rows = _run_expr(spark, ["nodots"], lambda c: domain_parts(c, TLDS))
-    assert rows[0]["success"] is False
+    df = spark.createDataFrame([("nodots",)], "v string")
+    rows = with_domain_parts(df, "v", "dp", TLDS).select("dp").collect()
+    assert rows[0]["dp"]["success"] is False
 
 
 def test_apex_variants(spark):
@@ -188,10 +189,11 @@ def test_property_parity(spark):
         "*.ok.com", '\\"ok.com', "x.", ".", "..", "co.uk", "uk",
     ]
     df = spark.createDataFrame([(d,) for d in domains], "v string")
-    rows = df.select(
-        F.col("v"),
-        is_valid_domain(F.col("v")).alias("valid"),
-        domain_parts(F.col("v"), TLDS).alias("dp"),
+    rows = with_domain_parts(
+        df.select(F.col("v"), is_valid_domain(F.col("v")).alias("valid")),
+        "v",
+        "dp",
+        TLDS,
     ).collect()
     tldset = set(TLDS)
     for r in rows:

@@ -15,10 +15,10 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from sstable_migrator_spark.functions.domains import (
-    domain_parts,
     is_valid_domain,
     py_domain_parts,
     py_is_valid_domain,
+    with_domain_parts,
 )
 
 TLDS = ["com", "org", "net", "co", "uk", "de", "io"]
@@ -52,10 +52,11 @@ _domain = st.one_of(
 @given(domains=st.lists(_domain, min_size=1, max_size=40))
 def test_native_equals_python_twins(spark, domains):
     df = spark.createDataFrame([(d,) for d in domains], "v string")
-    rows = df.select(
+    rows = with_domain_parts(
+        df.select("v", is_valid_domain(F.col("v")).alias("valid")),
         "v",
-        is_valid_domain(F.col("v")).alias("valid"),
-        domain_parts(F.col("v"), TLDS).alias("dp"),
+        "dp",
+        TLDS,
     ).collect()
     tldset = set(TLDS)
     for r in rows:

@@ -135,18 +135,3 @@ def test_exact_intdiv_is_exact_past_double_mantissa(spark):
     for a, b in cases:
         assert got[(a, b)] == a // b, (a, b, got[(a, b)], a // b)
 
-
-def test_fast_hash_variant_same_semantics(spark):
-    """portable=False (xxhash64) changes bucket assignments but not the
-    semantics: in-distribution docs keep, pure-backoff gibberish lands
-    exactly on the uniform threshold and drops, evidence-free docs
-    keep."""
-    docs = _corpus(spark)
-    lm = train_bigram_lm(docs.filter("doc_id < 100"), portable=False)
-    got = {r["doc_id"]: r for r in
-           perplexity_score(docs, lm, portable=False).collect()}
-    assert got[100]["keep"] == 1
-    assert got[101]["keep"] == 0
-    assert got[101]["surprise_q16"] == 128 * got[101]["n_bigrams"]
-    for d in (102, 103):
-        assert got[d]["keep"] == 1 and got[d]["n_bigrams"] == 0

@@ -37,15 +37,6 @@ def test_shuffle_is_a_permutation_and_deterministic(spark):
     assert a != c and sorted(c.values()) == list(range(40))
 
 
-def test_shuffle_fast_hash_variant(spark):
-    docs = _docs(spark)
-    got = {
-        r["doc_id"]: r["position"]
-        for r in deterministic_shuffle(docs, portable=False).collect()
-    }
-    assert sorted(got.values()) == list(range(40))
-
-
 def test_packing_invariants(spark):
     docs = _docs(spark)
     S = 16

@@ -1,14 +1,8 @@
-"""Learned quality classifier: exact separation on a margin-separated
-corpus, repartition-stable scoring, shuffle-free scoring plan."""
+"""Learned quality classifier (portable-hash training, frozen integer
+scoring): exact separation on a margin-separated corpus,
+repartition-stable scoring, shuffle-free scoring plan."""
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
-
-from sstable_migrator_spark.operators.quality_model import (
-    score_quality,
-    train_quality_classifier,
-)
 
 GOOD = [
     "the quick brown fox jumps over the lazy dog near the river bank",
@@ -41,50 +35,6 @@ def _labeled(spark, reps=6):
         rows += [(f"{t} v{r}", 1.0) for t in GOOD]
         rows += [(f"{t} v{r}", 0.0) for t in BAD]
     return spark.createDataFrame(rows, "text string, label double")
-
-
-def test_separates_good_from_bad(spark):
-    spark = _ml_session(spark)
-    model = train_quality_classifier(_labeled(spark))
-    holdout = spark.createDataFrame(
-        [(t + " unseen", 1.0) for t in GOOD] + [(t + " unseen", 0.0) for t in BAD],
-        "text string, label double",
-    )
-    got = score_quality(model, holdout).collect()
-    for r in got:
-        assert (r["quality_p"] > 0.5) == (r["label"] == 1.0), r["text"][:40]
-    # columns: intermediates dropped, score appended
-    assert set(got[0].asDict()) == {"text", "label", "quality_p"}
-
-
-def test_scoring_is_partitioning_stable(spark):
-    spark = _ml_session(spark)
-    model = train_quality_classifier(_labeled(spark))
-    docs = spark.createDataFrame(
-        [(i, GOOD[i % 5] + f" d{i}") for i in range(40)], "doc_id long, text string"
-    )
-    a = {r["doc_id"]: r["quality_p"] for r in score_quality(model, docs).collect()}
-    b = {
-        r["doc_id"]: r["quality_p"]
-        for r in score_quality(model, docs.repartition(7)).collect()
-    }
-    assert a == b  # per-row dot product: bit-identical under repartition
-
-
-def test_scoring_plan_has_no_exchange(spark):
-    spark = _ml_session(spark)
-    model = train_quality_classifier(_labeled(spark))
-    docs = spark.range(100).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("plain words here number "), F.col("id")).alias("text"),
-    )
-    plan = (
-        score_quality(model, docs)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
 
 
 def test_frozen_portable_path_roundtrip(spark):
@@ -140,27 +90,6 @@ def test_frozen_catalog_weights_separate(spark):
     got = {r["label"]: r["q_score"] for r in
            score_quality_frozen(df, _QM_WEIGHTS, _QM_BIAS).collect()}
     assert got[1] > 0 > got[0], got
-
-
-def test_fast_hash_training_scoring_pair(spark):
-    """portable=False trains and scores on xxhash64 buckets — the
-    production pair; separation must hold end to end."""
-    from sstable_migrator_spark.operators.quality_model import (
-        quantize_weights,
-        score_quality_frozen,
-        train_quality_classifier_portable,
-    )
-
-    spark = _ml_session(spark)
-    labeled = _labeled(spark)
-    w, b = train_quality_classifier_portable(
-        labeled, num_features=64, portable=False
-    )
-    wi, bi = quantize_weights(w, b)
-    rows = score_quality_frozen(labeled, wi, bi, portable=False).select(
-        "label", "q_score"
-    ).collect()
-    assert all((r["q_score"] > 0) == (r["label"] == 1.0) for r in rows)
 
 
 # --- evaluation family: exact AUC + calibration report ----------------------

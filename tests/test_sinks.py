@@ -1,17 +1,10 @@
-"""Sink contracts (SURVEY K3/K5/K6): parquet export options, append
-accumulation, and the MergeTree ORDER BY analog's globally-sorted
-layout."""
+"""Sink contracts (SURVEY K3): parquet export options."""
 
 from __future__ import annotations
 
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
-from sstable_migrator_spark.sinks import (
-    append_sink,
-    parquet_export,
-    sorted_columnar_write,
-)
+from sstable_migrator_spark.sinks import parquet_export
 
 
 def test_parquet_export_snappy_and_row_groups(spark, sf_dir, tmp_path):
@@ -25,51 +18,3 @@ def test_parquet_export_snappy_and_row_groups(spark, sf_dir, tmp_path):
     assert meta.row_group(0).column(0).compression.lower() == "snappy"
     # 128 MB row-group target set session-wide (parquet_converter/main.go:35)
     assert spark.conf.get("spark.hadoop.parquet.block.size") == str(128 * 1024 * 1024)
-
-
-def test_append_sink_accumulates(spark, tmp_path):
-    out = str(tmp_path / "acc")
-    shard = spark.range(10).select(F.col("id"))
-    parquet_export(shard, out)
-    append_sink(spark.range(10, 25).select(F.col("id")), out)
-    got = spark.read.parquet(out)
-    assert got.count() == 25
-    assert got.agg(F.countDistinct("id")).collect()[0][0] == 25
-
-
-def test_sorted_columnar_write_is_globally_ordered(spark, sf_dir, tmp_path):
-    """Files must tile the key space: within-file sorted (zone maps
-    monotone) AND file ranges disjoint (range partitioning)."""
-    out = str(tmp_path / "sorted")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "source")
-    sorted_columnar_write(docs, out, "doc_id")
-    import glob
-
-    ranges = []
-    for f in glob.glob(f"{out}/*.parquet"):
-        t = pq.read_table(f, columns=["doc_id"])["doc_id"].to_pylist()
-        if not t:
-            continue
-        assert t == sorted(t), f"file {f} not internally sorted"
-        ranges.append((t[0], t[-1]))
-    ranges.sort()
-    for (_, hi), (lo, _) in zip(ranges, ranges[1:]):
-        assert hi <= lo, "file key ranges overlap — not range-partitioned"
-
-
-def test_observe_counts_returns_handle(spark, tmp_path):
-    from sstable_migrator_spark.sinks import observe_counts
-
-    df, obs = observe_counts(spark.range(37), name="m37")
-    df.write.format("noop").mode("overwrite").save()
-    assert int(obs.get["rows"]) == 37
-
-
-def test_parse_csv_lines_min_arity(spark):
-    from sstable_migrator_spark.sources.readers import parse_csv_lines
-
-    lines = spark.createDataFrame(
-        [("a,b,c",), ("short",), ("x,y",)], "value string"
-    )
-    got = parse_csv_lines(lines, 2, ["f1", "f2"]).collect()
-    assert sorted(r["f1"] for r in got) == ["a", "x"]  # 1-field row dropped

@@ -630,6 +630,32 @@ def test_truncated_file_clean_error(tmp_path):
         read_sstable(str(tmp_path))
 
 
+@pytest.mark.parametrize("cflags", [0x0D, 0x0A])
+def test_unsupported_cell_flags_fail_loudly(tmp_path, cflags):
+    """A tombstone cell (IS_DELETED | HAS_EMPTY_VALUE, 0x0D) or an
+    expiring cell without USE_ROW_TTL (IS_EXPIRING, 0x0A) is followed by
+    deletion-time/TTL vints the reader does not consume: both the scan
+    and the point lookup must refuse it by name, never read on out of
+    step (a silent "" or value, or a misleading corruption error)."""
+    from sstable_migrator_spark.sinks.sstable_format import SSTableReader
+
+    w = SSTableWriter(str(tmp_path), _tiny_table())
+    w.add_row({"k": "key1", "v": "ab"})
+    w.close()
+    path = tmp_path / "nb-1-big-Data.db"
+    blob = bytearray(path.read_bytes())
+    # u16 key + key(4) + DeletionTime(12) + row flags + size + prev + ts
+    assert blob[22] == 0x08  # cell: USE_ROW_TIMESTAMP (golden layout)
+    blob[22] = cflags
+    path.write_bytes(bytes(blob))
+    r = SSTableReader(str(tmp_path))
+    msg = f"cell flags 0x{cflags:02x}"
+    with pytest.raises(NotImplementedError, match=msg):
+        list(r.partitions())
+    with pytest.raises(NotImplementedError, match=msg):
+        r.get(["key1"])
+
+
 def test_signed_clustering_order(tmp_path):
     """Cassandra clustering comparators are SIGNED for numeric types:
     negative int/bigint/timestamp and negative doubles must sort before
